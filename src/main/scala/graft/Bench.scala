@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: every query executed end-to-end (noop sink — a plain
   * count() would let Catalyst prune the projections and undercount the real
   * work). Prints ONE JSON line.
@@ -35,23 +33,8 @@ object Bench {
   }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warm the JVM/codegen once so per-query numbers measure the plan, not JIT
-    SparkEntry.queries.headOption.foreach { case (_, fn) =>
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    }
+    val spark = GraftSession()
     // optional iteration filter: regex over query names (full-run default)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.r)
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -60,6 +43,10 @@ object Bench {
     // the same masquerade the every-rep-failure handling below exists for
     require(queries.nonEmpty,
       s"SPARK_GRAFT_BENCH_ONLY=${sys.env.getOrElse("SPARK_GRAFT_BENCH_ONLY", "<unset>")} matches no query")
+    // warm the JVM/codegen once, on a query the battery will time, so
+    // per-query numbers measure the plan, not JIT
+    try queries.head._2(spark, sfDir).write.format("noop").mode("overwrite").save()
+    catch { case _: Throwable => () }
     // reps run ROUND-ROBIN (rep 1 of every query, then rep 2, ...), not
     // back-to-back per query: a transient VM stall (GC storm, noisy
     // neighbor) then inflates one rep of many queries — which the median
@@ -164,7 +151,11 @@ object Bench {
       "\"" + k + "\":" + jstr(msg) }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
-    val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"errors":$errs,"flaky":$flaky,"sf":"$sfDir"}"""
+    // what the artifacts measured: core count, reps and the code's commit
+    val gitSha = try scala.sys.process.Process("git rev-parse HEAD").!!.trim
+      catch { case _: Throwable => "unknown" }
+    val run = s""""cpus":${GraftSession.cpus},"reps":$reps,"git_sha":${jstr(gitSha)}"""
+    val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec",$run,"queries":$qs,"errors":$errs,"flaky":$flaky,"sf":"$sfDir"}"""
     // ALSO persist the whole line: the driver's log capture keeps only a
     // short tail, so the judge could read a fraction of the per-query
     // medians — the repo copy survives whole (driver commits the workdir).
@@ -188,7 +179,7 @@ object Bench {
       .map { case (k, v, _, _) => f""""$k":$v%.2f""" }.mkString("{", ",", "}")
     val nFlaky = results.count(_._4.isDefined)
     val nErr = results.count(_._3.isDefined)
-    val summary = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$top,"n_queries":${results.size},"median":$med%.3f,"n_errors":$nErr,"n_flaky":$nFlaky,"full":"BENCH_FULL.json","sf":"$sfDir"}"""
+    val summary = f"""{"metric":"total","value":$total%.3f,"unit":"sec",$run,"queries":$top,"n_queries":${results.size},"median":$med%.3f,"n_errors":$nErr,"n_flaky":$nFlaky,"full":"BENCH_FULL.json","sf":"$sfDir"}"""
     // epilogue print order (VERDICT r13 #6 — the driver's tail extraction
     // has read `parsed: null` for three rounds): the COMPACT line prints
     // FIRST and LAST, bracketing the long full line, so whichever end of

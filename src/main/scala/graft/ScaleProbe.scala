@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.pipeline.{Dedup, Similarity}
 import graft.sources.Sources.table
@@ -21,17 +20,7 @@ object ScaleProbe {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val reps  = if (args.length > 1) args(1).toInt else 4
     val outJson = if (args.length > 2) args(2) else "SCALEPROBE.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     val docs1 = table(spark, sfDir, "documents")
       .withColumn("block", concat_ws("/", col("lang"), col("source")))

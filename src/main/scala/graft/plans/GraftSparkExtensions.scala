@@ -10,8 +10,11 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
   * primitives callable from `spark.sql` text — the API a SQL-first caller
   * (or the S10 introspective runner) uses.
   *
-  *  - cluster/submit use: `--conf spark.sql.extensions=graft.plans.GraftSparkExtensions`
-  *  - existing session (tests, the driver gate): [[GraftSparkExtensions.register]]
+  * Installed at session build through `spark.sql.extensions` — by
+  * [[graft.GraftSession]] for every main and test, and on a cluster by
+  * `--conf spark.sql.extensions=graft.plans.GraftSparkExtensions`. There
+  * is no post-build path: a session either has all of it from the start
+  * or none of it.
   *
   * Functions (names prefixed to never shadow builtins):
   *  - `graft_zorder16(x, y)` — Morton key, [[ZOrder16]]
@@ -42,8 +45,7 @@ object GraftSparkExtensions {
     if (args.length != n)
       throw new IllegalArgumentException(s"$name takes $n arguments, got ${args.length}")
 
-  /** (identifier, info, builder) triples in the shape injectFunction and
-    * FunctionRegistry.registerFunction share.
+  /** (identifier, info, builder) triples in the shape injectFunction takes.
     *
     * Every argument is wrapped in an explicit Cast to the expression's
     * expected input type — the native expressions carry no
@@ -99,21 +101,4 @@ object GraftSparkExtensions {
       args => { requireArgs("graft_damerau", 2, args)
         DamerauLevenshtein(Cast(args(0), org.apache.spark.sql.types.StringType),
           Cast(args(1), org.apache.spark.sql.types.StringType)) }))
-
-  /** Install on an ALREADY-BUILT session (builder-time extensions can't
-    * apply retroactively through getOrCreate).
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    functions.foreach { case (ident, fnInfo, builder) =>
-      org.apache.spark.sql.GraftSqlBridge.registerFunction(spark, ident, fnInfo, builder)
-    }
-    // existing-session path for the optimizer rule (extraOptimizations is
-    // the public post-build hook; idempotent by reference equality)
-    if (!spark.experimental.extraOptimizations.contains(JaroWinklerLengthPrune))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ JaroWinklerLengthPrune
-    if (!spark.experimental.extraOptimizations.contains(DamerauLengthPrune))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ DamerauLengthPrune
-  }
 }

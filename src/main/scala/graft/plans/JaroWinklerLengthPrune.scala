@@ -26,7 +26,8 @@ import org.apache.spark.sql.types.DoubleType
   * predicate accepts (it is a relaxation), and on NULL inputs both
   * predicates are NULL — the rewritten filter drops exactly the same
   * rows. Idempotent: a conjunct semantically equal to the derived check
-  * suppresses re-derivation (extraOptimizations run to fixpoint).
+  * suppresses re-derivation (injected operator-optimization rules run
+  * to fixpoint).
   */
 object JaroWinklerLengthPrune extends Rule[LogicalPlan] {
 

@@ -1232,9 +1232,9 @@ object AnalyticsQueries extends QuerySet {
 
     QueryDef("q124_sql_function", (s, d) => {
       // the SparkSessionExtensions surface end-to-end: native expressions
-      // registered into the session's FunctionRegistry and invoked from
-      // SQL TEXT (the S10 runner's API), aggregated per group
-      graft.plans.GraftSparkExtensions.register(s)
+      // injected into the session's FunctionRegistry when GraftSession
+      // builds it, invoked from SQL TEXT (the S10 runner's API),
+      // aggregated per group
       table(s, d, "lineitem").createOrReplaceTempView("q124_lineitem")
       s.sql(
         """SELECT l_returnflag,

@@ -67,9 +67,7 @@ object ExtensionQueries extends QuerySet {
       // The oracle computes the same roll-up from the SOURCE parquet, so a
       // hash match proves the ORC write/read preserved every row, the
       // microsecond timestamps, and the float payloads bit-exactly.
-      val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"graft_scratch_q192_${Integer.toHexString(d.hashCode)}" +
-          s"_p${ProcessHandle.current().pid()}").toString
+      val root = Scratch.warehouse("q192", d, s, Nil).root
       val src = events(s, d).select(col("event_id").cast("long").as("event_id"),
         col("ts"), col("user_id").cast("long").as("user_id"),
         col("event_type"), col("value"))

@@ -382,9 +382,9 @@ object FeatureQueries extends QuerySet {
       // >= 0.85 — the typo-tolerant lookup FuzzyLink does at scale, here
       // exercising the expression's exact DuckDB-parity semantics (the
       // kernel is bit-identical, so even the raw DOUBLE hash-compares)
-      // activate JaroWinklerLengthPrune: the >= 0.85 threshold implies a
-      // length-ratio bound the optimizer injects as a pre-kernel check
-      graft.plans.GraftSparkExtensions.register(s)
+      // JaroWinklerLengthPrune (installed by GraftSession): the >= 0.85
+      // threshold implies a length-ratio bound the optimizer injects as a
+      // pre-kernel check
       val probes = table(s, d, "part")
         .filter(pmod(col("p_partkey"), lit(500)) === 0)
         .select(col("p_partkey").as("probe_key"),

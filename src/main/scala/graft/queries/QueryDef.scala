@@ -78,33 +78,47 @@ object Checks {
   * from clean state, not merge into a previous invocation's leftovers).
   */
 object Scratch {
+  /** Every scratch root this JVM has made, deleted by [[cleanup]] when the
+    * JVM exits.
+    */
+  private val roots = java.util.concurrent.ConcurrentHashMap.newKeySet[java.io.File]()
+  // one shutdown hook per JVM, registered with the first root
+  private lazy val hook: Unit = { sys.addShutdownHook(cleanup()); () }
+
+  private def deleteTree(f: java.io.File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteTree))
+    f.delete(); ()
+  }
+
+  /** Delete every recorded scratch root (the shutdown hook's body). */
+  private[graft] def cleanup(): Unit = roots.forEach(r => deleteTree(r))
+
+  /** The scratch root of `tag` over `sfDir` in this JVM. */
+  private[graft] def root(tag: String, sfDir: String): java.io.File =
+    java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
+      s"graft_scratch_${tag}_${java.lang.Integer.toHexString(sfDir.hashCode)}" +
+        s"_p${ProcessHandle.current().pid()}").toFile
+
+  /** Delete a streaming checkpoint under the scratch warehouse so a
+    * repeat invocation (bench warmup/reps share the per-JVM scratch dir)
+    * re-ingests from offset zero instead of silently no-op'ing against
+    * committed offsets — the streaming twin of the table drops in
+    * [[warehouse]].
+    */
+  def resetCheckpoint(wh: graft.engine.Warehouse, name: String): Unit =
+    deleteTree(new java.io.File(s"${wh.root}/_checkpoints/$name"))
+
   /** One scratch warehouse per (tag, sfDir) PER JVM: reuse across bench
     * reps/warmups inside a run (the ADVICE r6 temp-dir leak), but never
     * shared between concurrently running JVMs — a test pass and a bench
     * resolving to the same path would drop each other's live lifecycle
-    * tables mid-read. The per-process dir is bounded by process count,
-    * not invocation count.
+    * tables mid-read. The root is deleted when the JVM exits.
     */
-  /** Delete a streaming checkpoint under the scratch warehouse so a
-    * repeat invocation (bench warmup/reps share the per-JVM scratch dir)
-    * re-ingests from offset zero instead of silently no-op'ing against
-    * committed offsets — the streaming twin of the table drops above.
-    */
-  def resetCheckpoint(wh: graft.engine.Warehouse, name: String): Unit = {
-    def del(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(del)
-      f.delete(); ()
-    }
-    val d = new java.io.File(s"${wh.root}/_checkpoints/$name")
-    if (d.exists()) del(d)
-  }
-
   def warehouse(tag: String, sfDir: String, s: SparkSession,
       tables: Seq[String]): graft.engine.Warehouse = {
-    val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_scratch_${tag}_${java.lang.Integer.toHexString(sfDir.hashCode)}" +
-        s"_p${ProcessHandle.current().pid()}")
-    val wh = new graft.engine.Warehouse(root.toString, s)
+    val dir = root(tag, sfDir)
+    if (roots.add(dir)) hook
+    val wh = new graft.engine.Warehouse(dir.toString, s)
     tables.foreach(wh.drop)
     wh
   }

@@ -1385,8 +1385,8 @@ object Round15cQueries extends QuerySet {
         JoinView, Model, Quarantine, Registry, Rollup, TableMat, ViewMat}
       import graft.engine.Rollup.{Measure, Want}
       val wh = Scratch.warehouse("q543", d, s, Seq(
-        "dim_c", "stg_o", "stg_o__quarantine", "stg_l", "ov",
-        "ov__rollup_spec", "ov__rollup_pick"))
+        "dim_c", "stg_o", "stg_o__quarantine", "stg_l", "stg_l__quarantine",
+        "ov", "ov__rollup_spec", "ov__rollup_pick"))
       val cutDay = datediff(lit("2001-01-01").cast("date"),
         lit("1970-01-01").cast("date"))
       val oAll = table(s, d, "orders").select(

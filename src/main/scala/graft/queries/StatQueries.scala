@@ -1333,9 +1333,9 @@ object StatQueries extends QuerySet {
       // model). Every 500th part name with chars 5/6 swapped probes the
       // catalog at distance <= 2; the whole part corpus x probe sweep is a
       // randomized per-cell parity check against DuckDB's builtin.
-      // DamerauLengthPrune is active: dl <= 2 implies |len diff| <= 2,
-      // prepended by the optimizer — result-identical, oracle unchanged.
-      graft.plans.GraftSparkExtensions.register(s)
+      // DamerauLengthPrune (installed by GraftSession): dl <= 2 implies
+      // |len diff| <= 2, prepended by the optimizer — result-identical,
+      // oracle unchanged.
       val probes = table(s, d, "part")
         .filter(pmod(col("p_partkey"), lit(500)) === 0)
         .select(col("p_partkey").as("probe_key"),

@@ -26,18 +26,6 @@ object GraftSqlBridge {
       case _ => ()
     }
 
-  /** Register a catalyst function on an existing session (sessionState and
-    * its FunctionRegistry are `private[sql]`; builder-time
-    * SparkSessionExtensions can't reach a session getOrCreate already
-    * returned).
-    */
-  def registerFunction(spark: SparkSession,
-      ident: org.apache.spark.sql.catalyst.FunctionIdentifier,
-      info: org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-      builder: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-        org.apache.spark.sql.catalyst.expressions.Expression): Unit =
-    spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
-
   /** The ids of the checkpoint RDDs backing `df` (for tests that need to
     * assert against sparkContext.getPersistentRDDs without racing the
     * ContextCleaner on the global count).

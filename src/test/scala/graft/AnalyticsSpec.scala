@@ -125,7 +125,6 @@ class AnalyticsSpec extends AnyFunSuite {
   }
 
   test("SQL function registration: graft_* callable from spark.sql, codegen values match DSL") {
-    graft.plans.GraftSparkExtensions.register(spark)
     // INT (not LONG) literals: the registration wraps args in explicit
     // casts, so interpreted eval must not ClassCastException
     assert(spark.sql("SELECT graft_zorder16(3, 5) AS z").as[Long].head() ===

@@ -502,9 +502,8 @@ class FeatureSpec extends AnyFunSuite {
   // ---- JaroWinklerLengthPrune optimizer rule ----
 
   test("JaroWinklerLengthPrune: derived length check, soundness, vacuous skip") {
-    import graft.plans.{Expressions, GraftSparkExtensions, JaroWinklerLengthPrune}
+    import graft.plans.{Expressions, JaroWinklerLengthPrune}
     import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter}
-    GraftSparkExtensions.register(spark)
     // a real file source keeps the Filter node alive: over a
     // LocalRelation the optimizer just EVALUATES the filter at plan time
     // (ConvertToLocalRelation) and leaves nothing to rewrite
@@ -537,7 +536,6 @@ class FeatureSpec extends AnyFunSuite {
   }
 
   test("graft_jaro_winkler / graft_deflate_len callable from SQL text") {
-    graft.plans.GraftSparkExtensions.register(spark)
     val r = spark.sql(
       "SELECT graft_jaro_winkler('martha', 'marhta') AS jw, " +
         "graft_deflate_len('aaaaaaaaaaaaaaaaaaaaaaaa') AS dz").collect()(0)

@@ -48,6 +48,10 @@ class HarnessCompatSpec extends AnyFunSuite {
     val m = Bench.priorMedians(line)
     assert(m === Map("q01_a" -> 0.1234, "q283_bootstrap_ci" -> 6.0021,
       "q99" -> 0.15))
+    // the run fields (cpus, reps, git_sha) ahead of the map do not leak in
+    assert(Bench.priorMedians("""{"metric":"total","value":1.0,"unit":"sec",""" +
+      """"cpus":4,"reps":3,"git_sha":"581912d","queries":{"q05":0.89},""" +
+      """"errors":{},"flaky":{},"sf":"/x"}""") === Map("q05" -> 0.89))
     // degraded inputs -> empty map, never a throw (triage is best-effort)
     assert(Bench.priorMedians("") === Map.empty)
     assert(Bench.priorMedians("""{"metric":"total"}""") === Map.empty)

@@ -2,19 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared session for all suites (guide: one SparkSession per JVM). */
+/** One shared session for all suites (guide: one SparkSession per JVM),
+  * pinned to local[4] with 8 shuffle partitions whatever the host has.
+  */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession(4, 8)
 }

@@ -384,15 +384,13 @@ class StatSpec extends AnyFunSuite {
     val n = Seq((Some("x"), Option.empty[String])).toDF("a", "b")
       .select(Expressions.damerauLevenshtein(col("a"), col("b"))).collect().head
     assert(n.isNullAt(0))
-    // SQL function surface
-    graft.plans.GraftSparkExtensions.register(spark)
+    // SQL function surface, installed by the session factory
     assert(spark.sql("SELECT graft_damerau('ab', 'ba')")
       .collect().head.getInt(0) === 1)
   }
 
   test("DamerauLengthPrune: derived length check, soundness, idempotence") {
     import graft.plans.Expressions
-    graft.plans.GraftSparkExtensions.register(spark)
     // file source keeps the Filter node alive (a LocalRelation would be
     // fully evaluated at optimize time — the JW-rule spec's lesson)
     val dir = java.nio.file.Files.createTempDirectory("graft_dlprune").toString

@@ -1,7 +1,7 @@
 #!/bin/bash
 # Run a graft main class directly against the sbt-compiled classes +
 # /opt/spark/jars, skipping sbt JVM startup. Usage:
-#   tools/run_graft.sh [-C workdir] graft.BenchOne q315_mann_kendall ...
+#   tools/run_graft.sh [-C workdir] graft.Dev time q315_mann_kendall 5
 # Env passthrough: SPARK_GRAFT_* as usual; SPARK_DRIVER_MEM (default 8g).
 set -euo pipefail
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
@@ -18,5 +18,4 @@ done
 cd "$WORKDIR"
 exec java $ADD_OPENS \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "$REPO/target/scala-2.13/classes:/opt/spark/jars/*" "$@"
