@@ -13,7 +13,7 @@ import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
   * it — the lazy-loop discipline of pageRank/triangles shows its
   * logical repetition but executes one scan per reuse group), so the
   * count is true rescan work, not logical-plan shape. A pinned shared
-  * subtree (localCheckpoint) surfaces as an RDD scan and never counts
+  * subtree ([[graft.engine.Pin]]) surfaces as an RDD scan and never counts
   * against its source.
   *
   * Self-joins and two-frame pair builds legitimately read a source

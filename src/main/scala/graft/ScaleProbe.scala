@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.pipeline.{Dedup, Similarity}
 import graft.sources.Sources.table
+import graft.engine.Pin.PinOps
+import graft.queries.Scratch
 
 /** Scale-up probe: times the pairwise dedup family on the documents table
   * replicated Nx (ids shifted so replicas are near-dups of each other, the
@@ -26,7 +28,7 @@ object ScaleProbe {
       .withColumn("block", concat_ws("/", col("lang"), col("source")))
     val docsN = (0 until reps).map { r =>
       docs1.withColumn("doc_id", col("doc_id") + lit(r * 10000000L))
-    }.reduce(_ unionByName _).localCheckpoint()
+    }.reduce(_ unionByName _).pinEager()
 
     val probeRows = scala.collection.mutable.ListBuffer.empty[(String, Double, Long)]
     // optional probe filter (regex over labels): lets a high-replica run —
@@ -43,7 +45,7 @@ object ScaleProbe {
       println(f"[probe] $label%-28s $sec%7.2f s  ($n rows)")
     }
 
-    for ((label, docs) <- Seq("1x" -> docs1.localCheckpoint(), s"${reps}x" -> docsN)) {
+    for ((label, docs) <- Seq("1x" -> docs1.pinEager(), s"${reps}x" -> docsN)) {
       time(s"ngram_jaccard_prefix  $label") {
         Dedup.ngramJaccardPairs(docs, "block", n = 3, threshold = 0.5).count()
       }
@@ -102,7 +104,7 @@ object ScaleProbe {
         .select(col("doc_id"), substring(col("text"), 1, 24).as("k"))
       val skewKey = when(col("doc_id") % 2 === 0,
         concat(lit("ACME"), substring(col("k"), 5, 20))).otherwise(col("k"))
-      val registry = base.select(col("doc_id"), skewKey.as("k")).localCheckpoint()
+      val registry = base.select(col("doc_id"), skewKey.as("k")).pinEager()
       // query keys mutate the LAST character (edit distance 1, still a true
       // match) so the suffix block never agrees: hot-prefix rows are
       // reachable ONLY through the guarded block, making the recall cost
@@ -110,7 +112,7 @@ object ScaleProbe {
       val queries = registry.filter(col("doc_id") % 5 === 0)
         .select((col("doc_id") + 90000000L).as("doc_id"),
           concat(substring(col("k"), 1, 23), lit("~")).as("k"))
-        .localCheckpoint()
+        .pinEager()
       time("fuzzy_skew_unguarded  1x") {
         graft.operators.FuzzyLink.link(
           queries, col("doc_id"), col("k"), registry, col("doc_id"), col("k"),
@@ -137,7 +139,7 @@ object ScaleProbe {
     // — successive small batches into a large bucket-partitioned target
     {
       val wh = new graft.engine.Warehouse(
-        java.nio.file.Files.createTempDirectory("graft_probe_upsert").toString, spark)
+        Scratch.tempDir("graft_probe_upsert").toString, spark)
       val events = graft.sources.Sources.events(spark, sfDir)
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
       time("upsert_initial        1x") {
@@ -164,8 +166,8 @@ object ScaleProbe {
     val emb1 = table(spark, sfDir, "embeddings")
     val embN = (0 until reps).map { r =>
       emb1.withColumn("vec_id", col("vec_id") + lit(r * 10000000L))
-    }.reduce(_ unionByName _).localCheckpoint()
-    for ((label, emb) <- Seq("1x" -> emb1.localCheckpoint(), s"${reps}x" -> embN)) {
+    }.reduce(_ unionByName _).pinEager()
+    for ((label, emb) <- Seq("1x" -> emb1.pinEager(), s"${reps}x" -> embN)) {
       time(s"ivf_ann               $label") {
         Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 10), k = 5,
           nCentroids = 32, nProbe = 2).count()
@@ -183,8 +185,8 @@ object ScaleProbe {
     val edgesN = (0 until reps).map { r =>
       edges1.select((col("s") + lit(r * 10000000L)).as("s"),
         (col("t") + lit(r * 10000000L)).as("t"))
-    }.reduce(_ unionByName _).localCheckpoint()
-    for ((label, ed) <- Seq("1x" -> edges1.localCheckpoint(), s"${reps}x" -> edgesN)) {
+    }.reduce(_ unionByName _).pinEager()
+    for ((label, ed) <- Seq("1x" -> edges1.pinEager(), s"${reps}x" -> edgesN)) {
       time(s"pagerank              $label") {
         graft.operators.Graph.pageRank(ed, "s", "t", iterations = 3).count()
       }
@@ -206,7 +208,7 @@ object ScaleProbe {
     // one-time whole-stage codegen compilation that would otherwise land
     // entirely on the 1x row (measured 4.7 s vs a real 0.9 s)
     locally {
-      val tiny = docs1.limit(50).localCheckpoint()
+      val tiny = docs1.limit(50).pinEager()
       graft.operators.HeavyHitters.frequentItems(
         tiny.select(explode(graft.pipeline.TextAnalysis.tokens(col("text")))
           .as("token")), col("token"), k = 200).count()
@@ -294,10 +296,10 @@ object ScaleProbe {
     // caps per-basket fanout
     val li1 = table(spark, sfDir, "lineitem")
       .select(col("l_orderkey").cast("long").as("b"),
-        col("l_partkey").cast("long").as("i")).localCheckpoint()
+        col("l_partkey").cast("long").as("i")).pinEager()
     val liN = (0 until reps).map(r =>
       li1.withColumn("b", col("b") + lit(r * 100000000L)))
-      .reduce(_ unionByName _).localCheckpoint()
+      .reduce(_ unionByName _).pinEager()
     for ((label, li) <- Seq("1x" -> li1, s"${reps}x" -> liN)) {
       time(s"item_cf_neighbors     $label") {
         graft.operators.Features.itemNeighbors(li, col("b"), col("i"),
@@ -321,10 +323,10 @@ object ScaleProbe {
     val evd1 = graft.sources.Sources.events(spark, sfDir)
       .select(col("user_id"),
         datediff(to_date(col("ts")), lit("1970-01-01").cast("date")).as("day"))
-      .localCheckpoint()
+      .pinEager()
     val evdN = (0 until reps).map(r =>
       evd1.withColumn("user_id", col("user_id") + lit(r * 10000000L)))
-      .reduce(_ unionByName _).localCheckpoint()
+      .reduce(_ unionByName _).pinEager()
     for ((label, ev) <- Seq("1x" -> evd1, s"${reps}x" -> evdN)) {
       time(s"rolling_wau           $label") {
         graft.operators.EventAnalytics.rollingActiveUsers(ev,
@@ -335,10 +337,10 @@ object ScaleProbe {
     // windowed funnel: per-step gap-bounded joins are USER-keyed — replicas
     // add users, qualified sets grow linearly, never cross-user pairs
     val evf1 = graft.sources.Sources.events(spark, sfDir)
-      .select(col("user_id"), col("event_type"), col("ts")).localCheckpoint()
+      .select(col("user_id"), col("event_type"), col("ts")).pinEager()
     val evfN = (0 until reps).map(r =>
       evf1.withColumn("user_id", col("user_id") + lit(r * 10000000L)))
-      .reduce(_ unionByName _).localCheckpoint()
+      .reduce(_ unionByName _).pinEager()
     for ((label, ev) <- Seq("1x" -> evf1, s"${reps}x" -> evfN)) {
       time(s"windowed_funnel       $label") {
         graft.operators.EventAnalytics.windowedFunnel(ev,
@@ -351,10 +353,10 @@ object ScaleProbe {
     val ab1 = table(spark, sfDir, "lineitem")
       .select(col("l_partkey").cast("long").as("k"),
         floor(col("l_extendedprice") * 100 + 0.5).cast("long").as("v"))
-      .localCheckpoint()
+      .pinEager()
     val abN = (0 until reps).map(r =>
       ab1.withColumn("k", col("k") + lit(r * 100000000L)))
-      .reduce(_ unionByName _).localCheckpoint()
+      .reduce(_ unionByName _).pinEager()
     for ((label, ab) <- Seq("1x" -> ab1, s"${reps}x" -> abN)) {
       time(s"abc_prefix_sums       $label") {
         graft.operators.Ranking.abcClassify(ab, col("k"), col("v")).count()
@@ -369,9 +371,9 @@ object ScaleProbe {
         datediff(to_date(col("l_shipdate")),
           lit("1970-01-01").cast("date")).as("day"),
         floor(col("l_extendedprice") * 100 + 0.5).cast("long").as("v"))
-      .localCheckpoint()
+      .pinEager()
     val mkN = (0 until reps).map(_ => mk1).reduce(_ unionByName _)
-      .localCheckpoint()
+      .pinEager()
     for ((label, mk) <- Seq("1x" -> mk1, s"${reps}x" -> mkN)) {
       time(s"mann_kendall_sen      $label") {
         graft.pipeline.Stats.mannKendallDaily(mk, Seq("g"), col("day"),
@@ -392,10 +394,10 @@ object ScaleProbe {
         floor(col("l_extendedprice") / col("l_quantity") * 100 + lit(0.5))
           .cast("long").as("cents"),
         col("l_linestatus").as("st"))
-      .localCheckpoint()
+      .pinEager()
     val ffN = (0 until reps).map { r =>
       ff1.withColumn("k", col("k") + lit(r * 10000000L))
-    }.reduce(_ unionByName _).localCheckpoint()
+    }.reduce(_ unionByName _).pinEager()
     for ((label, li) <- Seq("1x" -> ff1, s"${reps}x" -> ffN)) {
       time(s"fifo_alloc            $label") {
         graft.operators.Features.fifoAllocate(
@@ -411,9 +413,9 @@ object ScaleProbe {
     val jt1 = table(spark, sfDir, "events")
       .select(floor(col("value") * 1000 + 0.5).cast("long").as("v"),
         (col("user_id") % 5L).as("g"))
-      .localCheckpoint()
+      .pinEager()
     val jtN = (0 until reps).map(_ => jt1).reduce(_ unionByName _)
-      .localCheckpoint()
+      .pinEager()
     for ((label, jt) <- Seq("1x" -> jt1, s"${reps}x" -> jtN)) {
       time(s"jonckheere_grid       $label") {
         graft.pipeline.Inference.jonckheereTerpstra(jt, col("v"), col("g"))
@@ -461,7 +463,7 @@ object ScaleProbe {
     // round-11: iterated HyperANF — per-round cost is one edge join +
     // (node, bucket) max; Nx disjoint subgraph edges must cost ~Nx per
     // round (register rows bounded by nodes x 256, never pair volume)
-    for ((label, ed) <- Seq("1x" -> edges1.localCheckpoint(), s"${reps}x" -> edgesN)) {
+    for ((label, ed) <- Seq("1x" -> edges1.pinEager(), s"${reps}x" -> edgesN)) {
       time(s"hyperanf_rounds       $label") {
         graft.operators.Graph.neighborhoodFunction(
           ed.select(col("s").as("src"), col("t").as("dst"))
@@ -482,8 +484,8 @@ object ScaleProbe {
           graft.operators.Features.cents(col("l_extendedprice")).as("c"))
       val qsN = (0 until reps).map(r =>
         qs1.withColumn("unit", col("unit") + lit(r * 1000L)))
-        .reduce(_ unionByName _).localCheckpoint()
-      for ((label, df) <- Seq("1x" -> qs1.localCheckpoint(), s"${reps}x" -> qsN)) {
+        .reduce(_ unionByName _).pinEager()
+      for ((label, df) <- Seq("1x" -> qs1.pinEager(), s"${reps}x" -> qsN)) {
         time(s"qsketch_2level        $label") {
           graft.functions.QuantileSketch.qsCompress(
             graft.functions.QuantileSketch.qsCompress(
@@ -507,12 +509,12 @@ object ScaleProbe {
           floor(col("value") * 100 + 0.5).cast("long").as("cents"))
       val baseWindow = ev1.filter(col("day") < lit("2024-01-21").cast("date"))
       val nightSlice = ev1.filter(col("day") === lit("2024-01-25").cast("date"))
-      val evA = baseWindow.unionByName(nightSlice).localCheckpoint()
+      val evA = baseWindow.unionByName(nightSlice).pinEager()
       val evB = (0 until reps).map(_ => baseWindow).reduce(_ unionByName _)
-        .unionByName(nightSlice).localCheckpoint()
+        .unionByName(nightSlice).pinEager()
       for ((label, ev) <- Seq("1x" -> evA, s"${reps}x" -> evB)) {
         val wh = new graft.engine.Warehouse(
-          java.nio.file.Files.createTempDirectory("graft_probe_drift").toString, spark)
+          Scratch.tempDir("graft_probe_drift").toString, spark)
         def mkReg() = {
           val reg = new graft.engine.Registry(spark, wh)
           reg.source("ev", ev)
@@ -555,16 +557,16 @@ object ScaleProbe {
       val emb1 = table(spark, sfDir, "embeddings")
       val base1 = emb1.filter(col("vec_id") % 4 < 2)
       val night = emb1.filter(col("vec_id") % 4 === 2)
-      val embA = base1.unionByName(night).localCheckpoint()
+      val embA = base1.unionByName(night).pinEager()
       val embB = (0 until reps).map(r =>
         base1.withColumn("vec_id", col("vec_id") + lit(r * 10000000L)))
-        .reduce(_ unionByName _).unionByName(night).localCheckpoint()
+        .reduce(_ unionByName _).unionByName(night).pinEager()
       def cent(df: org.apache.spark.sql.DataFrame) =
         graft.pipeline.Clustering.labelCentroids(df, "label", "embedding")
           .select(col("label"), col("pos"), col("sum_q"), col("n_vecs"))
       for ((label, emb) <- Seq("1x" -> embA, s"${reps}x" -> embB)) {
         val wh = new graft.engine.Warehouse(
-          java.nio.file.Files.createTempDirectory("graft_probe_cent").toString, spark)
+          Scratch.tempDir("graft_probe_cent").toString, spark)
         def mkReg() = {
           val reg = new graft.engine.Registry(spark, wh)
           reg.source("emb", emb)
@@ -610,7 +612,7 @@ object ScaleProbe {
         .reduce(_ unionByName _)
       for ((label, df, nf) <- Seq(("1x", li1, 16), (s"${reps}x", liN, 16 * reps))) {
         val wh = new graft.engine.Warehouse(
-          java.nio.file.Files.createTempDirectory("graft_probe_man").toString, spark)
+          Scratch.tempDir("graft_probe_man").toString, spark)
         wh.writeSwap("t",
           df.repartitionByRange(nf, col("k")).sortWithinPartitions("k"))
         time(s"manifest_build        $label") {
@@ -640,7 +642,7 @@ object ScaleProbe {
         .reduce(_ unionByName _)
       for ((label, df, nf) <- Seq(("1x", li1, 16), (s"${reps}x", liN, 16 * reps))) {
         val wh = new graft.engine.Warehouse(
-          java.nio.file.Files.createTempDirectory("graft_probe_bloom").toString, spark)
+          Scratch.tempDir("graft_probe_bloom").toString, spark)
         wh.writeSwap("t", df.repartition(nf, col("k")))
         time(s"bloom_build           $label") {
           wh.writeBloomManifest("t", Seq("k")).toLong
@@ -668,13 +670,13 @@ object ScaleProbe {
             floor(col("value") * 100 + 0.5).cast("long"), lit(100L)).as("b"))
       val base = QuantileSketch.qsRegisters(
         ev.filter(col("day") < lit("2024-01-15").cast("date")), Nil, col("b"))
-        .localCheckpoint()
+        .pinEager()
       val live1 = QuantileSketch.qsRegisters(
         ev.filter(col("day") >= lit("2024-01-15").cast("date")),
-        Seq("day"), col("b")).localCheckpoint()
+        Seq("day"), col("b")).pinEager()
       val liveN = (0 until reps).map(r =>
         live1.withColumn("day", date_add(col("day"), lit(r * 365))))
-        .reduce(_ unionByName _).localCheckpoint()
+        .reduce(_ unionByName _).pinEager()
       for ((label, live) <- Seq("1x" -> live1, s"${reps}x" -> liveN))
         time(s"drift_panel_groups    $label") {
           Inference.driftPanelFromRegisters(live, base, Seq("day")).count()
@@ -696,7 +698,7 @@ object ScaleProbe {
         .reduce(_ unionByName _)
       for ((label, df, nf) <- Seq(("1x", li1, 16), (s"${reps}x", liN, 16 * reps))) {
         val wh = new graft.engine.Warehouse(
-          java.nio.file.Files.createTempDirectory("graft_probe_rf").toString, spark)
+          Scratch.tempDir("graft_probe_rf").toString, spark)
         wh.writeSwap("t", df.repartition(nf, col("k")),
           statsCols = Seq("k"), bloomCols = Seq("k"))
         wh.append("t", df.limit(1000).coalesce(1))
@@ -724,15 +726,15 @@ object ScaleProbe {
       val span = 10000000L
       val liN = (0 until reps).map(r =>
         li1.withColumn("id", col("id") + lit(r * span)))
-        .reduce(_ unionByName _).localCheckpoint()
-      for ((label, df) <- Seq("1x" -> li1.localCheckpoint(), s"${reps}x" -> liN)) {
+        .reduce(_ unionByName _).pinEager()
+      for ((label, df) <- Seq("1x" -> li1.pinEager(), s"${reps}x" -> liN)) {
         time(s"kmv_build             $label") {
           Sketches.kmvRegisters(df, Seq("g"), col("id"), 256).count()
         }
         val a = Sketches.kmvRegisters(df.filter(col("id") % 2 === 0),
-          Seq("g"), col("id"), 256).localCheckpoint()
+          Seq("g"), col("id"), 256).pinEager()
         val b = Sketches.kmvRegisters(df.filter(col("id") % 2 === 1),
-          Seq("g"), col("id"), 256).localCheckpoint()
+          Seq("g"), col("id"), 256).pinEager()
         time(s"kmv_merge             $label") {
           Sketches.kmvMerge(a.unionByName(b), Seq("g"), 256).count()
         }
@@ -753,7 +755,7 @@ object ScaleProbe {
       def skewed(n: Long) = spark.range(n).select(lit("g").as("g"),
         (col("id") * 2654435761L % 2000000011L).as("id")).coalesce(1)
       for ((label, n) <- Seq("1x" -> 1500000L, s"${reps}x" -> (1500000L * reps))) {
-        val df = skewed(n).localCheckpoint()
+        val df = skewed(n).pinEager()
         time(s"kmv_skew_build        $label") {
           Sketches.kmvRegisters(df, Seq("g"), col("id"), 256).count()
         }
@@ -773,10 +775,10 @@ object ScaleProbe {
       for ((label, n) <- Seq("1x" -> 1500000L, s"${reps}x" -> (1500000L * reps))) {
         val ra = Sketches.kmvRegisters(
           spark.range(n).select((col("id") * 3L).as("id")), Nil, col("id"), 256)
-          .localCheckpoint()
+          .pinEager()
         val rb = Sketches.kmvRegisters(
           spark.range(n).select((col("id") * 2L).as("id")), Nil, col("id"), 256)
-          .localCheckpoint()
+          .pinEager()
         time(s"kmv_set_ops           $label") {
           Sketches.kmvSetOps(ra, rb, 256).count()
         }
@@ -799,14 +801,14 @@ object ScaleProbe {
             .otherwise(concat(lit("t"),
               (col("id") * 2654435761L % 2000000011L).cast("string")))
             .as("v"))
-          .localCheckpoint()
+          .pinEager()
         time(s"mg_build              $label") {
           Sketches.mgRegisters(df, Seq("g"), col("v"), 256).count()
         }
         val a = Sketches.mgRegisters(df.filter(col("id") % 2 === 0),
-          Seq("g"), col("v"), 256).localCheckpoint()
+          Seq("g"), col("v"), 256).pinEager()
         val b = Sketches.mgRegisters(df.filter(col("id") % 2 === 1),
-          Seq("g"), col("v"), 256).localCheckpoint()
+          Seq("g"), col("v"), 256).pinEager()
         time(s"mg_merge              $label") {
           Sketches.mgCompress(a.unionByName(b), Seq("g"), 256).count()
         }
@@ -828,7 +830,7 @@ object ScaleProbe {
           (col("id") % 1000L).as("a"),
           (col("id") * 2654435761L % 97L).as("b"),
           concat(lit("s"), (col("id") % 5000L).cast("string")).as("c"))
-          .localCheckpoint()
+          .pinEager()
         time(s"profile_build         $label") {
           TableStats.columnRegisters(df, Seq("a", "b", "c"), 256).count() +
             TableStats.columnCounts(df, Seq("a", "b", "c")).count()
@@ -836,7 +838,7 @@ object ScaleProbe {
       }
       for ((label, files) <- Seq("1x" -> 16, s"${reps}x" -> (16 * reps))) {
         val wh = new Warehouse(
-          java.nio.file.Files.createTempDirectory("graft_probe_dfp").toString,
+          Scratch.tempDir("graft_probe_dfp").toString,
           spark)
         wh.writeSwap("f", spark.range(1000000L)
           .select(col("id").as("k"), (col("id") * 2L).as("x"))
@@ -850,9 +852,9 @@ object ScaleProbe {
       for ((label, n) <- Seq("1x" -> 1000000L, s"${reps}x" -> (1000000L * reps))) {
         val fact = spark.range(n).select(
           when(col("id") % 3L === 0L, 7L).otherwise(col("id") % 50000L)
-            .as("k"), col("id").as("x")).localCheckpoint()
+            .as("k"), col("id").as("x")).pinEager()
         val dim = spark.range(50000L).select(col("id").as("k"),
-          (col("id") + 1L).as("y")).localCheckpoint()
+          (col("id") + 1L).as("y")).pinEager()
         time(s"plain_skew_join       $label") {
           fact.hint("shuffle_hash").join(dim, Seq("k")).count()
         }
@@ -874,19 +876,19 @@ object ScaleProbe {
       for ((label, n) <- Seq("1x" -> 1000000L, s"${reps}x" -> (1000000L * reps))) {
         val df = spark.range(n).select(
           (col("id") % 1000L).as("a"),
-          (col("id") * 2654435761L % 199L).as("b")).localCheckpoint()
+          (col("id") * 2654435761L % 199L).as("b")).pinEager()
         time(s"mcv_build             $label") {
           TableStats.mcvProfiles(df, Seq("a", "b"), 64).count()
         }
         val sums = TableStats.columnSummaries(df, Seq("a", "b"), 256)
-          .localCheckpoint()
+          .pinEager()
         val mcvs = TableStats.mcvProfiles(df, Seq("a", "b"), 64)
-          .localCheckpoint()
+          .pinEager()
         val counts = TableStats.columnCounts(df, Seq("a", "b"))
-          .localCheckpoint()
+          .pinEager()
         val ndv = TableStats.ndvEstimate(
           TableStats.columnRegisters(df, Seq("a", "b"), 256), 256)
-          .localCheckpoint()
+          .pinEager()
         val wl = spark.createDataFrame(Seq(
           ("a", "eq", Option.empty[Long], Option.empty[Long],
             Option("7"), 4L),
@@ -924,12 +926,12 @@ object ScaleProbe {
       for ((label, n) <- Seq("1x" -> 1000000L, s"${reps}x" -> (1000000L * reps))) {
         val df = spark.range(n).select(col("id"),
           (col("id") % 7L).as("g"), (col("id") % 11L).as("h"),
-          (col("id") % 1000L).as("v")).localCheckpoint()
+          (col("id") % 1000L).as("v")).pinEager()
         val meas = Seq(Measure("sum", "v"), Measure("count", "*"))
         time(s"rollup_build          $label") {
           Rollup.partials(df, Seq("g", "h"), meas).count()
         }
-        val parts = Rollup.partials(df, Seq("g", "h"), meas).localCheckpoint()
+        val parts = Rollup.partials(df, Seq("g", "h"), meas).pinEager()
         time(s"rollup_serve          $label") {
           Rollup.answer(parts, Seq("g"),
             Seq(Want("sv", "sum", "v"), Want("nr", "count", "*")),
@@ -940,9 +942,9 @@ object ScaleProbe {
           Sketches.uniformSampleTable(idv, col("id"), 256).count()
         }
         val stored = Sketches.uniformSampleTable(idv, col("id"), 256)
-          .localCheckpoint()
+          .pinEager()
         val batch = spark.range(n, n + 10000L).select(col("id"),
-          (col("id") % 1000L).as("v")).localCheckpoint()
+          (col("id") % 1000L).as("v")).pinEager()
         time(s"sample_merge          $label") {
           Sketches.uniformSampleMerge(stored, batch, col("id"), 256).count()
         }
@@ -960,8 +962,7 @@ object ScaleProbe {
     // honest one-time linear scan bound to the signature it records.
     {
       import graft.engine.{Constraints, JoinView, Warehouse}
-      val wroot = java.nio.file.Files
-        .createTempDirectory("graft_probe_ivm").toString
+      val wroot = Scratch.tempDir("graft_probe_ivm").toString
       val wh = new Warehouse(wroot, spark)
       for ((label, n) <- Seq("1x" -> 1000000L, s"${reps}x" -> (1000000L * reps))) {
         val a = spark.range(n).select(col("id").as("okey"),
@@ -975,10 +976,10 @@ object ScaleProbe {
           Seq(s"pa_$label" -> "a_cur", s"pb_$label" -> "b_cur"))
         val a2 = spark.range(n + 10000L).select(col("id").as("okey"),
           col("id").as("a_cur"), (col("id") % 97L).as("av"))
-          .localCheckpoint()
+          .pinEager()
         val b2 = spark.range(n + 10000L).select(col("id").as("okey"),
           col("id").as("b_cur"), (col("id") % 89L).as("bv"))
-          .localCheckpoint()
+          .pinEager()
         time(s"ivm_delta             $label") {
           JoinView.delta(wh, s"pv_$label", s"pa_$label", a2, "a_cur",
             s"pb_$label", b2, "b_cur", Seq("okey")).count()
@@ -1009,10 +1010,10 @@ object ScaleProbe {
       for ((label, n) <- Seq("1x" -> 1000000L, s"${reps}x" -> (1000000L * reps))) {
         val fact = spark.range(n).select(
           (col("id") % 100000L).as("k"), (col("id") % 997L).as("v"))
-          .localCheckpoint()
+          .pinEager()
         val dim = spark.range(100000L * 10L).select(
           (col("id") % 100000L).as("k"), (col("id") % 23L).as("g"))
-          .localCheckpoint()
+          .pinEager()
         val wants = Seq(Want("sv", "sum", "v"), Want("nr", "count", "*"))
         time(s"eager_agg             $label") {
           Rollup.eagerAgg(fact, dim, Seq("k"), Seq("g"), wants).count()

@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.engine.Pin.PinOps
 
 /** Declared + VERIFIED integrity constraints as warehouse sidecars, and the
   * semantic-optimization rewrites they license (join elimination, distinct
@@ -134,8 +135,7 @@ object Constraints {
     require(verifiedKey(wh, rel, cols),
       s"verifyKeyAppend('$rel'): key (${cols.mkString(",")}) is not " +
         "verified-current on the stored relation — run verifyKey first")
-    val b = batch.cache()
-    try {
+    Pin.loan(batch.pinLazy()) { b =>
       val row = b.agg(
         count(lit(1)).as("n"),
         countDistinct(cols.head, cols.tail: _*).as("nd"),
@@ -155,7 +155,7 @@ object Constraints {
       wh.append(rel, b)
       val sig = wh.relationSignature(rel).get
       putLine(wh, rel, s"key\t${norm(cols)}\t", s"key\t${norm(cols)}\t$sig")
-    } finally { b.unpersist(); () }
+    }
   }
 
   /** Is a key constraint on `cols` recorded for `rel` AND verified against

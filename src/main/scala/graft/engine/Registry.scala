@@ -2,6 +2,7 @@ package graft.engine
 
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.engine.Pin.PinOps
 
 /** Model/DAG layer — the reference's dbt lifecycle (SURVEY §3) without Jinja:
   * a model is a named Scala function of its resolved dependencies; the
@@ -808,7 +809,6 @@ final class Registry(spark: SparkSession, wh: Warehouse) {
 
   // ---- declared-join cost model (ctx.join) ----------------------------
   private var joinFeedbackTable: Option[String] = None
-  private var joinProfileK: Int = 256
 
   /** Declares the warehouse table executed planned-joins append their
     * LEO feedback rows to (`fb_family, fb_est, fb_est_adjusted,
@@ -818,14 +818,6 @@ final class Registry(spark: SparkSession, wh: Warehouse) {
     */
   def enableJoinFeedback(table: String = "join_feedback"): this.type = {
     joinFeedbackTable = Some(table); this
-  }
-
-  /** The register size the analyze hooks were declared with — the NDV
-    * estimator must read the sidecars under the SAME k they were built
-    * at ([[TableStats.analyzeHook]]'s default is 256).
-    */
-  def statsProfileK(k: Int): this.type = {
-    require(k >= 2, s"k: $k"); joinProfileK = k; this
   }
 
   /** The ctx.join resolver: profile both sides' keys from their
@@ -1695,12 +1687,10 @@ final class Registry(spark: SparkSession, wh: Warehouse) {
     val d = resolveName(dep)
     if (!wh.exists(s"${d}__stats_counts") || !wh.exists(s"${d}__stats_regs"))
       None
-    else TableStats.sideProfile(wh.read(s"${d}__stats_counts"),
-      TableStats.ndvEstimate(wh.read(s"${d}__stats_regs"), joinProfileK),
-      keyName, "x").collect() match {
-        case Array(r) => Some((r.getAs[Long]("n_x"), r.getAs[Long]("ndv_x")))
-        case _ => None
-      }
+    else TableStats.readProfile(wh, d, keyName, "x").collect() match {
+      case Array(r) => Some((r.getAs[Long]("n_x"), r.getAs[Long]("ndv_x")))
+      case _ => None
+    }
   }
 
   /** The ctx.starJoin resolver: per dim, the System-R single-join
@@ -1977,35 +1967,24 @@ final class Registry(spark: SparkSession, wh: Warehouse) {
                 // the swap: the model build may reference
                 // ctx.existingTarget, whose file index dies in the swap
                 // (stale-scan FileNotFound otherwise).
-                val src =
-                  if (target.schema != stored.schema) {
-                    val snap = df.localCheckpoint(true)
+                def appendFrom(src: DataFrame): Unit = {
+                  val schemaNow = wh.read(m.name).schema
+                  // cast every appended column to the STORED type (the
+                  // warehouse-coercion dbt relies on): an int batch landing
+                  // in a long column must not write int-typed files
+                  val aligned = schemaNow.fields.map(f =>
+                    if (src.columns.contains(f.name)) col(f.name).cast(f.dataType)
+                    else lit(null).cast(f.dataType).as(f.name))
+                  wh.append(m.name, src.select(aligned.toSeq: _*))
+                }
+                if (target.schema != stored.schema)
+                  Pin.loan(df.pinEager()) { snap =>
                     wh.writeSwap(m.name, target)
-                    snap
-                  } else df
-                val schemaNow = wh.read(m.name).schema
-                // cast every appended column to the STORED type (the
-                // warehouse-coercion dbt relies on): an int batch landing
-                // in a long column must not write int-typed files
-                val aligned = schemaNow.fields.map(f =>
-                  if (src.columns.contains(f.name)) col(f.name).cast(f.dataType)
-                  else lit(null).cast(f.dataType).as(f.name))
-                // checkpoint blocks are invisible to Dataset.unpersist —
-                // free them even when the append throws, or each
-                // schema-change attempt pins a batch copy for the JVM's
-                // lifetime
-                try wh.append(m.name, src.select(aligned.toSeq: _*))
-                finally if (src ne df)
-                  org.apache.spark.sql.GraftSqlBridge.freeLocalCheckpoint(src)
+                    appendFrom(snap)
+                  }
+                else appendFrom(df)
               case multi =>
-                // merge/delete+insert scan the source more than once: snapshot
-                // it for identical inputs (temp-relation rule I8,
-                // incremental.sql:2-65); single-scan strategies skip the cache
-                val multiScan = multi == Incremental.Merge ||
-                  multi == Incremental.DeleteInsert ||
-                  multi.isInstanceOf[Incremental.MergePredicated]
-                val src = if (multiScan) df.cache() else df
-                multi match {
+                def build(src: DataFrame): Unit = multi match {
                   case Incremental.Merge =>
                     wh.writeSwap(m.name, Incremental.merge(target, src, keys))
                   case Incremental.MergePredicated(preds) =>
@@ -2052,17 +2031,23 @@ final class Registry(spark: SparkSession, wh: Warehouse) {
                       // new column. The slice is materialized first: the
                       // model may reference the existing target, whose file
                       // index dies in the swap.
-                      val snap = slice.localCheckpoint(true)
-                      wh.writeSwap(m.name,
-                        target.withColumn(pc, periodOf).repartition(col(pc)),
-                        partitionBy = Seq(pc))
-                      wh.overwritePeriods(m.name, snap, pc, periods)
-                      org.apache.spark.sql.GraftSqlBridge.freeLocalCheckpoint(snap)
+                      Pin.loan(slice.pinEager()) { snap =>
+                        wh.writeSwap(m.name,
+                          target.withColumn(pc, periodOf).repartition(col(pc)),
+                          partitionBy = Seq(pc))
+                        wh.overwritePeriods(m.name, snap, pc, periods)
+                      }
                     } else
                       wh.overwritePeriods(m.name, slice, pc, periods)
                   case _ => ()
                 }
-                if (multiScan) src.unpersist()
+                // merge/delete+insert scan the source more than once: pin
+                // it for identical inputs (temp-relation rule I8,
+                // incremental.sql:2-65); single-scan strategies skip the pin
+                val multiScan = multi == Incremental.Merge ||
+                  multi == Incremental.DeleteInsert ||
+                  multi.isInstanceOf[Incremental.MergePredicated]
+                if (multiScan) Pin.loan(df.pinLazy())(build) else build(df)
             }
           }
           wh.read(m.name)

@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.engine.Pin.PinOps
 
 /** Declared ROLLUP sidecars + subsumption-based aggregate rewrite — the
   * materialized-view-rewrite face of the warehouse, restricted to the
@@ -301,7 +302,7 @@ object Rollup {
     val tagged = df
       .groupingSets(subsets.map(_.map(col)), dims.map(col): _*)
       .agg(withGid.head, withGid.tail: _*)
-      .localCheckpoint(false)
+      .pinLazy()
     subsets.map { s =>
       val gid = (full ^ revBits(maskOf(s), n)).toLong
       s -> tagged.filter(col("__gid") === gid)

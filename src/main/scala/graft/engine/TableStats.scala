@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Sketches
+import graft.engine.Pin.PinOps
 
 /** Sketch-backed optimizer statistics — the ANALYZE face of the engine.
   *
@@ -342,7 +343,7 @@ object TableStats {
     // one pin for the 2-per-candidate reads below: the summary table is
     // cols * (k+1) rows by construction, so the checkpoint is free and
     // the stored sidecar is scanned ONCE (the bounded-frame discipline)
-    val sums = summaries.localCheckpoint(false)
+    val sums = summaries.pinLazy()
     // duplicate workload rows pre-aggregate by summing their weights:
     // the scoring below groups by the predicate tuple, so two identical
     // rows would otherwise collapse into ONE group whose joined summary
@@ -444,18 +445,18 @@ object TableStats {
     require(candidates.nonEmpty, "no candidate layout columns")
     val dec = (c: Column) => c.cast("decimal(38,0)")
     val one = lit(1L).cast("decimal(38,0)")
-    val sums = summaries.localCheckpoint(false)
-    val mcv0 = mcvs.localCheckpoint(false)
+    val sums = summaries.pinLazy()
+    val mcv0 = mcvs.pinLazy()
     val prof0 = counts.join(ndv, Seq("ts_col"), "left")
       .select(col("ts_col"), col("n_notnull"),
         coalesce(col("ndv"), lit(0L)).as("ndv"))
-      .localCheckpoint(false)
+      .pinLazy()
     // duplicate workload rows pre-aggregate by weight (the
     // clusterAdvisor discipline)
     val wl0 = workload.groupBy(col("wl_col"), col("wl_kind"), col("wl_lo"),
         col("wl_hi"), col("wl_value"))
       .agg(sum(col("wl_weight")).cast("long").as("wl_weight"))
-      .localCheckpoint(false)
+      .pinLazy()
     val perCand = candidates.map { cand =>
       val rangeScored = wl0.filter(col("wl_kind") === "range")
         .crossJoin(sums.filter(col("ts_col") === cand)
@@ -537,11 +538,11 @@ object TableStats {
       "candidates are 1- or 2-column layouts")
     val dec = (c: Column) => c.cast("decimal(38,0)")
     val one = lit(1L).cast("decimal(38,0)")
-    val sums = summaries.localCheckpoint(false)
+    val sums = summaries.pinLazy()
     val wl0 = boxes.groupBy(col("wl_col1"), col("wl_lo1"), col("wl_hi1"),
         col("wl_col2"), col("wl_lo2"), col("wl_hi2"))
       .agg(sum(col("wl_weight")).cast("long").as("wl_weight"))
-      .localCheckpoint(false)
+      .pinLazy()
     // per-predicate selectivities once, independent of candidates:
     // distinct (col, lo, hi) triples against the column's summary
     def selFrame(i: Int): DataFrame =
@@ -565,7 +566,7 @@ object TableStats {
     val scored = wl0
       .join(selFrame(1), Seq("wl_col1", "wl_lo1", "wl_hi1"))
       .join(selFrame(2), Seq("wl_col2", "wl_lo2", "wl_hi2"))
-      .localCheckpoint(false)
+      .pinLazy()
     val perCand = candidates.map { cand =>
       val name = cand.mkString("|")
       scored
@@ -651,6 +652,8 @@ object TableStats {
       // per family is the cheaper side of that trade — kept as is.
       ctx.wh.writeSwap(s"${name}__stats_counts", columnCounts(rel, cols))
       ctx.wh.writeSwap(s"${name}__stats_regs", columnRegisters(rel, cols, k))
+      // the register count the KMV estimate must be read at (readProfile)
+      ctx.wh.putMeta(s"${name}__stats_regs", k.toString)
       if (mcvCols.nonEmpty)
         ctx.wh.writeSwap(s"${name}__stats_mcv",
           mcvProfiles(rel, mcvCols, mcvK))
@@ -733,12 +736,17 @@ object TableStats {
   }
 
   /** One side's `(n_<suffix>, ndv_<suffix>)` profile row for a HOOK-
-    * analyzed table, by name — the planner-facing read.
+    * analyzed table, by name — the planner-facing read. The NDV estimate
+    * reads the registers at the k the hook recorded beside them.
     */
   def readProfile(wh: Warehouse, tableName: String, column: String,
-      suffix: String, k: Int = 256): DataFrame =
+      suffix: String): DataFrame = {
+    val regs = s"${tableName}__stats_regs"
+    val k = wh.getMeta(regs).getOrElse(throw new IllegalStateException(
+      s"$regs has no recorded register count — rewrite it with analyzeHook")).toInt
     sideProfile(wh.read(s"${tableName}__stats_counts"),
-      ndvEstimate(wh.read(s"${tableName}__stats_regs"), k), column, suffix)
+      ndvEstimate(wh.read(regs), k), column, suffix)
+  }
 
   /** Range selectivity `count(rows with value in [lo, hi])` from a
     * STORED quantile summary ([[graft.functions.QuantileSketch]]), never

@@ -3,6 +3,7 @@ package graft.engine
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.engine.Pin.PinOps
 
 /** Parquet-dir warehouse with the reference's backup/swap replace protocol
   * (dbt-adapters/macros/materializations/models/table.sql:5-22 and the
@@ -581,42 +582,35 @@ final class Warehouse(val root: String, spark: SparkSession) {
       writeSwap(name, withPart, partitionBy = Seq(partCol))
     } else {
       // the batch is scanned up to four times below (touched-ids collect +
-      // merge's three branches): cache it for identical inputs across
+      // merge's three branches): pin it for identical inputs across
       // scans — the temp-relation rule I8 the Registry enforces for the
       // same strategies; a nondeterministic source re-evaluated per branch
       // could disagree with itself about which keys matched
-      val batchC = withPart.cache()
-      try {
-      // STATIC partition pruning: the touched bucket ids (at most nBuckets
-      // values) collect in one tiny job and become an isin partition
-      // filter the scan provably honors — a broadcast semi-join looks
-      // equivalent but Spark's dynamic partition pruning declines it
-      // without stats, silently re-reading the whole target every batch
-      val touchedVals = batchC.select(partCol).distinct()
-        .collect().map(_.getInt(0)).toSeq
-      // lazy checkpoint: merge's three branches (updated/untouched/
-      // inserted) would otherwise scan the touched buckets three times;
-      // volume is bucket-bounded so caching is safe (unlike a full-table
-      // merge, where re-scanning parquet beats caching)
-      val target = touchedBucketScan(name, partCol, touchedVals)
-        .localCheckpoint(false)
-      val merged = Incremental.merge(target, batchC, keys, nullSafeKeys = nullSafeKeys)
-      // commit via the staged slice swap (stage to tmp, intent marker,
-      // per-bucket rename): a crash mid-commit is finished by recover() —
-      // the in-place dynamic partition overwrite this replaces could lose a
-      // touched bucket's pre-batch keys if it died between delete and land.
-      // Staging also means the plan never overwrites files it still reads,
-      // so the merge result needs no eager checkpoint.
-      try overwritePeriods(name, merged, partCol, touchedVals.map(_.toString))
-      finally
-        // Dataset.unpersist is a NO-OP for checkpoint storage (CacheManager
-        // never saw it) — free the RDD blocks directly, or a long-running
-        // stream accumulates dead touched-bucket copies every batch. In a
-        // finally: a commit that THROWS gets its batch replayed (the
-        // production story), and each failed attempt would otherwise pin
-        // its checkpoint blocks for the JVM's lifetime.
-        org.apache.spark.sql.GraftSqlBridge.freeLocalCheckpoint(target)
-      } finally batchC.unpersist()
+      Pin.loan(withPart.pinLazy()) { batchP =>
+        // STATIC partition pruning: the touched bucket ids (at most nBuckets
+        // values) collect in one tiny job and become an isin partition
+        // filter the scan provably honors — a broadcast semi-join looks
+        // equivalent but Spark's dynamic partition pruning declines it
+        // without stats, silently re-reading the whole target every batch
+        val touchedVals = batchP.select(partCol).distinct()
+          .collect().map(_.getInt(0)).toSeq
+        // lazy pin: merge's three branches (updated/untouched/inserted)
+        // would otherwise scan the touched buckets three times; volume is
+        // bucket-bounded so pinning is safe (unlike a full-table merge,
+        // where re-scanning parquet beats pinning). Released even when the
+        // commit throws: a failed batch is replayed, and each attempt would
+        // otherwise hold a touched-bucket copy.
+        Pin.loan(touchedBucketScan(name, partCol, touchedVals).pinLazy()) { target =>
+          val merged = Incremental.merge(target, batchP, keys, nullSafeKeys = nullSafeKeys)
+          // commit via the staged slice swap (stage to tmp, intent marker,
+          // per-bucket rename): a crash mid-commit is finished by recover() —
+          // the in-place dynamic partition overwrite this replaces could lose a
+          // touched bucket's pre-batch keys if it died between delete and land.
+          // Staging also means the plan never overwrites files it still reads,
+          // so the merge result needs no eager pin.
+          overwritePeriods(name, merged, partCol, touchedVals.map(_.toString))
+        }
+      }
     }
   }
 
@@ -721,9 +715,7 @@ final class Warehouse(val root: String, spark: SparkSession) {
     require(spark.catalog.tableExists(table), s"bucketed target $table missing")
     // same identical-inputs rule as upsertPartitioned: merge's three
     // branches each scan the source within the one saveAsTable action
-    val src = source.cache()
-    try mergeBucketedImpl(table, src, keys, nBuckets, genNow)
-    finally src.unpersist()
+    Pin.loan(source.pinLazy())(mergeBucketedImpl(table, _, keys, nBuckets, genNow))
   }
 
   /** Bucketed-table compaction: every [[appendBucketed]] batch adds one

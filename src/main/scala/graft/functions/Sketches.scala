@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.engine.Pin.PinOps
 
 /** Mergeable cardinality sketch (HyperLogLog, Flajolet et al. 2007) built
   * from pure column ops — the 100 TB COUNT DISTINCT path: registers are
@@ -516,7 +517,7 @@ object Sketches {
   def kmvJaccard(regsA: DataFrame, regsB: DataFrame, k: Int): DataFrame = {
     val u = kmvTake(regsA.select(col("kmv_key"), col("kmv_id"))
       .unionByName(regsB.select(col("kmv_key"), col("kmv_id"))), Nil, k)
-      .localCheckpoint(false) // feeds both membership joins and the count
+      .pinLazy() // feeds both membership joins and the count
     val inBoth = u
       .join(regsA.select(col("kmv_key")).distinct(), Seq("kmv_key"), "left_semi")
       .join(regsB.select(col("kmv_key")).distinct(), Seq("kmv_key"), "left_semi")
@@ -540,7 +541,7 @@ object Sketches {
   def kmvJaccardMatrix(regs: DataFrame, groupCol: String, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val keys = regs.select(col(groupCol).as("__g"), col("kmv_key")).distinct()
-      .localCheckpoint(false) // feeds the pair enumeration and both sides
+      .pinLazy() // feeds the pair enumeration and both sides
     val gs = keys.select(col("__g")).distinct()
     val pairs = gs.select(col("__g").as("g1"))
       .crossJoin(gs.select(col("__g").as("g2")))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.engine.Pin.PinOps
 
 /** Classic event-stream analytics over the `events` table (builder brief;
   * additive to the reference surface): ordered-funnel progression and
@@ -97,7 +98,7 @@ object EventAnalytics {
       .select(col(userCol).as("user_id"), col(typeCol).as("__t"),
         call_function("div", unix_micros(col(tsCol)), lit(1000000L))
           .as("__sec"))
-      .localCheckpoint(false) // re-read once per step
+      .pinLazy() // re-read once per step
     val firstQ = base.filter(col("__t") === steps.head)
       .select(col("user_id"), col("__sec")).distinct()
     val qualified = steps.tail.scanLeft(firstQ) { (prev, step) =>
@@ -146,7 +147,7 @@ object EventAnalytics {
         call_function("div", unix_micros(col(tsCol)), lit(1000000L))
           .as("__sec"))
       .distinct()
-      .localCheckpoint(false) // both join arms + the per-type denominator
+      .pinLazy() // both join arms + the per-type denominator
     val typeUsers = base.select(col("__u"), col("__t")).distinct()
       .groupBy(col("__t").as("from_type"))
       .agg(count(lit(1)).as("n_from_users"))
@@ -662,7 +663,7 @@ object EventAnalytics {
       .filter(col("user_id").isNotNull && col("day").isNotNull)
     val firstDay = base.groupBy(col("user_id"))
       .agg(min(col("day")).as("cohort_day"))
-      .localCheckpoint(false) // feeds the cohort sizes and the k join
+      .pinLazy() // feeds the cohort sizes and the k join
     val sizes = firstDay.groupBy(col("cohort_day"))
       .agg(count(lit(1)).as("n_users"))
     val rev = base.join(firstDay, "user_id")
@@ -745,7 +746,7 @@ object EventAnalytics {
       .select(userCol.cast("long").as("user"), dayCol.cast("long").as("day"))
       .filter(col("user").isNotNull && col("day").isNotNull)
       .distinct()
-      .localCheckpoint(false) // feeds the explode, DAU, and the max-day bound
+      .pinLazy() // feeds the explode, DAU, and the max-day bound
     val mx = ud.agg(max(col("day")).as("__md"))
     val wau = ud
       .select(col("user"),
@@ -790,7 +791,7 @@ object EventAnalytics {
       .withColumn("late_sec",
         call_function("div", max(col("__ts_us")).over(w) - col("__ts_us"),
           lit(1000000L)))
-      .localCheckpoint(false)
+      .pinLazy()
     val agg = scored.groupBy(col("part")).agg(
       count(lit(1)).as("n_events"),
       coalesce(sum(when(col("late_sec") > thresholdSec, 1L)), lit(0L))
@@ -820,7 +821,7 @@ object EventAnalytics {
       userCol: Column): DataFrame = {
     val tu = events.filter(typeCol.isNotNull && userCol.isNotNull)
       .select(typeCol.as("__t"), userCol.as("__u")).distinct()
-      .localCheckpoint(false) // feeds sizes, and both sides of the pair join
+      .pinLazy() // feeds sizes, and both sides of the pair join
     val sizes = tu.groupBy(col("__t")).agg(count(lit(1)).as("n"))
     val pairs = tu.select(col("__t").as("type_a"), col("__u"))
       .join(tu.select(col("__t").as("type_b"), col("__u")), Seq("__u"))
@@ -858,7 +859,7 @@ object EventAnalytics {
     def dec(c: Column): Column = c.cast("decimal(38,0)")
     val tu = events.filter(typeCol.isNotNull && userCol.isNotNull)
       .select(typeCol.as("__t"), userCol.as("__u")).distinct()
-      .localCheckpoint(false)
+      .pinLazy()
     val nAll = tu.select(col("__u")).distinct()
       .agg(count(lit(1)).as("__N"))
     val sizes = tu.groupBy(col("__t")).agg(count(lit(1)).as("n"))

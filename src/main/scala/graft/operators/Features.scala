@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.Stats
+import graft.engine.Pin.PinOps
 
 /** ML-feature engineering operators for the mart layer: RFM customer
   * segmentation, categorical target encoding, exact-arithmetic correlation,
@@ -59,7 +60,7 @@ object Features {
       // unpinned, each consumer re-derived the per-customer rollup from
       // raw orders (plan-audit r12: 6 raw scans -> 2); the pin holds the
       // entity rollup, orders-of-magnitude below the fact table
-      .localCheckpoint(false)
+      .pinLazy()
 
     def quintiles(value: Column, tag: String): DataFrame = {
       val pivots = Seq(200, 400, 600, 800).map(q =>
@@ -210,7 +211,7 @@ object Features {
     val dec = (c: Column) => c.cast("decimal(38,0)")
     val sparse = df.groupBy(aCol.as("a"), bCol.as("b"))
       .agg(count(lit(1)).as("observed"))
-      .localCheckpoint(false) // feeds the grid arms AND the marginals
+      .pinLazy() // feeds the grid arms AND the marginals
     val obs = sparse.select(col("a")).distinct()
       .crossJoin(sparse.select(col("b")).distinct())
       // null-safe re-join: a NULL category is a real cell and must find
@@ -459,7 +460,7 @@ object Features {
     // pin: kept feeds the marginals, both self-join arms, and (in
     // basketPairs) the basket count — unpinned, the distinct + size-guard
     // join recomputes per branch (the q217/q221 recompute lesson)
-    val kept = items.join(sized, Seq("basket")).localCheckpoint(false)
+    val kept = items.join(sized, Seq("basket")).pinLazy()
     val marginals = kept.groupBy(col("item")).agg(count(lit(1)).as("n_item"))
     (kept, marginals)
   }
@@ -971,7 +972,7 @@ object Features {
       // unpinned, each consumer replays the raw scan (4 scans per feature
       // at 100 TB); the pinned frame is value-domain-bounded, so the
       // checkpoint is free (the q217/q221 shared-subtree discipline)
-      .localCheckpoint(false)
+      .pinLazy()
     val tot = cum.agg(max(col("nl")).as("n"), max(col("pl")).as("n_pos"))
     // candidate splits: every distinct value except the last (an empty
     // right side is not a split). The divisor is nullif-guarded even
@@ -1032,7 +1033,7 @@ object Features {
       .withColumn("p_milli", call_function("div", col("c") * 1000L, col("q")))
       // pin: the (group, period) rollup feeds BOTH pivot sides — group-
       // domain-bounded, so the checkpoint is free
-      .localCheckpoint(false)
+      .pinLazy()
     val p1 = per.filter(col("__per") === 1L)
       .select(gcols ++ Seq(col("q").as("q1"), col("p_milli").as("p1_milli")): _*)
     val p2 = per.filter(col("__per") === 2L)

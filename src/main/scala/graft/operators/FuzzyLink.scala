@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.engine.Pin.PinOps
 
 /** Entity resolution / record linkage: approximate string matching between a
   * dirty feed and a master registry (or a table against itself) under an edit
@@ -282,7 +283,7 @@ object FuzzyLink {
       truthPairs: DataFrame): DataFrame = {
     def dec(c: Column): Column = c.cast("decimal(38,0)")
     val base = df.select(idCol.cast("long").as("__id"), blockCol.as("__blk"))
-      .localCheckpoint(false) // feeds the rollup and both truth joins
+      .pinLazy() // feeds the rollup and both truth joins
     val rowAgg = base.agg(count(lit(1)).as("n_rows"))
     val blockAgg = base.filter(col("__blk").isNotNull)
       .groupBy(col("__blk")).agg(count(lit(1)).as("__c"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.engine.Pin.PinOps
 
 /** dbt's generic declarative tests as engine operators
   * (dbt-adapters/macros/generic_test_sql/{unique,not_null,accepted_values,
@@ -73,12 +74,6 @@ object GenericTests {
     val sev = if (errorIf(n)) Error else if (warnIf(n)) Warn else Pass
     TestResult(name, n, sev)
   }
-
-  /** Unit-test compare (tests/helpers.sql:24-45 / unit.sql): symmetric
-    * multiset difference is empty.
-    */
-  def unitCompare(actual: DataFrame, expected: DataFrame): Boolean =
-    actual.exceptAll(expected).isEmpty && expected.exceptAll(actual).isEmpty
 
   /** dbt_utils.union_relations (the reference pins dbt_utils in
     * packages.yml): align relations BY NAME into the column superset,
@@ -341,7 +336,7 @@ object GenericTests {
           "quantize to fixed-point first (the cents recipe)")
     }
     val ra = QuantileSketch.qsRegisters(a.filter(column.isNotNull), Nil, column)
-      .localCheckpoint(false) // feeds fences, A buckets, A totals
+      .pinLazy() // feeds fences, A buckets, A totals
     val rb = QuantileSketch.qsRegisters(b.filter(column.isNotNull), Nil, column)
     val fences = QuantileSketch.qsQuantile(ra, Seq.empty, qMilles)
       .groupBy()
@@ -528,7 +523,7 @@ object GenericTests {
     // bounded, the dense-grid contract)
     val cells = base.groupBy(gcols :+ col("__sv"): _*)
       .agg(count(lit(1)).as("__c"))
-      .localCheckpoint(false)
+      .pinLazy()
     val globalDist = cells.groupBy(col("__sv"))
       .agg(sum(col("__c")).as("__gc"))
     val groups = cells.groupBy(gcols: _*).agg(sum(col("__c")).as("__ng"))

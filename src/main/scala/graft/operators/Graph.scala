@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.engine.Pin.PinOps
 
 /** Iterative link-graph analytics. PageRank is the classic corpus-quality
   * signal for web-scale training data (a page linked from high-rank pages
@@ -92,7 +93,7 @@ object Graph {
           (lit(teleport) +
             expr(s"$dampingPct * coalesce(in_mass, 0L) div 100")).as("pr"))
       i += 1
-      if (i % checkpointEvery == 0 && i < iterations) pr = pr.localCheckpoint()
+      if (i % checkpointEvery == 0 && i < iterations) pr = pr.pinEager()
     }
     pr
   }
@@ -145,7 +146,7 @@ object Graph {
             expr(s"$dampingPct * coalesce(in_mass, 0L) div 100")).as("pr"),
           col("__seed"))
       i += 1
-      if (i % checkpointEvery == 0 && i < iterations) pr = pr.localCheckpoint()
+      if (i % checkpointEvery == 0 && i < iterations) pr = pr.pinEager()
     }
     pr.select(col("node_id"), col("pr"))
   }
@@ -191,9 +192,9 @@ object Graph {
     // across them — materialize the graph structure once instead of
     // re-deriving it from the source scan in every job
     val e = edges.filter(col(srcCol).isNotNull && col(dstCol).isNotNull)
-      .select(src, dst).distinct().localCheckpoint()
+      .select(src, dst).distinct().pinEager()
     val nodes = e.select(col("src").as("node_id"))
-      .union(e.select(col("dst").as("node_id"))).distinct().localCheckpoint()
+      .union(e.select(col("dst").as("node_id"))).distinct().pinEager()
 
     // max-normalize by power-of-two shift: exact, and a no-op (k = 0)
     // while the maximum is still below 2*scale
@@ -212,7 +213,7 @@ object Graph {
           .withColumnRenamed(toCol, "node_id"),
         Seq("node_id"), "left")
         .select(col("node_id"), coalesce(col(outCol), lit(0L)).as(outCol))
-        .localCheckpoint(),
+        .pinEager(),
       outCol)
 
     var hub = nodes.select(col("node_id"), lit(scale).as("hub"))
@@ -244,7 +245,7 @@ object Graph {
     */
   def triangleCounts(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
     val und = normalizeUndirected(edges, aCol, bCol)
-      .localCheckpoint(false) // feeds nodes, degrees AND the orientation
+      .pinLazy() // feeds nodes, degrees AND the orientation
     val nodes = und.select(col("u").as("node_id"))
       .union(und.select(col("v").as("node_id"))).distinct()
     val deg = und.select(explode(array(col("u"), col("v"))).as("node_id"))
@@ -268,7 +269,7 @@ object Graph {
       // list — unpinned, each re-derived the degree joins from raw
       // (plan-audit r12: 4 raw scans, now 1; edge-sized pins are the
       // Graph-module convention, the neighborhoodFunction e pin)
-      .localCheckpoint(false)
+      .pinLazy()
     val e1 = oriented.select(col("lo"), col("hi").as("h1"), col("dhi").as("d1"))
     val e2 = oriented.select(col("lo"), col("hi").as("h2"), col("dhi").as("d2"))
     val wedges = e1.join(e2, Seq("lo"))
@@ -295,7 +296,7 @@ object Graph {
     */
   def clusteringCoefficients(edges: DataFrame, aCol: String,
       bCol: String): DataFrame = {
-    val und = normalizeUndirected(edges, aCol, bCol).localCheckpoint(false)
+    val und = normalizeUndirected(edges, aCol, bCol).pinLazy()
     val deg = und.select(explode(array(col("u"), col("v"))).as("node_id"))
       .groupBy(col("node_id")).agg(count(lit(1)).as("degree"))
     triangleCounts(und, "u", "v")
@@ -356,7 +357,7 @@ object Graph {
       e = e.join(keep.withColumnRenamed("n", "u"), Seq("u"), "left_semi")
         .join(keep.withColumnRenamed("n", "v"), Seq("v"), "left_semi")
       i += 1
-      if (i % checkpointEvery == 0 && i < rounds) e = e.localCheckpoint()
+      if (i % checkpointEvery == 0 && i < rounds) e = e.pinEager()
     }
     e.select(explode(array(col("u"), col("v"))).as("node_id"))
       .groupBy(col("node_id")).agg(count(lit(1)).as("deg"))
@@ -383,7 +384,7 @@ object Graph {
   def labelPropagation(edges: DataFrame, aCol: String, bCol: String,
       rounds: Int): DataFrame =
     labelPropagationUndirected(
-      normalizeUndirected(edges, aCol, bCol).localCheckpoint(), rounds)
+      normalizeUndirected(edges, aCol, bCol).pinEager(), rounds)
 
   /** [[labelPropagation]] over an ALREADY-normalized undirected edge set
     * (columns (u, v), deduped, self-loop-free — [[modularityScaledUndirected]]'s
@@ -398,7 +399,7 @@ object Graph {
     // re-derive the upstream edge join (rounds+1) times (the kCorePeel
     // lesson; measured 4.35 s -> ~1.6 s on the q211 shape at sf0.1)
     val ed = und.union(und.select(col("v").as("u"), col("u").as("v")))
-      .localCheckpoint()
+      .pinEager()
     var labels = ed.select(col("u").as("node")).distinct()
       .withColumn("label", col("node"))
     var i = 0
@@ -432,7 +433,7 @@ object Graph {
     // und feeds three consumers (m, internal edges, degrees) — checkpoint
     // or pay the upstream edge derivation three times
     modularityScaledUndirected(
-      normalizeUndirected(edges, aCol, bCol).localCheckpoint(), labels)
+      normalizeUndirected(edges, aCol, bCol).pinEager(), labels)
 
   /** [[modularityScaled]] over a pre-normalized (u, v) edge set — pair
     * with [[labelPropagationUndirected]] to share one checkpointed graph.
@@ -496,7 +497,7 @@ object Graph {
     // pin: the normalized edge set feeds THREE subtrees (both arms of the
     // degree union + the tagged join) — unpinned, the upstream join +
     // distinct recomputes per branch (the q217/q221 recompute lesson)
-    val und = normalizeUndirected(edges, aCol, bCol).localCheckpoint(false)
+    val und = normalizeUndirected(edges, aCol, bCol).pinLazy()
     val deg = und.select(col("u").as("node")
       ).unionAll(und.select(col("v").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
@@ -547,7 +548,7 @@ object Graph {
     require(rounds >= 1 && rounds <= 8, s"rounds: $rounds (each round is a full edge join)")
     val e = edges.select(col(srcCol).cast("long").as("s"),
       col(dstCol).cast("long").as("t")).filter(col("s").isNotNull && col("t").isNotNull)
-      .distinct().localCheckpoint(false)
+      .distinct().pinLazy()
     val nodes = e.select(col("s").as("node"))
       .unionByName(e.select(col("t").as("node"))).distinct()
     // round-0 registers: each node's ball is {itself} — one register
@@ -577,7 +578,7 @@ object Graph {
       .select(col("node"), transform(sequence(lit(0), lit(m - 1)),
         i => when(i === col("hll_bucket"), col("hll_rho"))
           .otherwise(lit(0)).cast("byte")).as("hll_regs"))
-      .localCheckpoint(false)
+      .pinLazy()
     // estimates read the UNPACKED sparse rows — probe nodes only, so the
     // explode is output-grain; hllEstimate and the register count see
     // exactly the rows the row-form kept (rho >= 1)
@@ -599,7 +600,7 @@ object Graph {
       regs = regs.unionByName(fromNeighbors)
         .groupBy(col("node"))
         .agg(byteMax(col("hll_regs")).as("hll_regs"))
-        .localCheckpoint(false)
+        .pinLazy()
       out = out.join(estimates(regs.filter(probe(col("node"))), r), "node")
     }
     val nbR = col(s"nb_$rounds")

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.engine.Pin.PinOps
 
 /** Sort-free global ranking (builder brief; the OLAP "rank every value"
   * primitive re-shaped for scale).
@@ -91,7 +92,7 @@ object Ranking {
     // discipline as Dedup.minhashSigned / bpeLearn).
     val parted = df.repartitionByRange(sortCols: _*)
       .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(false)
+      .pinLazy()
     val counts = parted.groupBy(col("__pid")).count()
       .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
     var cum = 0L
@@ -133,7 +134,7 @@ object Ranking {
     val parted = df.withColumn("__v", valueCol.cast("long"))
       .repartitionByRange(sortCols: _*)
       .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(false)
+      .pinLazy()
     val counts = parted.groupBy(col("__pid"))
       .agg(coalesce(sum(col("__v")), lit(0L)).as("__s"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
@@ -169,7 +170,7 @@ object Ranking {
     val base = df.select(keyCol.as("key"), valueCol.cast("long").as("value"))
       .filter(col("value").isNotNull)
       .groupBy(col("key")).agg(sum(col("value")).as("value"))
-      .localCheckpoint(false) // feeds the ranked pass and the total agg
+      .pinLazy() // feeds the ranked pass and the total agg
     val ranked = prefixSums(base,
       Seq(col("value").desc, col("key").asc), col("value"), "cum_value")
     val tot = base.agg(coalesce(sum(col("value")), lit(0L)).as("__t"))

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.engine.Pin.PinOps
 
 /** Embedding clustering for training-data pipelines (builder brief):
   * Lloyd's k-means over QUANTIZED integer vectors, the codebook-training
@@ -112,13 +113,12 @@ object Clustering {
       quantScale: Int = 1000): (DataFrame, Seq[Centroid]) = {
     require(k >= 1, s"k: $k")
     require(iters >= 0, s"iters: $iters")
-    // eager-materialized once and re-read by every round AND the returned
-    // plan — the caller that wants the blocks back frees them after
-    // materializing its result (GraftSqlBridge.freeLocalCheckpoint), the
-    // same contract as the q76 keyword scan
+    // lazy pin: computed once by the seed collect below, then re-read by
+    // every round AND by kMeansAssign's returned plan, so it is not
+    // released here; its blocks go when that plan becomes unreachable
     val q = df.select(col(idCol).cast("long").as("id"),
       graft.plans.Expressions.quantizeDoubles(col(vecCol), quantScale).as("v"))
-      .localCheckpoint(false)
+      .pinLazy()
     val seedRows = q.orderBy(col("id").asc).limit(k).collect()
     require(seedRows.length == k, s"need >= $k rows to seed, got ${seedRows.length}")
     val seedVecs = seedRows.map(r => Option(r.getSeq[Any](1)))

@@ -2,6 +2,8 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.engine.Pin
+import graft.engine.Pin.PinOps
 
 /** Document deduplication family for training-data pipelines (builder brief):
   * exact (hash-groupBy), n-gram Jaccard, MinHash+LSH, SimHash. Embedding
@@ -65,7 +67,7 @@ object Dedup {
         array_sort(TextAnalysis.shinglesFromTokens(col("__text"), col("__toks"), n)).as("sh"))
       .withColumn("n_sh", size(col("sh")))
       .withColumn("prefix", slice(col("sh"), lit(1), prefixLen))
-      .localCheckpoint(false) // shingle pass shared by all self-join branches
+      .pinLazy() // shingle pass shared by all self-join branches
     val pa = sh.select(col(blockCol), col("id").as("id_a"), col("n_sh").as("na_i"),
       explode(col("prefix")).as("tok"))
     val pb = sh.select(col(blockCol), col("id").as("id_b"), col("n_sh").as("nb_i"),
@@ -126,7 +128,7 @@ object Dedup {
         array_sort(TextAnalysis.shinglesFromTokens(col("__text"), col("__toks"), n)).as("sh"))
       .withColumn("n_sh", size(col("sh")))
       .withColumn("prefix", slice(col("sh"), lit(1), prefixLen))
-      .localCheckpoint(false) // shared by prefix/full/verify branches
+      .pinLazy() // shared by prefix/full/verify branches
     val pa = sh.select(col(blockCol), col("id").as("id_p"), col("n_sh").as("np_i"),
       explode(col("prefix")).as("tok"))
     val pb = sh.select(col(blockCol), col("id").as("id_f"), col("n_sh").as("nf_i"),
@@ -213,7 +215,7 @@ object Dedup {
       .select(col("id"),
         TextAnalysis.shinglesFromTokens(col("__text"), col("__toks"), n).as("sh"))
       .withColumn("sig", minhashSignature(col("sh"), k))
-      .localCheckpoint(false)
+      .pinLazy()
 
   /** (id, sig, band, value) band rows for a signed relation. */
   private[pipeline] def explodeSigBands(signed: DataFrame, bandSize: Int,
@@ -459,7 +461,7 @@ object Dedup {
     val toks = docs.filter(col(textCol).isNotNull)
       .select(col(idCol).cast("long").as("doc_id"),
         TextAnalysis.tokens(col(textCol)).as("toks"))
-      .localCheckpoint(false) // one tokenize pass shared by grams + reassembly
+      .pinLazy() // one tokenize pass shared by grams + reassembly
     // 0-based gram index p0: the gram at p0 covers 1-based tokens p0+1..p0+k
     val grams = toks.select(col("doc_id"),
       posexplode(TextAnalysis.ngramsFromTokens(col("toks"), k)).as(Seq("p0", "gram")))
@@ -552,7 +554,7 @@ object Dedup {
     }
 
     var edges = canon(pairs.select(col(aCol).cast("long").as("u"),
-      col(bCol).cast("long").as("v"))).localCheckpoint(false)
+      col(bCol).cast("long").as("v"))).pinLazy()
     var sig = checksum(edges)
 
     if (sig._1 <= driverUnionFindMaxEdges) {
@@ -580,7 +582,7 @@ object Dedup {
     var iter = 0
     var done = edges.isEmpty
     while (!done && iter < maxIter) {
-      val next = smallStar(largeStar(edges)).localCheckpoint(false)
+      val next = smallStar(largeStar(edges)).pinLazy()
       val nextSig = checksum(next) // materializes next's checkpoint
       // checksum equality is confirmed with ONE exact set comparison (both
       // sides are distinct canonical edges and the counts already match, so
@@ -588,10 +590,9 @@ object Dedup {
       // collision between different edge sets must keep iterating, never
       // end with wrong labels. Runs only at the (usually single) equality.
       done = nextSig == sig && next.exceptAll(edges).isEmpty
-      // the superseded generation's blocks are dead — free the checkpoint
-      // RDD directly (Dataset.unpersist is a no-op for checkpoint storage),
-      // else a long-converging graph pins up to maxIter edge-set copies
-      org.apache.spark.sql.GraftSqlBridge.freeLocalCheckpoint(edges)
+      // the superseded generation's blocks are dead — release them, else a
+      // long-converging graph pins up to maxIter edge-set copies
+      Pin.release(edges)
       edges = next; sig = nextSig; iter += 1
     }
     require(done, s"connectedComponents did not converge in $maxIter rounds")

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.engine.Warehouse
+import graft.engine.Pin.PinOps
 
 /** Corpus-delta (incremental) MinHash dedup: dedup NEW ARRIVALS against a
   * persisted signature index instead of recomputing the corpus — the
@@ -144,7 +145,7 @@ object IncrementalDedup {
     // delta) — no cross-branch dedup needed. Lazily checkpointed: consumed
     // twice below (pair verification + the semi-join id set), and each
     // consumer would otherwise re-run the band probes
-    val candidates = dvc.unionByName(dvd).localCheckpoint(false)
+    val candidates = dvc.unionByName(dvd).pinLazy()
 
     // verification shingles: delta's own + ONLY the index rows the
     // candidates touch (broadcast semi-join: the corpus-sized table is
@@ -158,7 +159,7 @@ object IncrementalDedup {
     // the index tables lazily, and appending the delta's rows first would
     // make the plan see its own output (delta-vs-delta pairs doubled)
     val verified = Dedup.verifyJaccard(candidates, shAll, threshold)
-      .localCheckpoint(true)
+      .pinEager()
 
     wh.putMeta(ingestMarker(name), "")
     wh.appendBucketed(bandsTable(name), dBanded, Seq("band", "value"), nBuckets)

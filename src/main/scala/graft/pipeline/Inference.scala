@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.engine.Pin.PinOps
 
 /** Distribution-comparison and agreement statistics in exact arithmetic —
   * the hypothesis-test layer an experimentation/data-quality platform runs
@@ -219,7 +220,7 @@ object Inference {
         lit(0L).as("cnt_a"), col("qs_weight").as("cnt_b")))
       .groupBy(col("v"))
       .agg(sum(col("cnt_a")).as("cnt_a"), sum(col("cnt_b")).as("cnt_b"))
-      .localCheckpoint(false) // feeds the totals agg AND the abs pass
+      .pinLazy() // feeds the totals agg AND the abs pass
     val totals = u.agg(count(lit(1)).as("n_cats"),
       coalesce(sum(col("cnt_a")), lit(0L)).as("n_a"),
       coalesce(sum(col("cnt_b")), lit(0L)).as("n_b"))
@@ -261,7 +262,7 @@ object Inference {
       .groupBy(col("v"))
       .agg(sum(col("cnt_a")).as("ca"), sum(col("cnt_b")).as("cb"))
       .filter(col("ca") + col("cb") > 0L)
-      .localCheckpoint(false) // feeds the totals agg AND the term pass
+      .pinLazy() // feeds the totals agg AND the term pass
     val totals = u.agg(count(lit(1)).as("n_cats"),
       coalesce(sum(col("ca")), lit(0L)).as("n_a"),
       coalesce(sum(col("cb")), lit(0L)).as("n_b"))
@@ -304,7 +305,7 @@ object Inference {
       .groupBy(col("v"))
       .agg(sum(col("cnt_a")).as("ca"), sum(col("cnt_b")).as("cb"))
       .filter(col("ca") + col("cb") > 0L)
-      .localCheckpoint(false) // feeds the totals agg AND the term pass
+      .pinLazy() // feeds the totals agg AND the term pass
     val totals = u.agg(count(lit(1)).as("n_cats"),
       coalesce(sum(col("ca")), lit(0L)).as("n_a"),
       coalesce(sum(col("cb")), lit(0L)).as("n_b"))
@@ -344,7 +345,7 @@ object Inference {
     // the union (register-bounded, so the pin is free; without it a
     // DERIVED live side re-scans its raw source per subtree)
     val lv = live.select(gcols ++ Seq(col("qs_value"), col("qs_weight")): _*)
-      .localCheckpoint(false)
+      .pinLazy()
     val groups = lv.select(gcols: _*).distinct()
     val u = lv.select(gcols ++ Seq(col("qs_value").as("v"),
         lit(0L).as("cnt_a"), col("qs_weight").as("cnt_b")): _*)
@@ -393,7 +394,7 @@ object Inference {
     // pin the live registers (the ksFromRegistersByGroup rationale: they
     // feed the group enumeration AND the union; register-bounded pin)
     val lv = live.select(gcols ++ Seq(col("qs_value"), col("qs_weight")): _*)
-      .localCheckpoint(false)
+      .pinLazy()
     val groups = lv.select(gcols: _*).distinct()
     val u = lv.select(gcols ++ Seq(col("qs_value").as("v"),
         lit(0L).as("cnt_a"), col("qs_weight").as("cnt_b")): _*)
@@ -538,7 +539,7 @@ object Inference {
       .agg(
         sum(when(inB, 0L).otherwise(1L)).as("cnt_a"),
         sum(when(inB, 1L).otherwise(0L)).as("cnt_b"))
-      .localCheckpoint(false) // feeds totals AND the terms window (shared-subtree pin)
+      .pinLazy() // feeds totals AND the terms window (shared-subtree pin)
     val byVal = Window.partitionBy(gcols: _*).orderBy(col("v").asc)
     // totals from the PRE-filter rollup, so a single-distinct-value group
     // (whose every row the __next_v filter removes) still carries its
@@ -761,7 +762,7 @@ object Inference {
       .agg(count(lit(1)).as("n_cell"))
       // pin: feeds both marginals AND the diag rollup (3 consumers = 3
       // raw-scan replays unpinned); label-domain-bounded, free
-      .localCheckpoint(false)
+      .pinLazy()
     val rowT = cells.groupBy(col("ra")).agg(sum(col("n_cell")).as("row_t"))
     val colT = cells.groupBy(col("rb")).agg(sum(col("n_cell")).as("col_t"))
     // marginal product over the label domain (small by definition); labels
@@ -801,7 +802,7 @@ object Inference {
     val cells = df.filter(aCol.isNotNull && bCol.isNotNull)
       .groupBy(aCol.as("ra"), bCol.as("rb"))
       .agg(count(lit(1)).as("n_cell"))
-      .localCheckpoint(false) // feeds both marginals and the diag rollup
+      .pinLazy() // feeds both marginals and the diag rollup
     val rowT = cells.groupBy(col("ra").as("cat")).agg(sum(col("n_cell")).as("row_t"))
     val colT = cells.groupBy(col("rb").as("cat")).agg(sum(col("n_cell")).as("col_t"))
     val marg = rowT.join(colT, Seq("cat"), "full_outer")
@@ -859,7 +860,7 @@ object Inference {
       .withColumn("pl", sum(col("pos")).over(w))
       // pin: feeds tot AND cand — without it the raw scan replays per
       // consumer; the frame is distinct-score-bounded (free checkpoint)
-      .localCheckpoint(false)
+      .pinLazy()
     val tot = cum.agg(max(col("nl")).as("n"), max(col("pl")).as("n_pos"))
     val cand = cum.crossJoin(broadcast(tot))
       .filter(col("n_pos") > 0L && col("n") > col("n_pos"))
@@ -871,7 +872,7 @@ object Inference {
           ((col("n") - col("nl")) - (col("n_pos") - col("pl"))) * 1000000L,
           col("n") - col("n_pos")))
       .withColumn("j_ppm", col("tpr_ppm") - col("fpr_ppm"))
-      .localCheckpoint(false) // feeds the max rollup AND the argmax pick
+      .pinLazy() // feeds the max rollup AND the argmax pick
     val best = cand.agg(max(col("j_ppm")).as("best_j_ppm"))
     val bestV = cand.crossJoin(broadcast(best))
       .filter(col("j_ppm") === col("best_j_ppm"))
@@ -913,7 +914,7 @@ object Inference {
         inCalibration.as("__cal"): _*)
       .groupBy(gcols :+ col("__cal") :+ col("__v"): _*)
       .agg(count(lit(1)).as("__n"))
-      .localCheckpoint(false) // feeds center, residual cut, and coverage
+      .pinLazy() // feeds center, residual cut, and coverage
     val calR = rr.filter(col("__cal"))
     // same integers as the raw-row form: sum(v) = sum(v*n), count = sum(n)
     val center = calR.groupBy(gcols: _*)
@@ -1088,7 +1089,7 @@ object Inference {
       .select(predictedCol.cast("long").as("__p"),
         trueCol.cast("long").as("__t"))
       .groupBy(col("__p"), col("__t")).agg(count(lit(1)).as("__n"))
-      .localCheckpoint(false) // class-vocab sized; feeds three rollups
+      .pinLazy() // class-vocab sized; feeds three rollups
     val classes = base.select(col("__p").as("cls"))
       .unionByName(base.select(col("__t").as("cls"))).distinct()
     val tp = base.filter(col("__p") === col("__t"))
@@ -1117,7 +1118,7 @@ object Inference {
         when(col("tp") * 2L + col("fp") + col("fn") > 0L,
           call_function("div", col("tp") * 2000000L,
             col("tp") * 2L + col("fp") + col("fn"))))
-      .localCheckpoint(false) // feeds the output union AND the macro agg
+      .pinLazy() // feeds the output union AND the macro agg
     val macroRow = perClass.agg(
         count(lit(1)).as("__k"),
         sum(col("tp")).as("tp"), sum(col("fp")).as("fp"),
@@ -1171,7 +1172,7 @@ object Inference {
       .agg(count(lit(1)).as("n"), sum(col("__y")).as("c"))
       .withColumn("raw_ppm",
         call_function("div", col("c") * 1000000L, col("n")))
-      .localCheckpoint(false) // B rows; feeds ranges and the output join
+      .pinLazy() // B rows; feeds ranges and the output join
     val b2 = buckets.select(col("bucket").as("__j"))
       .crossJoin(buckets.select(col("bucket").as("__k")))
       .filter(col("__j") <= col("__k"))
@@ -1214,7 +1215,7 @@ object Inference {
         sum(col("__p")).as("__s"),
         sum((col("__p") - col("__y") * 1000L) *
           (col("__p") - col("__y") * 1000L)).as("__sq"))
-      .localCheckpoint(false) // feeds the totals agg and the term pass
+      .pinLazy() // feeds the totals agg and the term pass
     val tot = buckets.agg(
       coalesce(sum(col("__n")), lit(0L)).as("n"),
       coalesce(sum(col("__c")), lit(0L)).as("__ct"),
@@ -1508,7 +1509,7 @@ object Inference {
         sum(when(success, 1L).otherwise(0L)).as("successes"))
       .withColumn("raw_ppm",
         call_function("div", col("successes") * 1000000L, col("n")))
-      .localCheckpoint(false) // feeds the prior agg AND the output join
+      .pinLazy() // feeds the prior agg AND the output join
     val g = rates.agg(count(lit(1)).as("__g"), sum(col("raw_ppm")).as("__sp"))
       .select(col("__g"),
         call_function("div", col("__sp"), col("__g")).as("m_ppm"))
@@ -1829,7 +1830,7 @@ object Inference {
       .filter(col("__tot") === nRaters.toLong)
       .select(col("item"))
     val kept = cells.join(complete, "item")
-      .localCheckpoint(false) // feeds the item-wise and label-wise rollups
+      .pinLazy() // feeds the item-wise and label-wise rollups
     val po = kept.agg(
       countDistinct(col("item")).as("n_items"),
       sum(dec(col("n_il")) * col("n_il")).as("__sq"))
@@ -1950,7 +1951,7 @@ object Inference {
         sum(when(!inPeriod1 && success, 1L).otherwise(0L)).as("c0"),
         sum(when(inPeriod1, 1L).otherwise(0L)).as("n1"),
         sum(when(inPeriod1 && success, 1L).otherwise(0L)).as("c1"))
-      .localCheckpoint(false) // feeds the totals agg and the term pass
+      .pinLazy() // feeds the totals agg and the term pass
     val tot = s.agg(coalesce(sum(col("n0")), lit(0L)).as("__N0"),
       coalesce(sum(col("c0")), lit(0L)).as("__C0"),
       coalesce(sum(col("n1")), lit(0L)).as("__N1"),
@@ -2394,7 +2395,7 @@ object Inference {
       .select(groupCol.as("__g"), valueCol.as("v"))
     val byValGroup = base.groupBy(col("v"), col("__g"))
       .agg(count(lit(1)).as("c_vg"))
-      .localCheckpoint(false) // feeds the value rollup AND the group join
+      .pinLazy() // feeds the value rollup AND the group join
     val byVal = byValGroup.groupBy(col("v")).agg(sum(col("c_vg")).as("c_v"))
     val w = Window.orderBy(col("v").asc)
     val guard = when(row_number().over(w) > maxDistinct,
@@ -2470,7 +2471,7 @@ object Inference {
       .otherwise(lit(0L))
     val ranked = base
       .withColumn("rank", row_number().over(w).cast("long") + guard)
-      .localCheckpoint(false) // feeds the k rollup AND the output
+      .pinLazy() // feeds the k rollup AND the output
     val m = ranked.agg(max(col("rank")).as("m"))
     val withM = ranked.crossJoin(broadcast(m))
     val k = withM
@@ -2514,7 +2515,7 @@ object Inference {
       .select(unitCol.as("__u"), valueCol.cast("string").as("__c"))
     val byUnitVal = ratings.groupBy(col("__u"), col("__c"))
       .agg(count(lit(1)).as("n_uc"))
-      .localCheckpoint(false) // feeds unit sizes AND pooled counts
+      .pinLazy() // feeds unit sizes AND pooled counts
     val unitSize = byUnitVal.groupBy(col("__u"))
       .agg(sum(col("n_uc")).as("m_u"))
       .filter(col("m_u") >= 2L)
@@ -2558,7 +2559,7 @@ object Inference {
       groupCol: Column): DataFrame = {
     val base = df.filter(valueCol.isNotNull && groupCol.isNotNull)
       .select(groupCol.as("__g"), valueCol.cast("long").as("__x"))
-      .localCheckpoint(false) // feeds the median rollup AND the flag pass
+      .pinLazy() // feeds the median rollup AND the flag pass
     val ranks = graft.operators.Ranking.valueRanks(base, Nil, col("__x"))
     val ng = ranks.agg(sum(col("n_rows")).as("__n"))
     val lo = call_function("div", col("__n") + 1L, lit(2L))
@@ -2741,7 +2742,7 @@ object Inference {
       .withColumn("__sk", count(lit(1)).over(Window.partitionBy(col("__s"))))
       .crossJoin(broadcast(k))
       .filter(col("__sk") === col("k"))
-      .localCheckpoint(false) // feeds the per-item AND per-subject rollups
+      .pinLazy() // feeds the per-item AND per-subject rollups
     val items = complete.groupBy(col("__i"))
       .agg(count(lit(1)).as("n"), sum(dec(col("y"))).as("s"),
         sum(dec(col("y")) * col("y")).as("q"))
@@ -2791,7 +2792,7 @@ object Inference {
       .join(broadcast(colTargets.select(col("y"), col("target").as("ct"))),
         "y")
       // pin the sample rollup: every sweep below reads it through two arms
-      .localCheckpoint(false)
+      .pinLazy()
     var w = cells.withColumn("w", col("n") * 1000000L)
     for (_ <- 1 to iterations) {
       val rs = w.groupBy(col("x")).agg(sum(col("w")).as("__rs"))
@@ -2811,7 +2812,7 @@ object Inference {
         // q217/q221 recompute flaw, measured 16.4 s -> ~1 s at sf0.1).
         // The pinned frame is category-domain-sized; the checkpoint is
         // trivially cheap and keeps every sweep evaluated exactly once.
-        .localCheckpoint(false)
+        .pinLazy()
     }
     w.select(col("x"), col("y"), col("n").as("n_sample"),
       col("w").as("weight_micro"))
@@ -2868,7 +2869,7 @@ object Inference {
     val cells = df.filter(xCol.isNotNull && yCol.isNotNull)
       .groupBy(xCol.cast("long").as("x"), yCol.cast("long").as("y"))
       .agg(count(lit(1)).as("c"))
-      .localCheckpoint(false) // feeds both join arms and both marginals
+      .pinLazy() // feeds both join arms and both marginals
     val pairs = cells.select(col("x").as("xa"), col("y").as("ya"),
       col("c").as("ca"))
       .join(cells.select(col("x").as("xb"), col("y").as("yb"),
@@ -2916,7 +2917,7 @@ object Inference {
     val cells = df.filter(aCol.isNotNull && bCol.isNotNull)
       .groupBy(aCol.cast("long").as("ra"), bCol.cast("long").as("rb"))
       .agg(count(lit(1)).as("c"))
-      .localCheckpoint(false)
+      .pinLazy()
     val w = dec(col("ra") - col("rb")) * dec(col("ra") - col("rb"))
     val obs = cells.agg(sum(col("c")).as("n"),
       sum(w * col("c")).as("wo"))
@@ -3126,7 +3127,7 @@ object Inference {
     val cells = df.filter(aCol.isNotNull && bCol.isNotNull)
       .groupBy(aCol.cast("long").as("ra"), bCol.cast("long").as("rb"))
       .agg(count(lit(1)).as("c"))
-      .localCheckpoint(false) // feeds both pairing arms and the total
+      .pinLazy() // feeds both pairing arms and the total
     val pairs = cells.filter(col("ra") < col("rb"))
       .select(col("ra"), col("rb"), col("c").as("c_ij"))
       .join(cells.filter(col("ra") > col("rb"))
@@ -3170,7 +3171,7 @@ object Inference {
       .agg(count(lit(1)).as("c"))
       // the sparse rollup feeds the densified grid AND both tie/size
       // rollups — pin it (the q217/q221 recompute discipline)
-      .localCheckpoint(false)
+      .pinLazy()
     // DENSIFY to the full (value x group) grid before the cumulative
     // passes: a group's running total must be visible at values where it
     // has no observation of its own, or the per-value lower-group prefix

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.Pin.PinOps
 
 /** Multimodal column plumbing (builder brief): media as opaque `binary`
   * columns with typed metadata, batch feature extraction via `mapPartitions`
@@ -190,7 +191,7 @@ object Multimodal {
       minSharedHashes: Int = 2): DataFrame = {
     require(minSharedHashes >= 1, s"minSharedHashes: $minSharedHashes")
     val h = frameHashes.select(col("doc_id"), col("b0"), col("b1"),
-      col("b2"), col("b3")).distinct().localCheckpoint(false)
+      col("b2"), col("b3")).distinct().pinLazy()
     val l = h.select(col("doc_id").as("id_a"), col("b0"), col("b1"),
       col("b2"), col("b3"))
     val r = h.select(col("doc_id").as("id_b"), col("b0"), col("b1"),
@@ -231,7 +232,7 @@ object Multimodal {
     // upstream decode/codec pass is not re-executed per join branch (the
     // winnowing shared-fingerprint discipline; 6.1 -> ~2 s on the q271
     // bench shape, where the input is a real PNG decode)
-    val pinned = hashes.localCheckpoint(false)
+    val pinned = hashes.pinLazy()
     val l = pinned.select(col("doc_id").as("id_a"),
       col("b0").as("a0"), col("b1").as("a1"), col("b2").as("a2"), col("b3").as("a3"))
     val r = pinned.select(col("doc_id").as("id_b"),
@@ -590,7 +591,7 @@ object Multimodal {
   def bandedNearDupPairs(hashes: DataFrame, minSharedBands: Int = 3): DataFrame = {
     require(minSharedBands >= 1 && minSharedBands <= 4,
       s"minSharedBands: $minSharedBands")
-    val pinned = hashes.localCheckpoint(false)
+    val pinned = hashes.pinLazy()
     val l = pinned.select(col("doc_id").as("id_a"),
       col("b0").as("a0"), col("b1").as("a1"), col("b2").as("a2"), col("b3").as("a3"))
     val r = pinned.select(col("doc_id").as("id_b"),

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.engine.Pin.PinOps
 
 /** Deterministic sampling for training-data pipelines (builder brief):
   * reproducible across runs, engines and partitionings — the sample is a
@@ -565,7 +566,7 @@ object Sampling {
       .select(keyCol.cast("string").as("key"),
         coalesce(weightCol.cast("long"), lit(0L)).as("weight"))
       .groupBy(col("key")).agg(sum(col("weight")).as("weight"))
-      .localCheckpoint(false) // feeds the total agg and the ranked pass
+      .pinLazy() // feeds the total agg and the ranked pass
     val tot = base.agg(coalesce(sum(col("weight")), lit(0L)).as("__w"))
     val quotas = base.crossJoin(broadcast(tot))
       .withColumn("base_slots",

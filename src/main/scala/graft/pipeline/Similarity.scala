@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.engine.Pin.PinOps
 
 /** Embedding similarity search (builder brief): brute-force cosine top-k as
   * the correctness baseline, sign-bit LSH bucketing as the scale path.
@@ -244,7 +245,7 @@ object Similarity {
       dims.head >= 1, s"dims must be ascending positive: $dims")
     val full = bruteForceTopK(corpus, queries, k, idCol, vecCol)
       .select(col("query_id"), col("neighbor_id"))
-      .localCheckpoint(false)
+      .pinLazy()
     val kFull = full.groupBy(col("query_id")).agg(count(lit(1)).as("__kf"))
     dims.map { dp =>
       def trunc(df: DataFrame) =
@@ -451,7 +452,7 @@ object Similarity {
     require(kOut >= 1 && kOut <= kCand, s"kOut $kOut vs kCand $kCand")
     require(lambdaMilli >= 0 && lambdaMilli <= 1000, s"lambdaMilli: $lambdaMilli")
     val cands = bruteForceTopK(corpus, queries, kCand, idCol, vecCol)
-      .localCheckpoint(false)
+      .pinLazy()
     val vecs = corpus.select(col(idCol).cast("long").as("nid"),
       quantize(col(vecCol)).as("vv"))
       .withColumn("vn", dotQ(col("vv"), col("vv")))
@@ -468,7 +469,7 @@ object Similarity {
           dotQ(col("va"), col("vb")).cast("double") /
             (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
           .as("sim"))
-      .localCheckpoint(false)
+      .pinLazy()
     var selected = cands.filter(col("rank") === 1)
       .select(col("query_id"), col("neighbor_id"),
         lit(1L).as("mmr_rank"), col("score").as("mmr_score"))

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.engine.Pin.PinOps
 
 /** Distribution statistics over the corpus (builder brief; additive to the
   * reference surface). Exact — not sketch-based — but shaped so the heavy
@@ -149,7 +150,7 @@ object Stats {
     val rr = df.filter(valueCol.isNotNull)
       .groupBy(gcols :+ valueCol.cast("long").as("qs_value"): _*)
       .agg(count(lit(1)).as("qs_weight"))
-      .localCheckpoint(false) // feeds the median AND the deviation rollup
+      .pinLazy() // feeds the median AND the deviation rollup
     val med = graft.functions.QuantileSketch
       .qsQuantile(rr, groupCols, Seq(500))
       .select(gcols :+ col("value").as("med"): _*)
@@ -265,7 +266,7 @@ object Stats {
     val gcols = groupCols.map(col)
     val daily = df.groupBy(gcols :+ dayCol.cast("long").as("day"): _*)
       .agg(sum(valueCol.cast("long")).as("y"))
-      .localCheckpoint(false) // feeds the spine agg AND the dense join (plan-audit pin, r11)
+      .pinLazy() // feeds the spine agg AND the dense join (plan-audit pin, r11)
     val spine = daily.groupBy(gcols: _*)
       .agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
       .select(gcols :+ explode(sequence(col("mn"), col("mx"))).as("day"): _*)
@@ -327,7 +328,7 @@ object Stats {
     val daily = df.groupBy(dayCol.cast("long").as("day"))
       .agg(sum(when(!inY, valueCol.cast("long")).otherwise(0L)).as("x"),
         sum(when(inY, valueCol.cast("long")).otherwise(0L)).as("y"))
-      .localCheckpoint(false) // feeds the spine agg AND the dense join (plan-audit pin, r11)
+      .pinLazy() // feeds the spine agg AND the dense join (plan-audit pin, r11)
     // span guard (module contract): the spine feeds a single-partition
     // ordered window, safe only because the calendar bounds it — a
     // timestamp-grain mis-call must raise, not explode
@@ -482,7 +483,7 @@ object Stats {
 
     val daily = df.groupBy(gcols :+ dayCol.cast("long").as("day"): _*)
       .agg(sum(valueCol.cast("long")).as("y"))
-      .localCheckpoint(false) // feeds the spine agg AND the dense join (plan-audit pin, r11)
+      .pinLazy() // feeds the spine agg AND the dense join (plan-audit pin, r11)
     val spine = daily.groupBy(gcols: _*)
       .agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
       .select(gcols :+ explode(sequence(col("mn"), col("mx"))).as("day_idx"): _*)
@@ -531,7 +532,7 @@ object Stats {
     val gcols = groupCols.map(col)
     val daily = df.groupBy(gcols :+ dayCol.cast("long").as("day"): _*)
       .agg(sum(valueCol.cast("long")).as("y"))
-      .localCheckpoint(false) // feeds the spine agg AND the dense join (plan-audit pin, r11)
+      .pinLazy() // feeds the spine agg AND the dense join (plan-audit pin, r11)
     val spine = daily.groupBy(gcols: _*)
       .agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
       .select(gcols :+ explode(sequence(col("mn"), col("mx"))).as("day"): _*)
@@ -592,7 +593,7 @@ object Stats {
     val gcols = groupCols.map(col)
     val daily = df.groupBy(gcols :+ dayCol.cast("long").as("day"): _*)
       .agg(sum(valueCol.cast("long")).as("y"))
-      .localCheckpoint(false) // feeds the spine agg AND the dense join (plan-audit pin, r11)
+      .pinLazy() // feeds the spine agg AND the dense join (plan-audit pin, r11)
     val spine = daily.groupBy(gcols: _*)
       .agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
       .select(gcols :+ explode(sequence(col("mn"), col("mx"))).as("day"): _*)
@@ -719,7 +720,7 @@ object Stats {
         col("fc_micro")): _*)
     val daily = df.groupBy(gcols :+ dayCol.cast("long").as("day"): _*)
       .agg(sum(valueCol.cast("long")).as("y"))
-      .localCheckpoint(false) // feeds the spine agg AND the dense join (plan-audit pin, r11)
+      .pinLazy() // feeds the spine agg AND the dense join (plan-audit pin, r11)
     val spine = daily.groupBy(gcols: _*)
       .agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
       .select(gcols :+ explode(sequence(col("mn"), col("mx"))).as("day"): _*)
@@ -886,7 +887,7 @@ object Stats {
     val daily = df.groupBy(gcols :+ dayCol.cast("long").as("day"): _*)
       .agg(sum(valueCol.cast("long")).as("y"))
       .withColumn("y", col("y") + guard)
-      .localCheckpoint(false) // feeds pairs, ties, and n — one materialization
+      .pinLazy() // feeds pairs, ties, and n — one materialization
     val a = daily.select(gcols ++ Seq(col("day").as("di"), col("y").as("yi")): _*)
     val b = daily.select(gcols ++ Seq(col("day").as("dj"), col("y").as("yj")): _*)
     // broadcast the right side: the day table is calendar-bounded, so it
@@ -956,7 +957,7 @@ object Stats {
       .withColumn("__w",
         greatest(lit(1L), call_function("div",
           col("__hi") - col("__lo"), lit(nBuckets)) + 1L))
-      .localCheckpoint(false) // one row per group; feeds output + both passes
+      .pinLazy() // one row per group; feeds output + both passes
     val sStat = gstats.select(gcols :+ col("s_stat"): _*)
     val bucketed = slopes
       .join(broadcast(gstats.select(gcols :+ col("__lo") :+ col("__w") :+
@@ -1128,7 +1129,7 @@ object Stats {
     val gcols = groupCols.map(col)
     val daily = df.groupBy(gcols :+ dayCol.cast("long").as("__d"): _*)
       .agg(sum(valueCol.cast("long")).as("__v"))
-      .localCheckpoint(false) // feeds the dow rollup and the totals
+      .pinLazy() // feeds the dow rollup and the totals
     val byDow = daily
       .groupBy(gcols :+ pmod(col("__d"), lit(7L)).as("dow"): _*)
       .agg(count(lit(1)).as("n_days"), sum(col("__v")).as("dow_sum"))
@@ -1245,7 +1246,7 @@ object Stats {
       .groupBy(catCol.as("__c"))
       .agg(sum(when(inA, 1L).otherwise(0L)).as("__ca"),
         sum(when(inA, 0L).otherwise(1L)).as("__cb"))
-      .localCheckpoint(false) // feeds the totals agg AND the abs pass
+      .pinLazy() // feeds the totals agg AND the abs pass
     val totals = counts.agg(count(lit(1)).as("n_cats"),
       coalesce(sum(col("__ca")), lit(0L)).as("n_a"),
       coalesce(sum(col("__cb")), lit(0L)).as("n_b"))
@@ -1310,7 +1311,7 @@ object Stats {
     val gcols = groupCols.map(col)
     val daily = df.groupBy(gcols :+ dayCol.cast("long").as("day"): _*)
       .agg(sum(valueCol.cast("long")).as("y"))
-      .localCheckpoint(false) // feeds all three join arms
+      .pinLazy() // feeds all three join arms
     val lag1 = daily.select(gcols :+ (col("day") + 1L).as("day") :+
       col("y").as("y1"): _*)
     val lagP = daily.select(gcols :+ (col("day") + period.toLong).as("day") :+
@@ -1378,7 +1379,7 @@ object Stats {
     val gcols = groupCols.map(col)
     val daily = df.groupBy(gcols :+ dayCol.cast("long").as("day"): _*)
       .agg(sum(valueCol.cast("long")).as("y"))
-      .localCheckpoint(false) // feeds all three join arms
+      .pinLazy() // feeds all three join arms
     val lag1 = daily.select(gcols :+ (col("day") + 1L).as("day") :+
       col("y").as("y1"): _*)
     val lagP = daily.select(gcols :+ (col("day") + period.toLong).as("day") :+
@@ -1499,7 +1500,7 @@ object Stats {
     val daily = df.filter(valueCol.isNotNull)
       .groupBy(gcols :+ dayCol.cast("long").as("day"): _*)
       .agg(sum(valueCol.cast("long")).as("y"))
-      .localCheckpoint(false) // feeds the spine agg AND the dense join
+      .pinLazy() // feeds the spine agg AND the dense join
     val spine = daily.groupBy(gcols: _*)
       .agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
       .select(gcols :+ explode(sequence(col("mn"), col("mx"))).as("day"): _*)
@@ -1518,7 +1519,7 @@ object Stats {
       .filter(col("__n") === period.toLong)
       .withColumn("detrended_milli", col("y") * 1000L - col("trend_milli"))
       .withColumn("__phase", pmod(col("day"), lit(period.toLong)))
-      .localCheckpoint(false) // feeds the phase rollup AND the output join
+      .pinLazy() // feeds the phase rollup AND the output join
     val sgnDiv = (num: Column, den: Column) =>
       signum(num).cast("long") *
         call_function("div", abs(num), den)
@@ -1555,7 +1556,7 @@ object Stats {
       .groupBy(gcols :+ dayCol.cast("long").as("day"): _*)
       .agg(count(lit(1)).as("n"),
         sum(when(defectCol, 1L).otherwise(0L)).as("pos"))
-      .localCheckpoint(false) // feeds the centerline AND the output
+      .pinLazy() // feeds the centerline AND the output
     val center = daily.groupBy(gcols: _*)
       .agg(sum(col("n")).as("__tn"), sum(col("pos")).as("__tp"))
       .withColumn("pbar_ppm",
@@ -1595,7 +1596,7 @@ object Stats {
     val daily = df.filter(countCol.isNotNull)
       .groupBy(gcols :+ dayCol.cast("long").as("day"): _*)
       .agg(sum(countCol.cast("long")).as("x"))
-      .localCheckpoint(false) // feeds the spine agg AND the dense join
+      .pinLazy() // feeds the spine agg AND the dense join
     val spine = daily.groupBy(gcols: _*)
       .agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
       .select(gcols :+ explode(sequence(col("mn"), col("mx"))).as("day"): _*)

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.engine.Pin.PinOps
 
 /** Text-analysis operators for large-scale training-data pipelines (builder
   * brief; additive to the reference surface, designed stateless/partitionable
@@ -186,7 +187,7 @@ object TextAnalysis {
       // materialization the gram-hash pipeline re-runs per consumer
       // (measured ~2x q166); compact (id, fp) rows checkpoint cheaply —
       // the invertedIndex discipline
-      .localCheckpoint(false)
+      .pinLazy()
     val keep = fps.groupBy(col("fp")).agg(count(lit(1)).as("__df"))
       .filter(col("__df") <= maxDocFreq)
       .select(col("fp"))
@@ -265,7 +266,7 @@ object TextAnalysis {
       .select(col(idCol).cast("long").as("doc"),
         explode(tokens(col(textCol))).as("token"))
       .groupBy(col("token"), col("doc")).agg(count(lit(1)).as("n"))
-      .localCheckpoint(false) // shared by the df roll-up and the posting cap
+      .pinLazy() // shared by the df roll-up and the posting cap
     val dfs = perDoc.groupBy(col("token")).agg(count(lit(1)).as("df"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("token")).orderBy(col("doc").asc)
@@ -376,7 +377,7 @@ object TextAnalysis {
     val und = co.select(col("a"), col("b"))
       .union(co.select(col("b").as("a"), col("a").as("b")))
       .distinct()
-      .localCheckpoint(false)
+      .pinLazy()
     val words = und.select(col("a").as("w")).union(und.select(col("b").as("w")))
     val ids = graft.operators.Ranking.valueRanks(words, Nil, col("w"))
       .select(col("v").as("w"), col("dense_rnk").as("wid"))
@@ -499,7 +500,7 @@ object TextAnalysis {
     // the q336 pinned-gram-pass precedent)
     val perDocR = bi.groupBy(col("doc_id"), col("__ref"), col("__w1"), col("__g"))
       .agg(count(lit(1)).as("__c"))
-      .localCheckpoint(false)
+      .pinLazy()
     val refR = perDocR.filter(col("__ref"))
     val bigramCounts = refR.groupBy(col("__g")).agg(sum(col("__c")).as("__cbg"))
     val ctxCounts = refR.groupBy(col("__w1")).agg(sum(col("__c")).as("__cw1"))
@@ -582,7 +583,7 @@ object TextAnalysis {
       .select(explode(tokens(col(textCol))).as("__w"))
       .filter(length(col("__w")) > 0)
       .groupBy(col("__w")).agg(count(lit(1)).as("__freq"))
-      .localCheckpoint(false) // reused k times; keep the corpus scan out of the loop
+      .pinLazy() // reused k times; keep the corpus scan out of the loop
     val learned = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
     var step = 0
     var exhausted = false
@@ -1102,7 +1103,7 @@ object TextAnalysis {
     // recomputes per branch (r9 bench: 5.3 s -> the recompute was most of
     // it). Lazy localCheckpoint = materialized once on first use.
     val types = bi.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(false)
+      .pinLazy()
     val byW1 = types.groupBy(col("w1"))
       .agg(sum(col("c")).as("__cw1"), count(lit(1)).as("__n1r"))
     val byW2 = types.groupBy(col("w2")).agg(count(lit(1)).as("__n1l"))
@@ -1144,7 +1145,7 @@ object TextAnalysis {
       .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
     val ranked = graft.operators.Ranking
       .globalRowNumbers(counts, Seq(col("cnt").desc, col("tok").asc), "rk")
-      .localCheckpoint(false)
+      .pinLazy()
     vocabSizes.map { v =>
       ranked.agg(
           coalesce(sum(when(col("rk") < v, col("cnt"))), lit(0L))
@@ -1184,7 +1185,7 @@ object TextAnalysis {
     // single-split inputs: spread the tokenize (Sources.fanOut scaladoc)
     val docs = graft.sources.Sources.fanOut(df).filter(textCol.isNotNull)
       .select(orderCol.cast("long").as("__ord"), textCol.as("__text"))
-      .localCheckpoint(false) // feeds the doc-rank rollup AND the explode
+      .pinLazy() // feeds the doc-rank rollup AND the explode
     val nDocs = docs.agg(count(lit(1)).as("__n"))
     // rank of each doc in __ord order, from a distinct-order rollup via
     // range-partitioned row numbers (never a single-partition window)
@@ -1367,7 +1368,7 @@ object TextAnalysis {
     val words = toks.filter(!col("__stop"))
       .select(col("__doc"), col("__seg"), col("__pos"),
         lower(col("__w")).as("__w"))
-      .localCheckpoint(false) // feeds phrase lengths, word stats, and scores
+      .pinLazy() // feeds phrase lengths, word stats, and scores
     val phLen = words.groupBy(col("__doc"), col("__seg"))
       .agg(count(lit(1)).as("__len"))
     val wordStats = words.join(phLen, Seq("__doc", "__seg"))

@@ -9,6 +9,7 @@ import graft.functions.Functions._
 import graft.operators.{GapEngine, GapExceptions, GenericTests, MeasureSpec, Scenario, TriStateRules}
 import graft.engine.Incremental
 import graft.sources.Sources.table
+import graft.engine.Pin.PinOps
 
 /** The reference DAG (stg -> int_gap_col_status -> violations -> exceptions)
   * and every §2 relational operator, instantiated over the driver's TPC-H-ish
@@ -365,7 +366,7 @@ object CoreQueries extends QuerySet {
       // model — lazy localCheckpoint materializes the gap+violations pass
       // once instead of twice (I8's identical-inputs rule, applied to a query)
       val withKey = GapExceptions.withExceptionKey(gapViolations(s, d))
-        .localCheckpoint(false)
+        .pinLazy()
       val existing = withKey.filter(col("member_id") % 2 === 0).select("exception_key")
       GapExceptions.newExceptions(withKey, existing)
     }, Some(

@@ -9,6 +9,7 @@ import graft.operators.GenericTests
 import graft.pipeline.Similarity
 import graft.sources.Sources
 import graft.sources.Sources.table
+import graft.engine.Pin.PinOps
 
 /** Oracle coverage for the operators that previously had only spec-level
   * tests: I1 append, I4 insert_overwrite, J9 null-safe merge keys, P7 where
@@ -93,10 +94,10 @@ object CoverageQueries extends QuerySet {
       // I8 identical-inputs rule: merge reads each side from three branches
       // (updated/untouched/inserted) — materialize the tiny aggregates once
       val tgt = agg(table(s, d, "orders").filter(col("o_orderdate") < lit("1999-01-01").cast("date")))
-        .localCheckpoint(false)
+        .pinLazy()
       val src = agg(table(s, d, "orders").filter(col("o_orderdate") >= lit("1999-01-01").cast("date") &&
         (col("o_custkey") % 1000) % 2 === 0))
-        .localCheckpoint(false)
+        .pinLazy()
       Incremental.merge(tgt, src, Seq("bucket_key"), nullSafeKeys = true)
     }, Some(
       """WITH tgt AS (

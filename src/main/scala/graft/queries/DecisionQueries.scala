@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.Features
 import graft.pipeline.{Inference, Stats}
 import graft.sources.Sources.{events, table}
+import graft.engine.Pin.PinOps
 
 /** Round-10 continuation battery: the classical decision-statistics layer
   * (one-way ANOVA, Kruskal-Wallis, McNemar, Brown-Forsythe, Cohen's d,
@@ -527,7 +528,7 @@ object DecisionQueries extends QuerySet {
         .filter(col("l_quantity") >= 45)
         .select(col("o_custkey").as("c"), col("l_suppkey").as("s"))
         .distinct()
-        .localCheckpoint(false) // feeds registers AND the probe panel
+        .pinLazy() // feeds registers AND the probe panel
       val supRegs = Sketches.hllRegisters(edges, Seq("s"), col("c"))
       val probes = edges.filter(col("c") % 100 === 0)
       val merged = probes.join(supRegs, "s")
@@ -621,7 +622,7 @@ object DecisionQueries extends QuerySet {
         .select(col("source"),
           explode(TA.ngramsFromTokens(TA.tokens(col("text")), 2)).as("tok"))
         .distinct()
-        .localCheckpoint(false) // feeds sizes AND both self-join arms
+        .pinLazy() // feeds sizes AND both self-join arms
       val sizes = v.groupBy(col("source")).agg(count(lit(1)).as("nv"))
       val inter = v.as("a")
         .join(v.as("b"),
@@ -1063,7 +1064,7 @@ object DecisionQueries extends QuerySet {
       val pairDays = events(s, d)
         .groupBy(col("user_id"), col("event_type"))
         .agg(min(to_date(col("ts"))).as("d_min"))
-        .localCheckpoint(false)
+        .pinLazy()
       val t0 = pairDays.agg(min(col("d_min")).as("d0"))
       val firstWeek = pairDays.crossJoin(broadcast(t0))
         .filter(datediff(col("d_min"), col("d0")) < 7)
@@ -1224,7 +1225,7 @@ object DecisionQueries extends QuerySet {
         .join(table(s, d, "lineitem"), col("o_orderkey") === col("l_orderkey"))
         .select(substring(col("o_orderpriority"), 1, 1).cast("long").as("x"),
           col("l_returnflag").as("y"), year(col("o_orderdate")).as("yr"))
-        .localCheckpoint(false) // feeds the sample and both margin rollups
+        .pinLazy() // feeds the sample and both margin rollups
       val samp = ol.filter(col("yr") === 1997)
       val pop = ol.filter(col("yr") === 1998)
       Inference.rakingIpf(samp, col("x"), col("y"),
@@ -1318,7 +1319,7 @@ object DecisionQueries extends QuerySet {
         .groupBy(datediff(to_date(col("o_orderdate")),
           lit("1970-01-01").cast("date")).cast("long").as("day"))
         .agg(sum(Features.cents(col("o_totalprice"))).as("y"))
-        .localCheckpoint(false) // feeds the median rollup AND the signs
+        .pinLazy() // feeds the median rollup AND the signs
       val ranks = graft.operators.Ranking.valueRanks(daily, Nil, col("y"))
       val ng = ranks.agg(sum(col("n_rows")).as("__n"))
       val lo = call_function("div", col("__n") + 1L, lit(2L))
@@ -1767,7 +1768,7 @@ object DecisionQueries extends QuerySet {
         .groupBy(col("event_type"),
           datediff(to_date(col("ts")), col("d0")).as("dd"))
         .agg(count(lit(1)).as("cnt"))
-        .localCheckpoint(false) // feeds the train rollup AND the test join
+        .pinLazy() // feeds the train rollup AND the test join
       val q90 = Stats.exactQuantiles(daily.filter(col("dd") < 21L),
         Seq("event_type"), col("cnt"), Seq(900))
       Stats.pinballLoss(daily.filter(col("dd") >= 21L), Seq("event_type"),

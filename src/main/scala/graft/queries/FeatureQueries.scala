@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.operators.Features
 import graft.sources.Sources.{events, table}
+import graft.engine.Pin.PinOps
 
 /** Round-9 feature-engineering battery: RFM segmentation, leak-free target
   * encoding, exact-arithmetic correlation profiling, and OLS trend fitting —
@@ -588,7 +589,7 @@ object FeatureQueries extends QuerySet {
         // pin: pairs feeds left/right/n2/final — without it the raw-text
         // explode+rollup recomputes per subtree (q217's pattern)
         val pairs = bi.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c"))
-          .localCheckpoint(false)
+          .pinLazy()
         val left = pairs.groupBy(col("w1")).agg(sum(col("c")).as("cl"))
         val right = pairs.groupBy(col("w2")).agg(sum(col("c")).as("cr"))
         val n2 = pairs.agg(sum(col("c")).as("n2"))
@@ -665,7 +666,7 @@ object FeatureQueries extends QuerySet {
           (col("l_suppkey") + lit(1000000)).as("dst_id"))
       // normalize + checkpoint ONCE; LPA and modularity share the graph
       val und = graft.operators.Graph.undirectedEdges(edges, "src_id", "dst_id")
-        .localCheckpoint()
+        .pinEager()
       val labels = graft.operators.Graph.labelPropagationUndirected(und, rounds = 3)
       graft.operators.Graph.modularityScaledUndirected(und, labels)
         .select(col("label").cast("long").as("label"), col("n_nodes"),

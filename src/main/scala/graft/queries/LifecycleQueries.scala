@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.engine.{ApplyConfig, DynamicTableConfig, DynamicTableMat, Incremental,
   IncrementalMat, Model, OnConfigChange, Registry, Snapshot, Warehouse}
+import graft.engine.Pin.PinOps
 import graft.functions.Functions
 import graft.operators.Fixtures
 import graft.sources.Sources
@@ -315,7 +316,7 @@ object LifecycleQueries extends QuerySet {
         // feeds the per-scope estimate AND the global regroup (plan-audit
         // r12 pin: scopes x 256 rows, free); the exact reference below
         // re-reads raw BY DESIGN — it is the judge, not the scale path
-        .localCheckpoint(false)
+        .pinLazy()
       val globalRegs = regs.groupBy(col("hll_bucket"))
         .agg(max(col("hll_rho")).as("hll_rho"))
         .withColumn("scope", lit("ALL"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.pipeline.{Dedup, Multimodal, Similarity, TextAnalysis => TA}
 import graft.sources.Sources.{events, table}
+import graft.engine.Pin.PinOps
 
 /** Training-data pipeline operators (builder brief) over the `documents`,
   * `embeddings` and `events` tables, each with a value-exact DuckDB oracle.
@@ -919,7 +920,7 @@ object PipelineQueries extends QuerySet {
         .agg(countDistinct(col("text")).as("n_distinct_texts"))
       val pairs = Dedup.minhashPairs(docs, n = 3, k = 8, bandSize = 2,
         threshold = 0.5).select(col("id_a"), col("id_b"))
-        .localCheckpoint(false) // feeds the pair count AND the components
+        .pinLazy() // feeds the pair count AND the components
       val pairCount = pairs.agg(count(lit(1)).as("neardup_pairs"))
       val comp = Dedup.connectedComponents(pairs)
         .agg(count(lit(1)).as("neardup_docs"),
@@ -1109,7 +1110,7 @@ object PipelineQueries extends QuerySet {
           explode(TA.tokens(col("text"))).as("token"))
         .groupBy(col("doc_id"), col("token"))
         .agg(count(lit(1)).as("tf_doc"))
-        .localCheckpoint(false) // shared by the df roll-up and the join below
+        .pinLazy() // shared by the df roll-up and the join below
       val vocab = perDoc.groupBy(col("token")).agg(count(lit(1)).as("df"))
       val scored = perDoc.join(vocab, "token")
         .withColumn("score", col("tf_doc").cast("double") *

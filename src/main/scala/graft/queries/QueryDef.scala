@@ -93,6 +93,15 @@ object Scratch {
   /** Delete every recorded scratch root (the shutdown hook's body). */
   private[graft] def cleanup(): Unit = roots.forEach(r => deleteTree(r))
 
+  /** A fresh directory under java.io.tmpdir, deleted with the scratch
+    * warehouses when the JVM exits.
+    */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    if (roots.add(dir.toFile)) hook
+    dir
+  }
+
   /** The scratch root of `tag` over `sfDir` in this JVM. */
   private[graft] def root(tag: String, sfDir: String): java.io.File =
     java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),

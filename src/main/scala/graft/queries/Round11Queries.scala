@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.Features
 import graft.pipeline.{Inference, Stats, TextAnalysis}
 import graft.sources.Sources.{events, table}
+import graft.engine.Pin.PinOps
 
 /** Round-11 battery: the remaining evaluation / survey / distribution
   * statistics a training-data platform runs that rounds 1-10 had not yet
@@ -257,7 +258,7 @@ object Round11Queries extends QuerySet {
         events(s, d).filter(col("event_type").isin("view", "purchase")),
         Seq("event_type"), floor(col("value") * 1000 + 0.5).cast("long"),
         Seq(100, 250, 500, 750, 900))
-        .localCheckpoint(false) // feeds both pivot sides
+        .pinLazy() // feeds both pivot sides
       q.filter(col("event_type") === "purchase")
         .select(col("q_mille"), col("n_values").as("n_purchase"),
           col("value_micro").as("purchase_micro"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.QuantileSketch
 import graft.operators.Features
 import graft.sources.Sources.{events, table}
+import graft.engine.Pin.PinOps
 
 /** Round-12 battery: the mergeable quantile-summary sketch family
   * (deterministic KLL-lineage compactor — registers, compaction, merge,
@@ -354,11 +355,11 @@ object Round12Queries extends QuerySet {
       val base = QuantileSketch.qsRegisters(
         ev.filter(col("day") < lit("2024-01-21").cast("date")),
         Nil, col("cents"))
-        .localCheckpoint(false) // feeds the exact score AND the compressor
+        .pinLazy() // feeds the exact score AND the compressor
       val night = QuantileSketch.qsRegisters(
         ev.filter(col("day") === lit("2024-01-25").cast("date")),
         Nil, col("cents"))
-        .localCheckpoint(false) // feeds both scores
+        .pinLazy() // feeds both scores
       val exact = Inference.ksFromRegisters(base, night)
         .select(col("n_a"), col("n_b"), col("d_ppm").as("d_ppm_exact"))
       val comp = Inference.ksFromRegisters(

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Sources.{events, table}
+import graft.engine.Pin.PinOps
 
 /** Round-13 battery: the stored-state monitor pattern extended to the
   * remaining batch-only families (VERDICT r12 next-round list) — the
@@ -393,7 +394,7 @@ object Round13Queries extends QuerySet {
           v: Column) = QuantileSketch.qsRegisters(f(ev), Nil, v)
       val base = regs(_.filter(col("day") < split),
         call_function("div", col("cents"), lit(100L)))
-        .localCheckpoint(false) // feeds both branches' scorers
+        .pinLazy() // feeds both branches' scorers
       def branch(tag: String, shift: Long) =
         Inference.chi2FromRegisters(base,
           regs(_.filter(col("day") >= split),
@@ -721,7 +722,7 @@ object Round13Queries extends QuerySet {
         QuantileSketch.qsRegisters(f(ev), Nil, v)
       val bucket = call_function("div", col("cents"), lit(100L))
       val base = regs(_.filter(col("day") < split), bucket)
-        .localCheckpoint(false) // feeds both branches' scorers
+        .pinLazy() // feeds both branches' scorers
       def branch(tag: String, live: Column) =
         Inference.tdFromRegisters(base, regs(_.filter(col("day") >= split), live))
           .withColumn("branch", lit(tag))
@@ -1151,7 +1152,7 @@ object Round13Queries extends QuerySet {
         col("o_custkey").cast("long").as("ck"))
       val est = Sketches.kmvJaccardMatrix(
         Sketches.kmvRegisters(o, Seq("pr"), col("ck"), 256), "pr", 256)
-      val pres = o.distinct().localCheckpoint(false) // pair join + counts
+      val pres = o.distinct().pinLazy() // pair join + counts
       val cnt = pres.groupBy(col("pr")).agg(count(lit(1)).as("n"))
       val ov = pres.as("x").join(pres.as("y"),
           col("x.ck") === col("y.ck") && col("x.pr") < col("y.pr"))

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Sources.{events, table}
+import graft.engine.Pin.PinOps
 
 /** Round-14 battery (VERDICT r13 next-round list): the weighted
   * mergeable sample (weighted KMV registers composed with the period
@@ -47,7 +48,7 @@ object Round14Queries extends QuerySet {
       val win = Sketches.kmvWeightedMerge(
         wh.readPeriodRange("day_wsample", "2024-01-16", "2024-01-22"),
         Nil, 16)
-        .localCheckpoint(false) // feeds the sample rows AND the estimator
+        .pinLazy() // feeds the sample rows AND the estimator
       val est = Sketches.kmvDistinctEstimate(win.drop("kmv_w"), Nil, 16)
         .select(col("n_regs"), col("est_distinct").as("est_total_weight"))
       val exact = ev
@@ -128,13 +129,13 @@ object Round14Queries extends QuerySet {
       val base = QuantileSketch.qsRegisters(
         ev.filter(col("day") < lit("2024-01-21").cast("date")),
         Nil, col("cents"))
-        .localCheckpoint(false) // feeds 6 scorers + the compressor + spans
+        .pinLazy() // feeds 6 scorers + the compressor + spans
       val comp = QuantileSketch.qsCompress(base, Nil, k = 256)
-        .localCheckpoint(false) // feeds 5 scorers + the bucket grid
+        .pinLazy() // feeds 5 scorers + the bucket grid
       val night = QuantileSketch.qsRegisters(
         ev.filter(col("day") === lit("2024-01-25").cast("date")),
         Nil, col("cents"))
-        .localCheckpoint(false) // feeds every scorer + the bucketing
+        .pinLazy() // feeds every scorer + the bucketing
       // live values onto the summary's grid: smallest kept value >= v,
       // overflow past the kept max becomes its own fresh category (the
       // baseline holds zero mass there — full-mass signal preserved)
@@ -453,8 +454,8 @@ object Round14Queries extends QuerySet {
         col("o_orderpriority").as("pr"), col("o_custkey").cast("long").as("ck"))
       def wside(p: String) = o.filter(col("pr") === p)
         .groupBy(col("ck")).agg(least(count(lit(1)), lit(8L)).as("w"))
-      val wa = wside("1-URGENT").localCheckpoint(false) // regs + exact
-      val wb = wside("5-LOW").localCheckpoint(false)
+      val wa = wside("1-URGENT").pinLazy() // regs + exact
+      val wb = wside("5-LOW").pinLazy()
       def regs(side: org.apache.spark.sql.DataFrame) =
         Sketches.kmvWeightedRegisters(side, Nil, col("ck"), col("w"),
           256, maxWeight = 8).drop("kmv_w")
@@ -532,7 +533,7 @@ object Round14Queries extends QuerySet {
       val docs = table(s, d, "documents")
         .select(col("doc_id").cast("long").as("id"), col("lang"))
         .withColumn("w", langW)
-        .localCheckpoint(false) // feeds the registers, the join-back, the mass
+        .pinLazy() // feeds the registers, the join-back, the mass
       val sample = Sketches.kmvWeightedRegisters(docs, Nil, col("id"),
         col("w"), 32, maxWeight = 16)
       val comp = sample
@@ -601,8 +602,8 @@ object Round14Queries extends QuerySet {
           concat(col("user_id").cast("string"), lit("|"),
             col("ts").cast("date").cast("string")).as("id"))
       def side(t: String) = ev.filter(col("event_type") === t).select(col("id"))
-      val a = side("click").localCheckpoint(false)    // regs + exact side
-      val b = side("purchase").localCheckpoint(false) // regs + exact side
+      val a = side("click").pinLazy()    // regs + exact side
+      val b = side("purchase").pinLazy() // regs + exact side
       val est = Sketches.kmvSetOps(
         Sketches.kmvRegisters(a, Nil, col("id"), 128),
         Sketches.kmvRegisters(b, Nil, col("id"), 128), 128)
@@ -729,9 +730,9 @@ object Round14Queries extends QuerySet {
           .agg(count(lit(1)).as("qs_weight"))
       }.awaitTermination()
       val comp = wh.read("panel_base")
-        .localCheckpoint(false) // feeds 5 scorers + the bucket grid
+        .pinLazy() // feeds 5 scorers + the bucket grid
       val night = wh.read("panel_live")
-        .localCheckpoint(false) // feeds KS/W1 + the bucketing
+        .pinLazy() // feeds KS/W1 + the bucketing
       val grid = comp.select(col("qs_value").as("gv"))
       val gmax = comp.agg(max(col("qs_value")).as("gmax"))
       val nb = night
@@ -904,16 +905,16 @@ object Round14Queries extends QuerySet {
         Sketches.mgRegisters(ev, Seq("p"), col("item"), 8),
         partitionBy = Seq("p"))
       val win = ev.filter(col("p") >= "2024-01-16" && col("p") <= "2024-01-22")
-        .localCheckpoint(false) // feeds exact counts + totals
+        .pinLazy() // feeds exact counts + totals
       val merged = Sketches.mgCompress(
         wh.readPeriodRange("day_hh", "2024-01-16", "2024-01-22"), Nil, 8)
-        .localCheckpoint(false) // feeds the join, the bound, the anti-join
+        .pinLazy() // feeds the join, the bound, the anti-join
       val exact = win.groupBy(col("item"))
         .agg(count(lit(1)).cast("long").as("exact_count"))
-        .localCheckpoint(false) // feeds the join + the completeness anti-join
+        .pinLazy() // feeds the join + the completeness anti-join
       val totals = win.agg(count(lit(1)).cast("long").as("n_total"))
       val bound = Sketches.mgBound(merged, Nil, totals, 8)
-        .localCheckpoint(false) // feeds the output row and the anti-join
+        .pinLazy() // feeds the output row and the anti-join
       val missed = exact
         .join(merged, exact("item") === merged("mg_value"), "left_anti")
         .crossJoin(broadcast(bound.select(col("err_bound").as("__eb"))))
@@ -994,16 +995,16 @@ object Round14Queries extends QuerySet {
           concat(lit("h"), (col("user_id") % 3L).cast("string")))
           .otherwise(concat(lit("c"), col("event_id").cast("string")))
           .as("item"))
-        .localCheckpoint(false) // feeds registers + exact + totals
+        .pinLazy() // feeds registers + exact + totals
       val regs = Sketches.mgRegisters(ev, Seq("event_type"), col("item"), 4)
-        .localCheckpoint(false) // feeds the join, the bound, the anti-join
+        .pinLazy() // feeds the join, the bound, the anti-join
       val exact = ev.groupBy(col("event_type"), col("item"))
         .agg(count(lit(1)).cast("long").as("exact_count"))
-        .localCheckpoint(false) // feeds the join + the anti-join
+        .pinLazy() // feeds the join + the anti-join
       val totals = ev.groupBy(col("event_type"))
         .agg(count(lit(1)).cast("long").as("n_total"))
       val bound = Sketches.mgBound(regs, Seq("event_type"), totals, 4)
-        .localCheckpoint(false) // feeds the output and the anti-join
+        .pinLazy() // feeds the output and the anti-join
       val missed = exact
         .join(regs.withColumnRenamed("mg_value", "item"),
           Seq("event_type", "item"), "left_anti")
@@ -1089,8 +1090,8 @@ object Round14Queries extends QuerySet {
         col("o_orderpriority").as("pr"), col("o_custkey").cast("long").as("ck"))
       def wside(p: String) = o.filter(col("pr") === p)
         .groupBy(col("ck")).agg(least(count(lit(1)), lit(8L)).as("w"))
-      val wa = wside("1-URGENT").localCheckpoint(false) // regs + exact
-      val wb = wside("5-LOW").localCheckpoint(false)
+      val wa = wside("1-URGENT").pinLazy() // regs + exact
+      val wb = wside("5-LOW").pinLazy()
       def regs(side: DataFrame) =
         Sketches.kmvWeightedRegisters(side, Nil, col("ck"), col("w"),
           256, maxWeight = 8).drop("kmv_w")
@@ -1228,11 +1229,11 @@ object Round14Queries extends QuerySet {
           .as("gram"))
         .groupBy(col("gram"))
         .agg(count(lit(1)).cast("long").as("__c"))
-        .localCheckpoint(false) // feeds regs, totals, and the contrast
+        .pinLazy() // feeds regs, totals, and the contrast
       val regs = Sketches.mgCompress(
         exact.select(col("gram").as("mg_value"), col("__c").as("mg_count")),
         Nil, 1024)
-        .localCheckpoint(false) // feeds the rollup and the bound
+        .pinLazy() // feeds the rollup and the bound
       val totals = exact.agg(sum(col("__c")).cast("long").as("n_total"))
       val bound = Sketches.mgBound(regs, Nil, totals, 1024)
       val summary = regs.agg(count(lit(1)).cast("long").as("n_regs"),
@@ -1358,7 +1359,7 @@ object Round14Queries extends QuerySet {
       val merged = win.groupBy(col("hll_bucket"))
         .agg(max(col("hll_rho")).as("hll_rho"),
           max(col("hll_b")).as("hll_b"))
-        .localCheckpoint(false) // feeds the estimator and the register count
+        .pinLazy() // feeds the estimator and the register count
       val est = Sketches.hllEstimate(merged, Nil)
         .select(col("hll_estimate").as("est_user_days"))
       val nRegs = merged.agg(count(lit(1)).cast("long").as("n_regs"))
@@ -1642,7 +1643,7 @@ object Round14Queries extends QuerySet {
           // EAGER checkpoint: run 1's row must materialize BEFORE the
           // admission below mutates the stored stats it reads (the lazy
           // form would re-plan over post-admission state)
-          .localCheckpoint()
+          .pinEager()
       }
       val run1 = advise("run1_2days")
       // calendar-bounded day list for the admission slice (<= 31 values)
@@ -2140,7 +2141,7 @@ object Round14Queries extends QuerySet {
           .crossJoin(exact).withColumn("run", lit(run))
           // EAGER: run 1's row must materialize before run 2's merge
           // and hook rewrite the stored stats it reads
-          .localCheckpoint()
+          .pinEager()
       }
       reg.run()
       val r1 = advise("run1_initial")

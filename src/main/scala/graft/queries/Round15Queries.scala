@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Sources.table
+import graft.engine.Pin.PinOps
 
 /** Round-15 battery (VERDICT r14 next-round list): the cost model folded
   * into the MATERIALIZER (the declared ctx.join surface resolving plans
@@ -144,10 +145,10 @@ object Round15Queries extends QuerySet {
         .withColumn("band", call_function("div", col("cents"),
           lit(2000000L)))
       val counts = TableStats.columnCounts(li,
-        Seq("cents", "band", "cents|band")).localCheckpoint(false)
+        Seq("cents", "band", "cents|band")).pinLazy()
       val ndv = TableStats.ndvEstimate(TableStats.columnRegisters(li,
         Seq("cents", "band", "cents|band"), 256), 256)
-        .localCheckpoint(false)
+        .pinLazy()
       val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
       def nd(c: String, as: String) =
         ndv.filter(col("ts_col") === c).select(col("ndv").as(as))

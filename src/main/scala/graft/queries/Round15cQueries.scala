@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Column
 import graft.sources.Sources.table
+import graft.engine.Pin.PinOps
 
 /** Round-15 continuation III: don't recompute what didn't change. Three
   * engine surfaces a 100 TB nightly pipeline needs from its materializer —
@@ -205,7 +206,7 @@ object Round15cQueries extends QuerySet {
       val delta = JoinView.delta(wh, "bv",
         "bi_o", wh.read("bi_o"), "o_day",
         "bi_l", wh.read("bi_l"), "ship_day", Seq("okey"))
-        .localCheckpoint(false)
+        .pinLazy()
       val cur = JoinView.cursors(wh, "bv").get
       val (ca, cb) = (cur("bi_o"), cur("bi_l"))
       val nExact = delta.count()
@@ -215,7 +216,7 @@ object Round15cQueries extends QuerySet {
       // the exact identity the oracle replays). Computing them as ONE
       // filtered-count pass over a pinned full join replaces three
       // standalone joins (optimization r15; values digit-identical).
-      val full = oAll.join(lAll, Seq("okey")).localCheckpoint(false)
+      val full = oAll.join(lAll, Seq("okey")).pinLazy()
       val contrast = full.agg(
         sum(when(col("o_day") > ca, 1L).otherwise(0L)).as("na"),
         sum(when(col("ship_day") > cb, 1L).otherwise(0L)).as("nb"),
@@ -649,17 +650,17 @@ object Round15cQueries extends QuerySet {
       // (priority-grain, 5 rows) and test equality with the one-pass
       // rollup (Checks.multisetEqual scaladoc): 10 join+agg jobs -> 4.
       val eager = Rollup.eagerAgg(li, ord, Seq("okey"), Seq("priority"),
-        wants).localCheckpoint(false)
+        wants).pinLazy()
       val naive = Rollup.direct(li.join(ord, Seq("okey")), Seq("priority"),
-        wants, Nil).localCheckpoint(false)
+        wants, Nil).pinLazy()
       val matched1 = Checks.multisetEqual(eager, naive)
       // branch 2: a non-unique dim — every order has TWO contact rows
       import s.implicits._
       val contacts = ord.crossJoin(Seq(1L, 2L).toDF("contact_no"))
       val eager2 = Rollup.eagerAgg(li, contacts, Seq("okey"),
-        Seq("priority"), wants).localCheckpoint(false)
+        Seq("priority"), wants).pinLazy()
       val naive2 = Rollup.direct(li.join(contacts, Seq("okey")),
-        Seq("priority"), wants, Nil).localCheckpoint(false)
+        Seq("priority"), wants, Nil).pinLazy()
       val matched2 = Checks.multisetEqual(eager2, naive2)
       eager
         .join(eager2.select(col("priority"),
@@ -803,12 +804,12 @@ object Round15cQueries extends QuerySet {
       // by the two-sided diff and the final rollup — pin each once and
       // test with the one-pass rollup (Checks.multisetEqual scaladoc)
       val samp = Sketches.stratifiedSampleTable(docs, col("doc_id"),
-        Seq("lang"), 64).localCheckpoint(false)
+        Seq("lang"), 64).pinLazy()
       val merged = Sketches.stratifiedSampleMerge(
         Sketches.stratifiedSampleTable(docs.filter(col("doc_id") < 400L),
           col("doc_id"), Seq("lang"), 64),
         docs.filter(col("doc_id") >= 400L), col("doc_id"), Seq("lang"), 64)
-        .localCheckpoint(false)
+        .pinLazy()
       val cols = samp.columns.sorted.map(col).toIndexedSeq
       val matched = Checks.multisetEqual(samp.select(cols: _*),
         merged.select(cols: _*))
@@ -1019,11 +1020,11 @@ object Round15cQueries extends QuerySet {
       // re-execute all three window/dedup passes (t3's plan was evaluated
       // six times across the diff and the readout scalars)
       val t1 = Incremental.applyCdc(empty, b1, Seq("okey"), "seq", "op")
-        .localCheckpoint(false)
+        .pinLazy()
       val t2 = Incremental.applyCdc(t1, b2, Seq("okey"), "seq", "op")
-        .localCheckpoint(false)
+        .pinLazy()
       val t3 = Incremental.applyCdc(t2, b3, Seq("okey"), "seq", "op")
-        .localCheckpoint(false)
+        .pinLazy()
       val oneShot = Incremental.applyCdc(empty,
         b1.unionByName(b2).unionByName(b3), Seq("okey"), "seq", "op")
       // one-pass multiset equality (Checks.multisetEqual scaladoc) — the

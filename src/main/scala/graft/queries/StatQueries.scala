@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.{Features, GenericTests}
 import graft.pipeline.{Dedup, Similarity, Stats, TextAnalysis => TA}
 import graft.sources.Sources.{events, table}
+import graft.engine.Pin.PinOps
 
 /** Round-9 continuation battery: statistical association and time-series
   * diagnostics (chi-square, autocorrelation, TWAP), privacy/quality audits
@@ -1478,7 +1479,7 @@ object StatQueries extends QuerySet {
       val emb = table(s, d, "embeddings")
       val q = emb.filter(col("vec_id") < 50)
       val exact = Similarity.bruteForceTopK(emb, q, k = 5)
-        .localCheckpoint(false)
+        .pinLazy()
       Seq(1, 2, 4).map { np =>
         Similarity.recallAtK(exact,
           Similarity.ivfTopK(emb, q, k = 5, nCentroids = 8, nProbe = np),

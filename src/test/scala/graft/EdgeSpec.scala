@@ -192,14 +192,6 @@ class EdgeSpec extends AnyFunSuite {
       Skew.saltedJoin(f, d, Seq("k"), 4, "id", joinType = "full_outer"))
   }
 
-  test("unit compare harness (C6) detects equal and unequal relations") {
-    import graft.operators.GenericTests
-    val a = Seq((1, "x"), (2, "y")).toDF("i", "s")
-    val b = Seq((2, "y"), (1, "x")).toDF("i", "s")
-    assert(GenericTests.unitCompare(a, b))
-    assert(!GenericTests.unitCompare(a, b.filter($"i" === 1)))
-  }
-
   test("fixture relation rejects columns not in the schema (typo'd fixture keys)") {
     import graft.operators.Fixtures
     import org.apache.spark.sql.types._

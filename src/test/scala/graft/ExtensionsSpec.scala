@@ -6,6 +6,7 @@ import graft.engine.Skew
 import graft.operators.{BloomPrune, EventAnalytics, GenericTests}
 import graft.pipeline.Sampling
 import graft.sources.Sources
+import graft.queries.Scratch
 
 /** Round-9 late operators on controlled inputs: attribution, session
   * paths, Benford profiling, skew diagnosis, bloom join pruning,
@@ -189,7 +190,7 @@ class ExtensionsSpec extends AnyFunSuite {
   // ConvertToLocalRelation, erasing the very operators these pins assert —
   // round-trip through parquet so the plan is a real scan pipeline
   private def viaParquet(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val p = java.nio.file.Files.createTempDirectory("graft_ext_plan").toString
+    val p = Scratch.tempDir("graft_ext_plan").toString
     df.write.mode("overwrite").parquet(s"$p/t")
     spark.read.parquet(s"$p/t")
   }
@@ -390,7 +391,7 @@ class ExtensionsSpec extends AnyFunSuite {
   // ---- ORC interchange ----
 
   test("ORC roundtrip preserves schema, timestamps, and doubles exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_orc_spec").toString
+    val dir = Scratch.tempDir("graft_orc_spec").toString
     val src = Seq(
       (1L, ts("2024-03-01 01:02:03.123456"), 0.1 + 0.2, "a"),
       (2L, ts("2024-03-02 23:59:59.999999"), -1.5e-300, "b"))

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.Features
+import graft.queries.Scratch
 
 /** Feature-engineering operators on hand-computable fixtures: RFM boundary
   * scoring, leave-one-out/smoothed target encoding, exact-moment
@@ -507,7 +508,7 @@ class FeatureSpec extends AnyFunSuite {
     // a real file source keeps the Filter node alive: over a
     // LocalRelation the optimizer just EVALUATES the filter at plan time
     // (ConvertToLocalRelation) and leaves nothing to rewrite
-    val dir = java.nio.file.Files.createTempDirectory("graft_jwprune").toString
+    val dir = Scratch.tempDir("graft_jwprune").toString
     Seq(("martha", "marhta"), ("ab", "abcdefghijklmnop"),
       ("same", "same"), ("dwayne", "duane")).toDF("a", "b")
       .write.mode("overwrite").parquet(dir)

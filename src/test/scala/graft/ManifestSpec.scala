@@ -1,9 +1,9 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.engine.Warehouse
+import graft.queries.Scratch
 
 /** The min/max data-skipping manifest (Warehouse.writeStatsManifest /
   * readPruned): file pruning on a range predicate over a clusterBy or
@@ -20,7 +20,7 @@ class ManifestSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
   test("clusterBy + manifest: range read prunes files, result identical to full scan") {
-    val root = Files.createTempDirectory("graft_wh").toString
+    val root = Scratch.tempDir("graft_wh").toString
     val wh = new Warehouse(root, spark)
     // explicit 8-way range layout: AQE would coalesce a 1000-row
     // clusterBy shuffle into one file, leaving nothing to prune
@@ -46,7 +46,7 @@ class ManifestSpec extends AnyFunSuite {
   }
 
   test("append makes the manifest stale: readPruned falls back to the FULL scan") {
-    val root = Files.createTempDirectory("graft_wh").toString
+    val root = Scratch.tempDir("graft_wh").toString
     val wh = new Warehouse(root, spark)
     wh.writeSwap("t", (0L until 100L).map(k => (k, k)).toDF("k", "x"),
       clusterBy = Seq("k"), statsCols = Seq("k"))
@@ -66,7 +66,7 @@ class ManifestSpec extends AnyFunSuite {
   }
 
   test("Z-order + manifest: a slab in the SECOND dimension prunes files") {
-    val root = Files.createTempDirectory("graft_wh").toString
+    val root = Scratch.tempDir("graft_wh").toString
     val wh = new Warehouse(root, spark)
     // 32x32 grid: Z-order interleaves a and b, so a b-slab is NOT the
     // linear sort order yet still lands in few Morton ranges
@@ -84,7 +84,7 @@ class ManifestSpec extends AnyFunSuite {
   }
 
   test("clone carries the manifest (hard links: identical paths and sizes)") {
-    val root = Files.createTempDirectory("graft_wh").toString
+    val root = Scratch.tempDir("graft_wh").toString
     val wh = new Warehouse(root, spark)
     wh.writeSwap("src", (0L until 200L).map(k => (k, k)).toDF("k", "x")
       .repartitionByRange(8, col("k")).sortWithinPartitions("k"),
@@ -100,7 +100,7 @@ class ManifestSpec extends AnyFunSuite {
   }
 
   test("compact and Z-order rewrites auto-refresh the manifest; 2-d box prunes beyond either slab") {
-    val root = Files.createTempDirectory("graft_wh").toString
+    val root = Scratch.tempDir("graft_wh").toString
     val wh = new Warehouse(root, spark)
     val grid = for { a <- 0L until 32L; b <- 0L until 32L } yield (a, b)
     wh.writeSwap("z", grid.toDF("a", "b")
@@ -130,7 +130,7 @@ class ManifestSpec extends AnyFunSuite {
   }
 
   test("NULLs in the stats column: kept-file semantics match the plain filter exactly") {
-    val root = Files.createTempDirectory("graft_wh").toString
+    val root = Scratch.tempDir("graft_wh").toString
     val wh = new Warehouse(root, spark)
     // file 1: mixed nulls (footer stats cover the non-null values);
     // file 2: ALL-null k (hasNonNullValue false -> no entry -> kept
@@ -152,7 +152,7 @@ class ManifestSpec extends AnyFunSuite {
   }
 
   test("non-integral and missing columns are unprunable, never wrong") {
-    val root = Files.createTempDirectory("graft_wh").toString
+    val root = Scratch.tempDir("graft_wh").toString
     val wh = new Warehouse(root, spark)
     val df = (0L until 100L).map(k => (k, s"s$k")).toDF("k", "s")
     wh.writeSwap("t", df, clusterBy = Seq("k"))
@@ -178,7 +178,7 @@ class ManifestSpec extends AnyFunSuite {
   }
 
   test("string stats: range and prefix reads prune files, results identical") {
-    val root = Files.createTempDirectory("graft_wh").toString
+    val root = Scratch.tempDir("graft_wh").toString
     val wh = new Warehouse(root, spark)
     // zero-padded keys: lexicographic order == numeric order, so the
     // range layout gives each file a tight string slab
@@ -212,7 +212,7 @@ class ManifestSpec extends AnyFunSuite {
   }
 
   test("string bounds past 32 bytes truncate conservatively, never wrong") {
-    val root = Files.createTempDirectory("graft_wh").toString
+    val root = Scratch.tempDir("graft_wh").toString
     val wh = new Warehouse(root, spark)
     val pad = "P" * 40 // every long value shares a 40-byte prefix
     val longs = (0L until 100L).map(k => (pad + f"$k%04d", k)).toDF("s", "x")
@@ -236,7 +236,7 @@ class ManifestSpec extends AnyFunSuite {
   }
 
   test("bloom: point lookup in a hash layout prunes where min/max cannot") {
-    val root = Files.createTempDirectory("graft_wh").toString
+    val root = Scratch.tempDir("graft_wh").toString
     val wh = new Warehouse(root, spark)
     // hash shuffle: every file spans the whole key range — the min/max
     // manifest is structurally useless here, the bloom is not
@@ -259,7 +259,7 @@ class ManifestSpec extends AnyFunSuite {
   }
 
   test("bloom: readPrunedIn unions probe sets; result identical to isin") {
-    val root = Files.createTempDirectory("graft_wh").toString
+    val root = Scratch.tempDir("graft_wh").toString
     val wh = new Warehouse(root, spark)
     val df = (0L until 4096L).map(k => (k, k)).toDF("k", "x")
       .repartition(8, col("k"))
@@ -272,7 +272,7 @@ class ManifestSpec extends AnyFunSuite {
   }
 
   test("bloom: append staleness, rebuild, compact auto-refresh, partitioned keep") {
-    val root = Files.createTempDirectory("graft_wh").toString
+    val root = Scratch.tempDir("graft_wh").toString
     val wh = new Warehouse(root, spark)
     val df = (0L until 1024L).map(k => (k, k)).toDF("k", "x")
       .repartition(4, col("k"))
@@ -304,7 +304,7 @@ class ManifestSpec extends AnyFunSuite {
   }
 
   test("combined pruning: bloom AND stats evidence intersect on equality reads") {
-    val root = Files.createTempDirectory("graft_wh").toString
+    val root = Scratch.tempDir("graft_wh").toString
     val wh = new Warehouse(root, spark)
     // range-clustered EVEN keys with both sidecars: stats prove the one
     // covering file, the bloom proves membership inside it
@@ -333,7 +333,7 @@ class ManifestSpec extends AnyFunSuite {
   }
 
   test("refresh manifests: growth re-arms at O(new files), untouched entries verbatim") {
-    val root = Files.createTempDirectory("graft_wh").toString
+    val root = Scratch.tempDir("graft_wh").toString
     val wh = new Warehouse(root, spark)
     val df = (0L until 1024L).map(k => (k, k)).toDF("k", "x")
       .repartitionByRange(4, col("k")).sortWithinPartitions("k")
@@ -364,7 +364,7 @@ class ManifestSpec extends AnyFunSuite {
   }
 
   test("readPeriodRangePruned: directory and file pruning compose") {
-    val root = Files.createTempDirectory("graft_wh").toString
+    val root = Scratch.tempDir("graft_wh").toString
     val wh = new Warehouse(root, spark)
     // a period-partitioned layout (one dir per day) whose rows carry a
     // sorted value column: the window prunes dirs, the manifest prunes
@@ -400,7 +400,7 @@ class ManifestSpec extends AnyFunSuite {
   }
 
   test("bloom: clone carries the sidecar; drop cleans it; string keys work") {
-    val root = Files.createTempDirectory("graft_wh").toString
+    val root = Scratch.tempDir("graft_wh").toString
     val wh = new Warehouse(root, spark)
     val df = (0L until 2048L).map(k => (s"u$k", k)).toDF("u", "x")
       .repartition(8, col("u"))
@@ -418,7 +418,7 @@ class ManifestSpec extends AnyFunSuite {
   }
 
   test("refreshStatsManifest on a pre-v2 sidecar rebuilds instead of relabeling (ADVICE r13)") {
-    val root = Files.createTempDirectory("graft_wh").toString
+    val root = Scratch.tempDir("graft_wh").toString
     val wh = new Warehouse(root, spark)
     wh.writeSwap("t", (0L until 1000L).map(k => (k, k * 3L)).toDF("k", "x")
       .repartitionByRange(4, col("k")).sortWithinPartitions("k"),
@@ -452,7 +452,7 @@ class ManifestSpec extends AnyFunSuite {
     // inner join keyed on the raw path dropped every row — all-zero
     // filters that pruned files which DO hold the key (silent missing
     // rows). The decoded join + loud null-m guard must keep this exact.
-    val root = Files.createTempDirectory("graft wh enc").toString
+    val root = Scratch.tempDir("graft wh enc").toString
     assert(root.contains(" "))
     val wh = new Warehouse(root, spark)
     val df = (0L until 2048L).map(k => (s"u$k", k)).toDF("u", "x")
@@ -466,7 +466,7 @@ class ManifestSpec extends AnyFunSuite {
   }
 
   test("readPrunedSemi: dim-driven file pruning, identity, over-cap fallback, NULL and empty dims") {
-    val root = Files.createTempDirectory("graft_wh").toString
+    val root = Scratch.tempDir("graft_wh").toString
     val wh = new Warehouse(root, spark)
     val fact = (0L until 4096L).map(k => (k, k * 2L)).toDF("k", "x")
       .repartitionByRange(8, col("k")).sortWithinPartitions("k")

@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.{GapEngine, MeasureSpec, Scenario, TriStateRules}
 import graft.engine.{Incremental, Snapshot}
+import graft.queries.Scratch
 
 /** Property-style tests (SURVEY §5) over deterministic random inputs (fixed
   * seeds): tri-state invariants hold BY CONSTRUCTION on arbitrary inputs;
@@ -202,7 +203,7 @@ class PropertySpec extends AnyFunSuite {
     (1 to 3).foreach { seed =>
       val docs = randomDocs(seed + 50, 30).select($"doc_id", $"text")
       val wh = new Warehouse(
-        java.nio.file.Files.createTempDirectory("graft_incdedup_p").toString, spark)
+        Scratch.tempDir("graft_incdedup_p").toString, spark)
       val name = s"incdd_p$seed"
       try {
         def pairSet(df: org.apache.spark.sql.DataFrame) = df.collect()

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.engine.Warehouse
+import graft.queries.Scratch
 
 /** Kill-window coverage for every swap protocol's crash-recovery path
   * (VERDICT r3 §wrong-2: recovery code that has never executed a crash is
@@ -42,7 +43,7 @@ class RecoverySpec extends AnyFunSuite {
 
   /** Discover the failpoint names a clean run of the protocol passes. */
   private def discoverPoints(p: Proto): Seq[String] = {
-    val wh = new Warehouse(Files.createTempDirectory("graft_rec_d").toString, spark)
+    val wh = new Warehouse(Scratch.tempDir("graft_rec_d").toString, spark)
     p.setup(wh)
     val rec = scala.collection.mutable.ArrayBuffer.empty[String]
     wh.failpoint = rec += _
@@ -56,7 +57,7 @@ class RecoverySpec extends AnyFunSuite {
     val points = discoverPoints(p)
     assert(points.nonEmpty, s"${p.name}: expected at least one commit point")
     points.foreach { point =>
-      val root = Files.createTempDirectory("graft_rec").toString
+      val root = Scratch.tempDir("graft_rec").toString
       val wh = new Warehouse(root, spark)
       p.setup(wh)
       crashAt(wh, point)
@@ -183,7 +184,7 @@ class RecoverySpec extends AnyFunSuite {
       partitionBy = Seq("p"))
     val afterM = Map(1L -> "old1", 20L -> "new2")
     Seq("zero", "some", "all").foreach { phase =>
-      val root = Files.createTempDirectory(s"graft_marker_$phase").toString
+      val root = Scratch.tempDir(s"graft_marker_$phase").toString
       val wh = new Warehouse(root, spark)
       mkTarget(wh)
       // stage the replacement slice exactly as overwritePeriods does
@@ -213,7 +214,7 @@ class RecoverySpec extends AnyFunSuite {
     // crash writeSwap in the backup-only window, then DROP the table: the
     // leftover backup must die with it — recover() restoring it on the next
     // open would resurrect a table the operator deliberately deleted
-    val root = Files.createTempDirectory("graft_drop_res").toString
+    val root = Scratch.tempDir("graft_drop_res").toString
     val wh = new Warehouse(root, spark)
     wh.writeSwap("t", Seq((1L, "old")).toDF("k", "v"))
     crashAt(wh, "swap:backed-up")
@@ -242,7 +243,7 @@ class RecoverySpec extends AnyFunSuite {
     // silently double-count its sum-combined state. The drop-intent marker
     // must finish the drop before any reader/stream reopens the name.
     for (point <- Seq("drop:checkpoint-deleted", "drop:table-deleted")) {
-      val root = Files.createTempDirectory("graft_rec_drop").toString
+      val root = Scratch.tempDir("graft_rec_drop").toString
       val wh = new Warehouse(root, spark)
       wh.writeSwap("t", Seq((1L, "x")).toDF("k", "v"))
       // plant a stand-in stream checkpoint like mergeStream/aggStream do
@@ -268,7 +269,7 @@ class RecoverySpec extends AnyFunSuite {
     // after deleting the table leaves its intent marker, the rebuild
     // succeeds, and the NEXT exists()/read() completes the old drop
     // against the freshly written live table
-    val root = Files.createTempDirectory("graft_rec_bkt_drop").toString
+    val root = Scratch.tempDir("graft_rec_bkt_drop").toString
     val wh = new Warehouse(root, spark)
     wh.writeBucketed("bt", Seq((1L, "x")).toDF("k", "v"), Seq("k"), 4)
     crashAt(wh, "drop:table-deleted")
@@ -293,7 +294,7 @@ class RecoverySpec extends AnyFunSuite {
     // RECOVERY itself mid-replay (after the first dir applies) — the third
     // open must still converge: the marker is only consumed after a
     // complete replay, so replay is resumable from any prefix
-    val root = Files.createTempDirectory("graft_rec_double").toString
+    val root = Scratch.tempDir("graft_rec_double").toString
     val wh = new Warehouse(root, spark)
     wh.writeSwap("s",
       Seq((1L, "old1", "1"), (2L, "old2", "2"), (3L, "old3", "3"))
@@ -320,7 +321,7 @@ class RecoverySpec extends AnyFunSuite {
     val rnd = new scala.util.Random(260812L)
     val partVals = Seq("1", "2", "3")
     (1 to 12).foreach { iter =>
-      val root = Files.createTempDirectory("graft_rec_rand").toString
+      val root = Scratch.tempDir("graft_rec_rand").toString
       var wh = new Warehouse(root, spark)
       var modelT = Set.empty[(Long, String, String)] // table "t" rows
       var modelU = Map.empty[Long, String]           // upsert table "u"
@@ -390,7 +391,7 @@ class RecoverySpec extends AnyFunSuite {
     // (missing pairs). The intent marker must make the next run repair the
     // torn state so the replayed batch lands whole.
     import graft.pipeline.IncrementalDedup
-    val wh = new Warehouse(Files.createTempDirectory("graft_rec_dd").toString, spark)
+    val wh = new Warehouse(Scratch.tempDir("graft_rec_dd").toString, spark)
     val mk = (ids: Seq[Long]) => ids.map(i =>
       (i, s"alpha beta gamma delta eps zeta token$i tail$i")).toDF("doc_id", "text")
     try {
@@ -430,7 +431,7 @@ class RecoverySpec extends AnyFunSuite {
   }
 
   test("marker-absence probe is cached: repeated reads do not re-probe meta") {
-    val wh = new Warehouse(Files.createTempDirectory("graft_probe").toString, spark)
+    val wh = new Warehouse(Scratch.tempDir("graft_probe").toString, spark)
     wh.writeSwap("t", Seq((1L, "a")).toDF("k", "v"))
     wh.read("t") // first read may probe (and caches absence)
     val p0 = wh.metaProbes.get()
@@ -447,7 +448,7 @@ class RecoverySpec extends AnyFunSuite {
   }
 
   test("dropPeriodsBefore: victims gone, survivors byte-identical, crash-at-marker resumes, idempotent, manifest re-armed") {
-    val root = Files.createTempDirectory("graft_rec_ret").toString
+    val root = Scratch.tempDir("graft_rec_ret").toString
     val wh = new Warehouse(root, spark)
     val rows = (1 to 4).flatMap(day => (0L until 50L).map(v =>
       (day * 1000L + v, s"2024-01-0$day"))).toDF("v", "p")
@@ -484,7 +485,7 @@ class RecoverySpec extends AnyFunSuite {
     assert(wh.read("t").count() === 100)
     // crash at the intent marker: a fresh Warehouse completes the deletion
     // on recover and consumes the marker
-    val root2 = Files.createTempDirectory("graft_rec_ret2").toString
+    val root2 = Scratch.tempDir("graft_rec_ret2").toString
     val wh2 = new Warehouse(root2, spark)
     wh2.writeSwap("t", rows.repartitionByRange(4, col("p"), col("v")),
       partitionBy = Seq("p"))
@@ -497,7 +498,7 @@ class RecoverySpec extends AnyFunSuite {
   }
 
   test("versioned writes: every crash point leaves a consistent version set; retry converges") {
-    val root = Files.createTempDirectory("graft_rec_ver").toString
+    val root = Scratch.tempDir("graft_rec_ver").toString
     val wh = new Warehouse(root, spark)
     def df(n: Int) = (1 to n).map(i => (i.toLong, s"v$n")).toDF("k", "v")
     def state(w: Warehouse) = w.versionsOf("t").map(v =>

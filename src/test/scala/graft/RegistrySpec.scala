@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.engine._
 import graft.operators.GapExceptions
+import graft.queries.Scratch
 
 /** End-to-end DAG runs against a real warehouse dir: view/table/incremental
   * materializations, the is_incremental gate, and the reference's
@@ -16,7 +17,7 @@ class RegistrySpec extends AnyFunSuite {
   import spark.implicits._
 
   test("view/table/incremental-merge DAG over two runs") {
-    val root = Files.createTempDirectory("graft_wh").toString
+    val root = Scratch.tempDir("graft_wh").toString
     val wh = new Warehouse(root, spark)
 
     def mkRegistry(sourceRows: Seq[(Long, String, Int)]) = {
@@ -60,7 +61,7 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("microbatch materialization replaces only its event-time slice across runs") {
-    val root = Files.createTempDirectory("graft_wh3").toString
+    val root = Scratch.tempDir("graft_wh3").toString
     val wh = new Warehouse(root, spark)
     def reg(rows: Seq[(Long, String, String)]) = {
       val r = new Registry(spark, wh)
@@ -79,7 +80,7 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("microbatch: bad bounds fail fast; per-run windows advance the slice; NULLs survive") {
-    val root = Files.createTempDirectory("graft_wh4").toString
+    val root = Scratch.tempDir("graft_wh4").toString
     val wh = new Warehouse(root, spark)
     def reg(rows: Seq[(Long, Option[String], String)], start: String, end: String) = {
       val r = new Registry(spark, wh)
@@ -106,7 +107,7 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("append with AppendNewColumns reshapes the stored target before appending") {
-    val root = Files.createTempDirectory("graft_wh5").toString
+    val root = Scratch.tempDir("graft_wh5").toString
     val wh = new Warehouse(root, spark)
     def reg(df: org.apache.spark.sql.DataFrame) = {
       val r = new Registry(spark, wh)
@@ -126,7 +127,7 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("append with SyncAllColumns persists a TYPE-only reshape before appending") {
-    val root = Files.createTempDirectory("graft_wh6").toString
+    val root = Scratch.tempDir("graft_wh6").toString
     val wh = new Warehouse(root, spark)
     def reg(df: org.apache.spark.sql.DataFrame) = {
       val r = new Registry(spark, wh)
@@ -162,15 +163,15 @@ class RegistrySpec extends AnyFunSuite {
       r.run(threads = threads)
       wh.read("joined").collect().map(x => x.getLong(0) -> (x.getString(1), x.getLong(2))).toMap
     }
-    val seq = build(Files.createTempDirectory("graft_seq").toString, 1)
-    val par = build(Files.createTempDirectory("graft_par").toString, 4)
+    val seq = build(Scratch.tempDir("graft_seq").toString, 1)
+    val par = build(Scratch.tempDir("graft_par").toString, 4)
     assert(seq === par)
     assert(seq === Map(1L -> ("A", 20L), 2L -> ("B", 40L), 3L -> ("C", 60L)))
   }
 
   test("microbatch run leaves out-of-window period partitions byte-identical") {
     import scala.jdk.CollectionConverters._
-    val root = Files.createTempDirectory("graft_mb_prune").toString
+    val root = Scratch.tempDir("graft_mb_prune").toString
     val wh = new Warehouse(root, spark)
     def day(s: String) = java.sql.Date.valueOf(s)
     def reg(rows: Seq[(Long, java.sql.Date, String)]) = {
@@ -207,7 +208,7 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("microbatch + AppendNewColumns reshapes the whole target before the slice lands") {
-    val root = Files.createTempDirectory("graft_mb_drift").toString
+    val root = Scratch.tempDir("graft_mb_drift").toString
     val wh = new Warehouse(root, spark)
     def day(s: String) = java.sql.Date.valueOf(s)
     def reg(df: org.apache.spark.sql.DataFrame) = {
@@ -232,7 +233,7 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("hour-grain microbatch partitions by hour and replaces one hour per run") {
-    val root = Files.createTempDirectory("graft_mb_hour").toString
+    val root = Scratch.tempDir("graft_mb_hour").toString
     val wh = new Warehouse(root, spark)
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     def reg(rows: Seq[(Long, java.sql.Timestamp, String)]) = {
@@ -258,7 +259,7 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("swap crash window: backup-only state restores on next open") {
-    val root = Files.createTempDirectory("graft_crash").toString
+    val root = Scratch.tempDir("graft_crash").toString
     val wh = new Warehouse(root, spark)
     wh.writeSwap("t", Seq((1L, "old")).toDF("k", "v"))
     // simulate dying between `target -> backup` and `tmp -> target`: the
@@ -279,7 +280,7 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("runMicrobatches drives consecutive windows through the DAG") {
-    val root = Files.createTempDirectory("graft_mb_series").toString
+    val root = Scratch.tempDir("graft_mb_series").toString
     val wh = new Warehouse(root, spark)
     def day(s: String) = java.sql.Date.valueOf(s)
     val base = Seq(
@@ -321,7 +322,7 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("runMicrobatches materializes a side-effecting ancestor exactly once") {
-    val root = Files.createTempDirectory("graft_mb_anc").toString
+    val root = Scratch.tempDir("graft_mb_anc").toString
     val wh = new Warehouse(root, spark)
     def day(s: String) = java.sql.Date.valueOf(s)
     val reg = new Registry(spark, wh)
@@ -355,7 +356,7 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("dynamic table: create / no-op / continue / fail / apply (dynamic_table.sql:27-66)") {
-    val root = Files.createTempDirectory("graft_dt").toString
+    val root = Scratch.tempDir("graft_dt").toString
     val wh = new Warehouse(root, spark)
     def reg(cfg: DynamicTableConfig, onChange: OnConfigChange, tag: String) = {
       val r = new Registry(spark, wh)
@@ -395,7 +396,7 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("node selection runs the model plus ancestors only; exclude drops nodes") {
-    val root = Files.createTempDirectory("graft_sel").toString
+    val root = Scratch.tempDir("graft_sel").toString
     val wh = new Warehouse(root, spark)
     val reg = new Registry(spark, wh)
     reg.source("raw", Seq((1L, "x")).toDF("k", "v"))
@@ -411,7 +412,7 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("dbt selector syntax: graph operators, tags, intersection, defer contract") {
-    val root = Files.createTempDirectory("graft_dbtsel").toString
+    val root = Scratch.tempDir("graft_dbtsel").toString
     val wh = new Warehouse(root, spark)
     val reg = new Registry(spark, wh)
     // raw -> a -> b -> c ; raw -> d ; b,d tagged "mart"
@@ -455,7 +456,7 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("state:modified / state:new selection against a saved manifest") {
-    val root = Files.createTempDirectory("graft_state").toString
+    val root = Scratch.tempDir("graft_state").toString
     val wh = new Warehouse(root, spark)
     def dag(reg: Registry, bFp: String, withE: Boolean): Registry = {
       reg.source("raw", Seq((1L, "x")).toDF("k", "v"))
@@ -492,7 +493,7 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("dbt retry: resume an aborted run from the failure point") {
-    val root = Files.createTempDirectory("graft_retry").toString
+    val root = Scratch.tempDir("graft_retry").toString
     val wh = new Warehouse(root, spark)
     val reg = new Registry(spark, wh)
     val failOnce = new java.util.concurrent.atomic.AtomicBoolean(true)
@@ -518,7 +519,7 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("Registry.columnLineage: definition-level lineage through the DAG") {
-    val root = Files.createTempDirectory("graft_lin").toString
+    val root = Scratch.tempDir("graft_lin").toString
     val wh = new Warehouse(root, spark)
     val reg = new Registry(spark, wh)
     reg.source("raw", Seq((1L, "x", 10.0)).toDF("id", "name", "amt"))
@@ -542,7 +543,7 @@ class RegistrySpec extends AnyFunSuite {
 
   test("declared tests run after materialization; error severity aborts the run") {
     import graft.operators.{GenericTests => GT}
-    val root = Files.createTempDirectory("graft_build").toString
+    val root = Scratch.tempDir("graft_build").toString
     val wh = new Warehouse(root, spark)
     def mkReg(errorIf: Long => Boolean) = {
       val r = new Registry(spark, wh)
@@ -569,7 +570,7 @@ class RegistrySpec extends AnyFunSuite {
 
   test("store_failures: failing rows persist through error aborts; pass rewrites empty") {
     import graft.operators.{GenericTests => GT}
-    val root = Files.createTempDirectory("graft_sf").toString
+    val root = Scratch.tempDir("graft_sf").toString
     val wh = new Warehouse(root, spark)
     def mkReg(rows: Seq[(Long, String)], errorIf: Long => Boolean) = {
       val r = new Registry(spark, wh)
@@ -591,7 +592,7 @@ class RegistrySpec extends AnyFunSuite {
     mkReg(Seq((1L, "a"), (2L, "c")), _ > 0).run()
     assert(wh.read(rel).count() === 0L)
     // without the flag, no audit relation appears
-    val root2 = Files.createTempDirectory("graft_sf2").toString
+    val root2 = Scratch.tempDir("graft_sf2").toString
     val wh2 = new Warehouse(root2, spark)
     val r2 = new Registry(spark, wh2)
     r2.source("raw", Seq((1L, "a")).toDF("k", "v"))
@@ -602,7 +603,7 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("full refresh rebuilds an incremental target") {
-    val root = Files.createTempDirectory("graft_wh2").toString
+    val root = Scratch.tempDir("graft_wh2").toString
     val wh = new Warehouse(root, spark)
     def reg(v: Int) = {
       val r = new Registry(spark, wh)
@@ -619,7 +620,7 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("AggregateMat combines partials across runs; fullRefresh resets; bad schema fails the CTAS") {
-    val wh = new Warehouse(Files.createTempDirectory("graft_aggmat").toString, spark)
+    val wh = new Warehouse(Scratch.tempDir("graft_aggmat").toString, spark)
     def reg(slice: Seq[(String, Long)], inc: Seq[(String, Long)]) = {
       val r = new Registry(spark, wh)
       r.source("raw_full", slice.toDF("k", "v"))
@@ -640,7 +641,7 @@ class RegistrySpec extends AnyFunSuite {
     assert(wh.read("rollup").collect().map(_.getString(0)).toSeq === Seq("z"))
     // a build whose columns don't match keys+combiners fails the FIRST run
     val bad = new Registry(spark,
-      new Warehouse(Files.createTempDirectory("graft_aggmat_bad").toString, spark))
+      new Warehouse(Scratch.tempDir("graft_aggmat_bad").toString, spark))
     bad.source("raw", Seq(("a", 1L)).toDF("k", "v"))
     bad.register(Model("rollup_bad", Seq("raw"),
       AggregateMat(Seq("k"), Seq("n" -> "sum")),
@@ -649,7 +650,7 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("hooks: on-run-start/end once per run, pre/post per model in DAG order") {
-    val wh = new Warehouse(Files.createTempDirectory("graft_hooks").toString, spark)
+    val wh = new Warehouse(Scratch.tempDir("graft_hooks").toString, spark)
     val log = java.util.Collections.synchronizedList(
       new java.util.ArrayList[String]())
     def rec(tag: String): Hook.Hook = ctx =>
@@ -685,7 +686,7 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("S9: grants/docs persist as sidecars with zero data effect; clone hard-links") {
-    val wh = new Warehouse(Files.createTempDirectory("graft_s9").toString, spark)
+    val wh = new Warehouse(Scratch.tempDir("graft_s9").toString, spark)
     val reg = new Registry(spark, wh)
     reg.source("raw", Seq((1L, "a"), (2L, "b")).toDF("k", "s"))
     reg.register(Model("tbl", Seq("raw"), TableMat(),
@@ -716,7 +717,7 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("catalog(): one row per (node, column) with DAG metadata and actual schema") {
-    val root = Files.createTempDirectory("graft_catalog").toString
+    val root = Scratch.tempDir("graft_catalog").toString
     val wh = new Warehouse(root, spark)
     val reg = new Registry(spark, wh)
     reg.source("src", Seq((1L, "x"), (2L, "y")).toDF("k", "v"))
@@ -737,7 +738,7 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("function materialization: SQL UDF usable downstream, inlined, replaced on rerun") {
-    val wh = new Warehouse(Files.createTempDirectory("graft_fn").toString, spark)
+    val wh = new Warehouse(Scratch.tempDir("graft_fn").toString, spark)
     def mkRegistry(body: String) = {
       val reg = new Registry(spark, wh)
       reg.source("raw", Seq((1L, 10.0), (2L, 200.0)).toDF("k", "v"))
@@ -766,7 +767,7 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("model contract: exact schema enforced before any write") {
-    val root = Files.createTempDirectory("graft_wh").toString
+    val root = Scratch.tempDir("graft_wh").toString
     val wh = new Warehouse(root, spark)
     def reg(contract: Seq[(String, String)], build: ModelContext => org.apache.spark.sql.DataFrame) = {
       val r = new Registry(spark, wh)
@@ -798,7 +799,7 @@ class RegistrySpec extends AnyFunSuite {
     // the failed runs never replaced the good table
     assert(wh.read("m").collect().map(_.getString(1)).sorted === Array("A", "B"))
     // a contract edit changes the manifest fingerprint (state:modified)
-    val tmp = Files.createTempDirectory("graft_manifest")
+    val tmp = Scratch.tempDir("graft_manifest")
     val p1 = tmp.resolve("m1").toString
     val p2 = tmp.resolve("m2").toString
     reg(Seq("k" -> "bigint", "s" -> "string"), good).writeManifest(p1)
@@ -808,7 +809,7 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("model versions: bare ref resolves latest, pin overrides, explicit version sticks") {
-    val root = Files.createTempDirectory("graft_wh").toString
+    val root = Scratch.tempDir("graft_wh").toString
     val wh = new Warehouse(root, spark)
     def mk(pin: Option[Int]) = {
       val reg = new Registry(spark, wh)
@@ -850,7 +851,7 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("exposures: +exposure selects the dependency closure, bare selects nothing runnable") {
-    val root = Files.createTempDirectory("graft_wh").toString
+    val root = Scratch.tempDir("graft_wh").toString
     val reg = new Registry(spark, new Warehouse(root, spark))
     reg.source("src", Seq((1L, 2L)).toDF("a", "b"))
     reg.register(Model("stg", Seq("src"), ViewMat, ctx => ctx.ref("src")))
@@ -872,7 +873,7 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("model groups + access: private visible only inside its group") {
-    val root = Files.createTempDirectory("graft_wh").toString
+    val root = Scratch.tempDir("graft_wh").toString
     def mk(consumerGroup: Option[String]) = {
       val reg = new Registry(spark, new Warehouse(root, spark))
       reg.source("src", Seq((1L, 2L)).toDF("a", "b"))
@@ -898,7 +899,7 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("seed column_types: declared overrides over inference, strict cast") {
-    val p = Files.createTempDirectory("graft_seed")
+    val p = Scratch.tempDir("graft_seed")
     val f = p.resolve("s.csv")
     Files.writeString(f, "code,rank,amount\nA,1,1.5\nB,2,2.5\n")
     val inferred = graft.sources.Sources.seed(spark, f.toString)
@@ -915,7 +916,7 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("metric layer: declared rollups, dim governance, ratio guard") {
-    val root = Files.createTempDirectory("graft_wh").toString
+    val root = Scratch.tempDir("graft_wh").toString
     val reg = new Registry(spark, new Warehouse(root, spark))
     val t = (d: String) => java.sql.Timestamp.valueOf(s"$d 00:00:00")
     reg.source("facts", Seq(
@@ -982,7 +983,7 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("lint: fanout threshold and clean-DAG silence") {
-    val root = Files.createTempDirectory("graft_wh").toString
+    val root = Scratch.tempDir("graft_wh").toString
     val reg = new Registry(spark, new Warehouse(root, spark))
     reg.source("src", Seq((1L, 2L)).toDF("a", "b"))
     reg.register(Model("stg_hub", Seq("src"), ViewMat, ctx => ctx.ref("src"),
@@ -1000,7 +1001,7 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("unitTest: mocked refs, subset-column expectation, incremental override") {
-    val root = Files.createTempDirectory("graft_wh").toString
+    val root = Scratch.tempDir("graft_wh").toString
     val reg = new Registry(spark, new Warehouse(root, spark))
     reg.register(Model("rollup", Seq("src"),
       IncrementalMat(Incremental.Merge, Seq("g")),
@@ -1052,7 +1053,7 @@ class RegistrySpec extends AnyFunSuite {
     // table must not compact into ONE oversized file), the returned file
     // count, the fingerprint gate, and post-compact upsert correctness.
     import graft.operators.GenericTests
-    val root = Files.createTempDirectory("graft_compact").toString
+    val root = Scratch.tempDir("graft_compact").toString
     val wh = new Warehouse(root, spark)
     (0 until 6).foreach { i =>
       val df = (0 until 100).map(j => (i * 100L + j, s"v$j")).toDF("id", "v")
@@ -1091,7 +1092,7 @@ class RegistrySpec extends AnyFunSuite {
   test("stored-baseline drift lifecycle: baseline frozen across runs, nightly scores the STORED rollup") {
     import graft.functions.QuantileSketch
     import graft.pipeline.Inference
-    val root = Files.createTempDirectory("graft_wh").toString
+    val root = Scratch.tempDir("graft_wh").toString
     val wh = new Warehouse(root, spark)
     // days 1-2 are the baseline window; day 5 is the nightly slice
     val rows = Seq((1L, 10L), (1L, 20L), (2L, 20L), (2L, 30L),
@@ -1143,7 +1144,7 @@ class RegistrySpec extends AnyFunSuite {
   test("stored-baseline centroid drift: baseline frozen, nightly scores the STORED sums") {
     import graft.operators.GenericTests
     import graft.pipeline.Clustering
-    val root = Files.createTempDirectory("graft_wh").toString
+    val root = Scratch.tempDir("graft_wh").toString
     val wh = new Warehouse(root, spark)
     // ids 0,1 are the baseline window (centroid along (1, 0)); id 2 is
     // the nightly slice (centroid along (0, 1)) — orthogonal, cos = 0
@@ -1195,7 +1196,7 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("rolling-baseline slide touches ONLY the new day's partition — untouched dirs byte-identical") {
-    val root = Files.createTempDirectory("graft_wh").toString
+    val root = Scratch.tempDir("graft_wh").toString
     val wh = new Warehouse(root, spark)
     val rows = Seq(("2024-01-01", 10L), ("2024-01-01", 20L),
       ("2024-01-02", 20L), ("2024-01-03", 30L), ("2024-01-03", 30L))
@@ -1280,7 +1281,7 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("declared-predicate ref routes through the sidecars: inputFiles pruned, identity rows, fallback filters, RefPeriod raises off-warehouse") {
-    val root = Files.createTempDirectory("graft_wh").toString
+    val root = Scratch.tempDir("graft_wh").toString
     val wh = new Warehouse(root, spark)
     val reg = new Registry(spark, wh)
     // a period-partitioned dep with a value-stats sidecar (defer-style:
@@ -1319,7 +1320,7 @@ class RegistrySpec extends AnyFunSuite {
       (3000L to 3049L).toSeq)
     // fallback: a SOURCE dep (no warehouse relation) row-filters
     val reg2 = new Registry(spark, new Warehouse(
-      Files.createTempDirectory("graft_wh").toString, spark))
+      Scratch.tempDir("graft_wh").toString, spark))
     reg2.source("src", Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "s"))
     reg2.register(Model("pick", Seq("src"), ViewMat, ctx =>
       ctx.ref("src", Seq(RefIn("k", Seq(2L))))))
@@ -1335,7 +1336,7 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("RefPrefix ref routes through readPrunedPrefix: inputFiles pruned, identity rows, fallback filters") {
-    val root = Files.createTempDirectory("graft_wh").toString
+    val root = Scratch.tempDir("graft_wh").toString
     val wh = new Warehouse(root, spark)
     val reg = new Registry(spark, wh)
     // 26 letter-prefixed key families sorted across 8 range partitions,
@@ -1366,7 +1367,7 @@ class RegistrySpec extends AnyFunSuite {
       (1200L until 1220L).toSeq)
     // fallback: a SOURCE dep (no warehouse relation) row-filters startsWith
     val reg2 = new Registry(spark, new Warehouse(
-      Files.createTempDirectory("graft_wh").toString, spark))
+      Scratch.tempDir("graft_wh").toString, spark))
     reg2.source("src", Seq(("ma", 1L), ("mb", 2L), ("na", 3L)).toDF("k", "v"))
     reg2.register(Model("pick", Seq("src"), ViewMat, ctx =>
       ctx.ref("src", Seq(RefPrefix("k", "m")))))
@@ -1377,7 +1378,7 @@ class RegistrySpec extends AnyFunSuite {
 
   test("ctx.join: plan from stored stats (BroadcastHashJoin pinned where advised), LEO feedback closes through storage, fixture/no-profile degrades") {
     val wh = new Warehouse(
-      Files.createTempDirectory("graft_ctxjoin").toString, spark)
+      Scratch.tempDir("graft_ctxjoin").toString, spark)
     val reg = new Registry(spark, wh).enableJoinFeedback("fb")
     // fact: 2000 rows, keys 0..49 but only 40% of rows carry k < 40
     reg.source("fact_src", spark.range(0, 2000)
@@ -1441,7 +1442,7 @@ class RegistrySpec extends AnyFunSuite {
     assert(diff.isEmpty, diff.collect().mkString("\n"))
     // recordFeedback without a declared feedback table raises
     val reg3 = new Registry(spark, new Warehouse(
-      Files.createTempDirectory("graft_ctxjoin3").toString, spark))
+      Scratch.tempDir("graft_ctxjoin3").toString, spark))
     reg3.source("s1", Seq((1L, 1L)).toDF("k", "x"))
     reg3.source("s2", Seq((1L, 2L)).toDF("k", "y"))
     reg3.register(Model("j3", Seq("s1", "s2"), ViewMat,
@@ -1449,16 +1450,35 @@ class RegistrySpec extends AnyFunSuite {
     intercept[IllegalArgumentException] { reg3.run() }
     // undeclared dependency raises at the ctx.join call
     val reg4 = new Registry(spark, new Warehouse(
-      Files.createTempDirectory("graft_ctxjoin4").toString, spark))
+      Scratch.tempDir("graft_ctxjoin4").toString, spark))
     reg4.source("s1", Seq((1L, 1L)).toDF("k", "x"))
     reg4.register(Model("j4", Seq("s1"), ViewMat,
       ctx => ctx.join("s1", "phantom", Seq("k"))))
     intercept[IllegalArgumentException] { reg4.run() }
   }
 
+  test("incremental merge that throws after pinning its batch leaves nothing pinned") {
+    val wh = new Warehouse(Scratch.tempDir("graft_pin_throw").toString, spark)
+    val reg = new Registry(spark, wh)
+    reg.source("raw", Seq((1L, "a"), (2L, "b")).toDF("k", "s"))
+    // the unique key is missing from the batch: the merge fails to resolve
+    // after the multi-scan source is pinned
+    var batch: org.apache.spark.sql.DataFrame = null
+    reg.register(Model("inc", Seq("raw"),
+      IncrementalMat(Incremental.Merge, Seq("missing_key")),
+      ctx => { batch = ctx.ref("raw").withColumn("s", upper(col("s"))); batch }))
+    reg.run() // first run: CTAS, no pin
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[Exception] { reg.run() }
+    assert(batch.storageLevel === org.apache.spark.storage.StorageLevel.NONE,
+      "batch left in the CacheManager")
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore
+    assert(leaked.isEmpty, s"pinned RDDs left registered: $leaked")
+  }
+
   test("ctx.join composite key: plan resolves from the 'k1|k2' composite profile, broadcast pinned") {
     val wh = new Warehouse(
-      Files.createTempDirectory("graft_ctxjoin_ck").toString, spark)
+      Scratch.tempDir("graft_ctxjoin_ck").toString, spark)
     val reg = new Registry(spark, wh)
     // fact: 400 rows over 100 (k1, k2) tuples; dim: 20 tuples
     reg.source("f_src", spark.range(0, 400).select(
@@ -1484,16 +1504,21 @@ class RegistrySpec extends AnyFunSuite {
     assert(j.queryExecution.executedPlan.toString
       .contains("BroadcastHashJoin"), "composite-advised broadcast missing")
     // the decision line names the COMPOSITE key and its tuple counts
-    // (ndv 16+ from k=16 registers over 100/20 tuples: dim exact 20)
-    assert(reg.metadataOps.exists(m => m.startsWith("stats_join j:")
+    // (n_b is the dim's exact count of 20 tuples)
+    val line = reg.metadataOps.find(m => m.startsWith("stats_join j:")
       && m.contains("on k1|k2") && m.contains("n_b=20")
-      && m.contains("plan=broadcast_right")),
+      && m.contains("plan=broadcast_right"))
+    assert(line.isDefined,
       reg.metadataOps.filter(_.startsWith("stats_join")).mkString("\n"))
+    // the fact's 100 tuples are estimated from the k=16 registers the hook
+    // recorded: read at any other k the estimate collapses to the floor 16
+    val ndvA = "ndv_a=(\\d+)".r.findFirstMatchIn(line.get).get.group(1).toLong
+    assert(ndvA > 16L, line.get)
   }
 
   test("ctx.join skew routing: certified hot key routes hot/cold (broadcast pinned, identity), no-certificate falls through, missing sidecar raises") {
     val wh = new Warehouse(
-      Files.createTempDirectory("graft_ctxjoin_mg").toString, spark)
+      Scratch.tempDir("graft_ctxjoin_mg").toString, spark)
     val reg = new Registry(spark, wh)
     // key 7 owns half the fact; the tail spreads over 0..49
     reg.source("f_src", spark.range(0, 1000).select(
@@ -1548,7 +1573,7 @@ class RegistrySpec extends AnyFunSuite {
 
   test("ctx.starJoin: dims ordered by stored estimate (most selective first), per-dim broadcast, identity, unprofiled dims last") {
     val wh = new Warehouse(
-      Files.createTempDirectory("graft_starjoin").toString, spark)
+      Scratch.tempDir("graft_starjoin").toString, spark)
     val reg = new Registry(spark, wh)
     reg.source("f_src", spark.range(0, 1000).select(
       (col("id") % 100L).as("k1"), (col("id") % 10L).as("k2"),
@@ -1608,7 +1633,7 @@ class RegistrySpec extends AnyFunSuite {
   test("ctx.aggRef: served plan reads ONLY the rollup sidecar, rows identical to direct, non-subsumed falls back to base") {
     import graft.engine.Rollup.{Measure, Want}
     val wh = new Warehouse(
-      Files.createTempDirectory("graft_aggref").toString, spark)
+      Scratch.tempDir("graft_aggref").toString, spark)
     val reg = new Registry(spark, wh)
     reg.source("raw", spark.range(0, 1000).select(
       (col("id") % 4L).as("g"), (col("id") % 3L).as("h"),
@@ -1655,7 +1680,7 @@ class RegistrySpec extends AnyFunSuite {
 
   test("VersionedTableMat: runs stack immutable versions, deps defer to the CURRENT version, old versions stay pinned") {
     val wh = new Warehouse(
-      Files.createTempDirectory("graft_vermat").toString, spark)
+      Scratch.tempDir("graft_vermat").toString, spark)
     def runWith(n: Int): Registry = {
       val reg = new Registry(spark, wh)
       reg.source("raw", spark.range(0, n).select(col("id").as("k")))
@@ -1702,7 +1727,7 @@ class RegistrySpec extends AnyFunSuite {
     // two hooks on one model: the spec table carries BOTH rollups' rows,
     // and a re-run REPLACES each rollup's own rows (no duplication)
     val wh = new Warehouse(
-      Files.createTempDirectory("graft_rollspec").toString, spark)
+      Scratch.tempDir("graft_rollspec").toString, spark)
     val reg = new Registry(spark, wh)
     reg.source("raw", spark.range(0, 100).select(
       (col("id") % 4L).as("g"), (col("id") % 3L).as("h"), col("id").as("v")))

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.engine.{Skew, Warehouse}
+import graft.queries.Scratch
 
 /** Scale-path utilities: salted joins must be result-equivalent to plain
   * joins; bucketed tables must join without exchanges.
@@ -30,7 +31,7 @@ class ScaleSpec extends AnyFunSuite {
 
   test("compactBucketed: one file per bucket, content identical, appends keep working") {
     import scala.jdk.CollectionConverters._
-    val root = Files.createTempDirectory("graft_compact_bkt").toString
+    val root = Scratch.tempDir("graft_compact_bkt").toString
     val wh = new Warehouse(root, spark)
     def parquetFiles(): Seq[java.nio.file.Path] =
       Files.walk(java.nio.file.Paths.get(root)).iterator().asScala
@@ -70,7 +71,7 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("bucketed tables join with zero exchanges") {
-    val wh = new Warehouse(Files.createTempDirectory("graft_bkt").toString, spark)
+    val wh = new Warehouse(Scratch.tempDir("graft_bkt").toString, spark)
     val left = (1 to 500).map(i => (i.toLong, s"l$i")).toDF("k", "lv")
     val right = (1 to 500).map(i => (i.toLong, s"r$i")).toDF("k", "rv")
     wh.writeBucketed("bkt_left", left, Seq("k"), nBuckets = 4)
@@ -98,7 +99,7 @@ class ScaleSpec extends AnyFunSuite {
     // produce its delta-touching pairs, because it reads only the delta
     // and the persisted band/shingle index, never corpus text
     import graft.pipeline.IncrementalDedup
-    val tmp = Files.createTempDirectory("graft_incdd_s").toString
+    val tmp = Scratch.tempDir("graft_incdd_s").toString
     val mk = (ids: Seq[Long]) => ids.map(i =>
       (i, s"alpha beta gamma delta eps zeta token$i tail$i")).toDF("doc_id", "text")
     // doc 100 duplicates corpus doc 1's text exactly; doc 101 is novel
@@ -156,7 +157,7 @@ class ScaleSpec extends AnyFunSuite {
     // data-file count must stay bounded by the budget no matter how many
     // runs land, and correctness must survive the generation rewrites.
     import graft.pipeline.IncrementalDedup
-    val wh = new Warehouse(Files.createTempDirectory("graft_incdd_c").toString, spark)
+    val wh = new Warehouse(Scratch.tempDir("graft_incdd_c").toString, spark)
     val mk = (ids: Seq[Long]) => ids.map(i =>
       (i, s"alpha beta gamma delta eps zeta token$i tail$i")).toDF("doc_id", "text")
     try {
@@ -190,7 +191,7 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("bucketed incremental merge keeps bucket metadata across generations; zero-exchange self-join") {
-    val wh = new Warehouse(Files.createTempDirectory("graft_bkt_inc").toString, spark)
+    val wh = new Warehouse(Scratch.tempDir("graft_bkt_inc").toString, spark)
     try {
       wh.writeBucketed("bkt_inc", (1 to 500).map(i => (i.toLong, s"v$i")).toDF("k", "v"),
         Seq("k"), nBuckets = 4)
@@ -239,7 +240,7 @@ class ScaleSpec extends AnyFunSuite {
 
   test("partitioned upsert rewrites ONLY touched buckets (untouched files byte-identical)") {
     import scala.jdk.CollectionConverters._
-    val root = Files.createTempDirectory("graft_upsert_part").toString
+    val root = Scratch.tempDir("graft_upsert_part").toString
     val wh = new Warehouse(root, spark)
     val batch1 = (1L to 200L).map(k => (k, s"v$k")).toDF("k", "v")
     wh.upsertPartitioned("t", batch1, Seq("k"), nBuckets = 8)
@@ -287,24 +288,26 @@ class ScaleSpec extends AnyFunSuite {
       s"expected a static IN partition filter on the scan, got: $partFilters")
   }
 
-  test("freeLocalCheckpoint actually releases checkpoint blocks (unpersist does not)") {
-    import org.apache.spark.sql.GraftSqlBridge
+  test("Pin.release actually releases checkpoint blocks (unpersist does not)") {
+    import graft.engine.Pin
+    import graft.engine.Pin.PinOps
+    import org.apache.spark.sql.execution.LogicalRDD
     // assert on the SPECIFIC checkpoint RDD id — global persistent-RDD
     // counts race the asynchronous ContextCleaner
     def registered(ids: Seq[Int]): Boolean =
       ids.exists(spark.sparkContext.getPersistentRDDs.contains)
-    val cp = (1 to 100).map(i => (i.toLong, s"v$i")).toDF("k", "v").localCheckpoint(true)
-    val ids = GraftSqlBridge.localCheckpointRddIds(cp)
+    val cp = (1 to 100).map(i => (i.toLong, s"v$i")).toDF("k", "v").pinEager()
+    val ids = cp.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd.id }
     assert(ids.nonEmpty && registered(ids), "checkpoint should register a persistent RDD")
     cp.unpersist() // the trap: clears nothing for checkpoint storage
     assert(registered(ids), "Dataset.unpersist must be a no-op here")
-    GraftSqlBridge.freeLocalCheckpoint(cp)
-    assert(!registered(ids), "freeLocalCheckpoint must release the RDD")
+    Pin.release(cp)
+    assert(!registered(ids), "Pin.release must release the RDD")
   }
 
   test("compact collapses append debris and preserves partition layout") {
     import scala.jdk.CollectionConverters._
-    val root = Files.createTempDirectory("graft_compact").toString
+    val root = Scratch.tempDir("graft_compact").toString
     val wh = new Warehouse(root, spark)
     def parquetFiles(name: String): Seq[String] = {
       val d = java.nio.file.Paths.get(root, name)
@@ -390,7 +393,7 @@ class ScaleSpec extends AnyFunSuite {
 
   test("temperatureSample's derived-rate filter pushes to the scan (no exchange)") {
     import graft.pipeline.Sampling
-    val dir = java.nio.file.Files.createTempDirectory("graft_temp_scan").toString
+    val dir = Scratch.tempDir("graft_temp_scan").toString
     try {
       (1L to 300L).map(i => (i, if (i % 3 == 0) "a" else "b")).toDF("id", "src")
         .write.mode("overwrite").parquet(dir)
@@ -420,7 +423,7 @@ class ScaleSpec extends AnyFunSuite {
     import graft.streaming.EventsStream
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sc = spark.sqlContext
-    val wh = new Warehouse(Files.createTempDirectory("graft_stream_crash").toString, spark)
+    val wh = new Warehouse(Scratch.tempDir("graft_stream_crash").toString, spark)
     val mem = MemoryStream[(Long, String)]
     val stream = mem.toDF().toDF("k", "v")
     mem.addData((1L, "a"), (2L, "b"))
@@ -470,7 +473,7 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("drop removes bucketed-table state: catalog entry, generation dirs, gen sidecar") {
-    val wh = new Warehouse(Files.createTempDirectory("graft_bktdrop").toString, spark)
+    val wh = new Warehouse(Scratch.tempDir("graft_bktdrop").toString, spark)
     val rows = (1 to 100).map(i => (i.toLong, s"v$i")).toDF("k", "v")
     wh.writeBucketed("bkt_drop_t", rows, Seq("k"), nBuckets = 4)
     wh.mergeBucketed("bkt_drop_t", rows.filter($"k" <= 10), Seq("k"), nBuckets = 4)
@@ -602,7 +605,7 @@ class ScaleSpec extends AnyFunSuite {
     import graft.streaming.EventsStream
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sc = spark.sqlContext
-    val wh = new Warehouse(Files.createTempDirectory("graft_stream_wh").toString, spark)
+    val wh = new Warehouse(Scratch.tempDir("graft_stream_wh").toString, spark)
     val mem = MemoryStream[(Long, String)]
     val stream = mem.toDF().toDF("k", "v")
     mem.addData((1L, "a"), (2L, "b"))
@@ -743,7 +746,7 @@ class ScaleSpec extends AnyFunSuite {
   test("rewriteZOrdered: second-dimension slab lands in fewer files than linear layout") {
     import graft.engine.Warehouse
     val wh = new Warehouse(
-      java.nio.file.Files.createTempDirectory("graft_zorder").toString, spark)
+      Scratch.tempDir("graft_zorder").toString, spark)
     val grid = spark.range(0, 65536).select(
       (col("id") / 256).cast("long").as("x"), (col("id") % 256).as("y"),
       col("id").as("payload"))

@@ -20,8 +20,11 @@ class ScratchSpec extends AnyFunSuite {
     wh.writeSwap("t", spark.range(3).toDF())
     val root = Scratch.root("scratchspec", dir)
     assert(parquetFiles(root) > 0)
+    val tmp = Scratch.tempDir("graft_scratchspec").toFile
+    assert(tmp.isDirectory)
     Scratch.cleanup()
     assert(!root.exists())
+    assert(!tmp.exists())
   }
 
   // a table the query writes but its drop list leaves out keeps its old

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types._
 import graft.sources.Sources
 import graft.engine.Warehouse
 import graft.operators.GenericTests
+import graft.queries.Scratch
 
 /** S1/S2 CSV seed loading (infer-then-pin) and the store-failures sink. */
 class SeedSpec extends AnyFunSuite {
@@ -14,7 +15,7 @@ class SeedSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("seed CSV: inferred then pinned schema round-trips (S1)") {
-    val dir = Files.createTempDirectory("graft_seed")
+    val dir = Scratch.tempDir("graft_seed")
     val csv = dir.resolve("claim_lines_demo.csv")
     Files.writeString(csv,
       "claim_id,member_id,service_date,proc_code\n" +
@@ -36,7 +37,7 @@ class SeedSpec extends AnyFunSuite {
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
-    val good = Files.createTempDirectory("graft_jsonl").resolve("docs.jsonl")
+    val good = Scratch.tempDir("graft_jsonl").resolve("docs.jsonl")
     Files.writeString(good,
       """{"doc_id": 1, "text": "a b", "unknown_field": true}
         |{"doc_id": 2, "text": "c"}
@@ -53,7 +54,7 @@ class SeedSpec extends AnyFunSuite {
   }
 
   test("store_failures persists tagged failing rows across runs") {
-    val wh = new Warehouse(Files.createTempDirectory("graft_dq").toString, spark)
+    val wh = new Warehouse(Scratch.tempDir("graft_dq").toString, spark)
     val failing = Seq((7L, 2L)).toDF("unique_field", "n_records")
     GenericTests.storeFailures(wh, "orders_custkey_unique", failing,
       Timestamp.valueOf("2025-01-01 00:00:00"))

@@ -1,10 +1,10 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.engine.{Constraints, Incremental, IncrementalMat, JoinView,
   Model, Registry, TableMat, ViewMat, Warehouse}
+import graft.queries.Scratch
 
 /** The don't-recompute surfaces (round-15 continuation III): build
   * avoidance from input signatures, verified-constraint semantic rewrites
@@ -17,7 +17,7 @@ class SemanticSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def freshWh(): Warehouse =
-    new Warehouse(Files.createTempDirectory("graft_sem").toString, spark)
+    new Warehouse(Scratch.tempDir("graft_sem").toString, spark)
 
   // ---- build reuse ---------------------------------------------------
 

@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import graft.engine.Snapshot
 import graft.engine.Snapshot._
+import graft.queries.Scratch
 
 /** SCD2 scenario vectors per FIXTURES.md §3: new key -> insert; changed row ->
   * close + insert; unchanged -> no-op; hard deletes under
@@ -124,7 +125,7 @@ class SnapshotSpec extends AnyFunSuite {
     import graft.engine.{Model, Registry, SnapshotMat, Warehouse}
     import org.apache.spark.sql.functions.col
     val sentinel = java.sql.Timestamp.valueOf("9999-12-31 00:00:00")
-    val root = java.nio.file.Files.createTempDirectory("graft_vtc").toString
+    val root = Scratch.tempDir("graft_vtc").toString
     val wh = new Warehouse(root, spark)
     def run(src: org.apache.spark.sql.DataFrame, ts: java.sql.Timestamp): Unit = {
       val reg = new Registry(spark, wh)
@@ -163,7 +164,7 @@ class SnapshotSpec extends AnyFunSuite {
     import org.apache.parquet.schema.LogicalTypeAnnotation
     import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
     val sentinel = java.sql.Timestamp.valueOf("9999-12-31 00:00:00")
-    val root = java.nio.file.Files.createTempDirectory("graft_int96").toString
+    val root = Scratch.tempDir("graft_int96").toString
     val wh = new Warehouse(root, spark)
     val reg = new Registry(spark, wh)
     reg.source("src", Seq((1L, "a")).toDF("member_id", "plan"))

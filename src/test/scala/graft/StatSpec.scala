@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.{Features, GenericTests}
 import graft.pipeline.{Dedup, Similarity, Stats, TextAnalysis}
+import graft.queries.Scratch
 
 /** Hand-computable vectors for the round-9 continuation battery: chi-square
   * cells, autocorrelation, TWAP, k-anonymity, Simpson diversity, RRF
@@ -393,7 +394,7 @@ class StatSpec extends AnyFunSuite {
     import graft.plans.Expressions
     // file source keeps the Filter node alive (a LocalRelation would be
     // fully evaluated at optimize time — the JW-rule spec's lesson)
-    val dir = java.nio.file.Files.createTempDirectory("graft_dlprune").toString
+    val dir = Scratch.tempDir("graft_dlprune").toString
     Seq(("abcd", "acbd"), ("abcd", "abcdefgh"), ("x", "xy"),
       ("same", "same"), ("abc", "zzzzzzzzz")).toDF("a", "b")
       .write.mode("overwrite").parquet(dir)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.streaming.EventsStream
 import graft.streaming.EventsStream._
+import graft.queries.Scratch
 
 /** Streaming surface: the file-driven windowed aggregate must agree with its
   * batch equivalent, and stateful sessionization must split on the gap.
@@ -203,10 +204,9 @@ class StreamingSpec extends AnyFunSuite {
   test("register compaction lifecycle: k-bounded closed hour, checkpoint-resumed merge, cuts in envelope") {
     implicit val s = spark
     implicit val sc = s.sqlContext
-    import java.nio.file.Files
     import graft.functions.QuantileSketch
     val wh = new graft.engine.Warehouse(
-      Files.createTempDirectory("graft_qsc").toString, spark)
+      Scratch.tempDir("graft_qsc").toString, spark)
     val hourA = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     val hourB = java.sql.Timestamp.valueOf("2024-01-02 00:00:00")
     val mem = MemoryStream[(java.sql.Timestamp, Double)]
@@ -251,11 +251,10 @@ class StreamingSpec extends AnyFunSuite {
   test("trendingStream materializes top-k per finalized window == batch rank") {
     implicit val s = spark
     implicit val sc = s.sqlContext
-    import java.nio.file.Files
     val min = 60L * 1000000
     val base = 1700000000L * 1000000
     val wh = new graft.engine.Warehouse(
-      Files.createTempDirectory("graft_trend").toString, spark)
+      Scratch.tempDir("graft_trend").toString, spark)
     val mem = MemoryStream[(Long, String)] // (us, event_type)
     def stream = mem.toDF().toDF("us", "event_type")
       .withColumn("ts", timestamp_micros($"us"))
@@ -290,11 +289,10 @@ class StreamingSpec extends AnyFunSuite {
   test("burstAlertStream: finalized windows over threshold == batch twin, append-only") {
     implicit val s = spark
     implicit val sc = s.sqlContext
-    import java.nio.file.Files
     val min = 60L * 1000000
     val base = 1700000000L * 1000000
     val wh = new graft.engine.Warehouse(
-      Files.createTempDirectory("graft_burst").toString, spark)
+      Scratch.tempDir("graft_burst").toString, spark)
     val mem = MemoryStream[(Long, Long)] // (user_id, us)
     def stream = mem.toDF().toDF("user_id", "us")
       .withColumn("ts", timestamp_micros($"us"))
@@ -327,7 +325,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("eventsSchema falls back to the generator schema when no file exists yet") {
-    val empty = java.nio.file.Files.createTempDirectory("graft_noevents").toString
+    val empty = Scratch.tempDir("graft_noevents").toString
     val st = EventsStream.eventsSchema(spark, empty)
     assert(st.fieldNames.toSeq ===
       Seq("event_id", "ts", "user_id", "event_type", "value", "props"))
@@ -355,7 +353,7 @@ class StreamingSpec extends AnyFunSuite {
     val stream = mem.toDF().toDF("us", "event_type")
       .withColumn("ts", timestamp_micros($"us"))
     val wh = new graft.engine.Warehouse(
-      java.nio.file.Files.createTempDirectory("graft_bnd").toString, spark)
+      Scratch.tempDir("graft_bnd").toString, spark)
     mem.addData((b0 + 10, "a"))
     EventsStream.trendingStream(stream, wh, "bnd", 2).awaitTermination()
     // watermark after the sentinel = b0+3h - 2h = b0+1h == end of BOTH
@@ -432,7 +430,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.pipeline.{Dedup, IncrementalDedup}
     implicit val s = spark
     implicit val sc = s.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_mh_stream").toString
+    val root = Scratch.tempDir("graft_mh_stream").toString
     val wh = new Warehouse(root, spark)
     val mkText = (i: Long) => s"alpha beta gamma delta eps zeta token$i tail$i"
     // corpus 1..6; the stream delivers 101..104 in two triggers, with 102
@@ -555,7 +553,7 @@ class StreamingSpec extends AnyFunSuite {
       (2L, "first", ts(2)))
     val deduped = EventsStream.dedupStream(
       mem.toDF().toDF("k", "v", "ts"), Seq("k"), "ts", "1 hour")
-    val cp = java.nio.file.Files.createTempDirectory("graft_dedup_cp").toString
+    val cp = Scratch.tempDir("graft_dedup_cp").toString
     val got = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String)]()
     def runOnce(): Unit = {
       // foreachBatch sink: supports checkpoint RECOVERY (memory sink does not)
@@ -582,7 +580,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sc = spark.sqlContext
     import spark.implicits._
     val wh = new graft.engine.Warehouse(
-      java.nio.file.Files.createTempDirectory("graft_aggstream").toString, spark)
+      Scratch.tempDir("graft_aggstream").toString, spark)
     val mem = MemoryStream[(String, Long)]
     val combiners = Seq("n" -> "sum", "total" -> "sum")
     def run() = {
@@ -620,7 +618,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sc = spark.sqlContext
     import spark.implicits._
     val wh = new graft.engine.Warehouse(
-      java.nio.file.Files.createTempDirectory("graft_mgstream").toString, spark)
+      Scratch.tempDir("graft_mgstream").toString, spark)
     val mem = MemoryStream[Long]
     def run() = EventsStream.mgStream(mem.toDF().toDF("hk"), wh,
       "hh", $"hk", 4).awaitTermination()
@@ -650,7 +648,7 @@ class StreamingSpec extends AnyFunSuite {
   test("stream-static enrichment == batch join, left-NULL passthrough") {
     implicit val sc = spark.sqlContext
     import spark.implicits._
-    val dimDir = java.nio.file.Files.createTempDirectory("graft_dim").toString
+    val dimDir = Scratch.tempDir("graft_dim").toString
     Seq(("click", "engage"), ("view", "passive")).toDF("event_type", "tier")
       .write.mode("overwrite").parquet(dimDir)
     val dim = spark.read.parquet(dimDir)
@@ -719,9 +717,8 @@ class StreamingSpec extends AnyFunSuite {
   test("joinStream: cross-batch view == batch join; batch-id ledger gates replays") {
     val s = spark
     implicit val sc = s.sqlContext
-    import java.nio.file.Files
     val wh = new graft.engine.Warehouse(
-      Files.createTempDirectory("graft_jstream").toString, spark)
+      Scratch.tempDir("graft_jstream").toString, spark)
     val dim = Seq((1L, "a"), (2L, "b")).toDF("uid", "seg") // uid 3 absent
     wh.writeSwap("jdim", dim)
     val mem = MemoryStream[(Long, Long)]

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.engine.TableStats
 import graft.functions.QuantileSketch
+import graft.queries.Scratch
 
 /** Sketch-backed optimizer statistics (engine/TableStats): profile
   * builds, the exact-under-k NDV path, the System-R join estimate and
@@ -220,10 +221,9 @@ class TableStatsSpec extends AnyFunSuite {
   }
 
   test("analyzeHook: sidecars rewrite after CTAS and after the merge; run-level misuse raises") {
-    import java.nio.file.Files
     import graft.engine.{HookContext, Incremental, IncrementalMat, Model,
       Registry, Warehouse}
-    val wh = new Warehouse(Files.createTempDirectory("graft_wh").toString, spark)
+    val wh = new Warehouse(Scratch.tempDir("graft_wh").toString, spark)
     val reg = new Registry(spark, wh)
     val src = (1L to 10L).map(i => (i, i % 3L)).toDF("id", "g")
     reg.source("src", src)
@@ -233,7 +233,7 @@ class TableStatsSpec extends AnyFunSuite {
         else ctx.ref("src").filter(col("id") <= 4L),
       postHooks = Seq(TableStats.analyzeHook(Seq("id", "g"), 16))))
     reg.run()
-    def prof() = TableStats.readProfile(wh, "t", "id", "x", 16)
+    def prof() = TableStats.readProfile(wh, "t", "id", "x")
       .collect().head
     assert(prof().getAs[Long]("n_x") === 4L
       && prof().getAs[Long]("ndv_x") === 4L)
@@ -280,7 +280,6 @@ class TableStatsSpec extends AnyFunSuite {
   }
 
   test("clusterAdvisor: workload-weighted pricing, and the chosen layout actually prunes") {
-    import java.nio.file.Files
     import graft.engine.Warehouse
     // a: uniform 0..999; b: uniform 0..99 — workload is a tight range
     // on a (sel 10%) with weight 4 and a half-domain range on b with
@@ -307,7 +306,7 @@ class TableStatsSpec extends AnyFunSuite {
     assert(gotDup === got, s"duplicate workload rows skewed the advice: $gotDup vs $got")
     // the physical loop: the advised layout's manifest prunes the
     // dominant predicate; the rejected layout reads every file
-    val wh = new Warehouse(Files.createTempDirectory("graft_wh").toString, spark)
+    val wh = new Warehouse(Scratch.tempDir("graft_wh").toString, spark)
     wh.writeSwap("by_a", df.repartitionByRange(8, col("a"))
       .sortWithinPartitions("a"), statsCols = Seq("a"))
     wh.writeSwap("by_b", df.repartitionByRange(8, col("b"))
@@ -360,10 +359,9 @@ class TableStatsSpec extends AnyFunSuite {
     // the physical loop (the q498 discipline): the eq-advised column's
     // BLOOM sidecar actually serves the equality read — files pruned,
     // rows identical — while the rejected range layout reads every file
-    import java.nio.file.Files
     import graft.engine.Warehouse
     val wh = new Warehouse(
-      Files.createTempDirectory("graft_wh").toString, spark)
+      Scratch.tempDir("graft_wh").toString, spark)
     wh.writeSwap("by_b", df.repartition(8, col("b")),
       bloomCols = Seq("b"))
     wh.writeSwap("by_a", df.repartitionByRange(8, col("a"))
@@ -412,7 +410,6 @@ class TableStatsSpec extends AnyFunSuite {
     // the physical loop (ManifestSpec carries the full Morton pin): the
     // advised PAIR's Z-order layout out-prunes the best single column
     // on the declared box
-    import java.nio.file.Files
     import graft.engine.Warehouse
     val grid = (for { a <- 0L until 64L; b <- 0L until 64L }
       yield (a, b)).toDF("a", "b")
@@ -425,7 +422,7 @@ class TableStatsSpec extends AnyFunSuite {
     assert(adv.filter(_.getAs[Long]("chosen") === 1L)
       .map(_.getString(0)).toSeq === Seq("a|b"), adv.mkString(","))
     val wh = new Warehouse(
-      Files.createTempDirectory("graft_wh").toString, spark)
+      Scratch.tempDir("graft_wh").toString, spark)
     wh.writeSwap("zpair", grid, statsCols = Seq("a", "b"))
     wh.rewriteZOrdered("zpair", "a", "b", numFiles = 16)
     wh.writeSwap("zsingle", grid.repartitionByRange(16, col("a"))
@@ -441,10 +438,9 @@ class TableStatsSpec extends AnyFunSuite {
   }
 
   test("zorderHook: advised pair physically re-lays the model (box read prunes), single-col path clusters, missing sums raises") {
-    import java.nio.file.Files
     import graft.engine.{HookContext, Model, Registry, TableMat, Warehouse}
     val wh = new Warehouse(
-      Files.createTempDirectory("graft_zhook").toString, spark)
+      Scratch.tempDir("graft_zhook").toString, spark)
     val reg = new Registry(spark, wh)
     val grid = (for { a <- 0L until 64L; b <- 0L until 64L }
       yield (a, b)).toDF("a", "b")
