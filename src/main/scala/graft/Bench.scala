@@ -132,29 +132,23 @@ object Bench {
           Some((flaky.map(_._1).getOrElse(0), flaky.map(f => f._2 + "; " + note).getOrElse(note))))
       }
     }
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
     // 4-decimal medians: full-precision doubles balloon the line past the
     // 2 KB log tail the driver retains (VERDICT r7: 99 of 154 medians were
     // invisible to the judge); 0.1 ms resolution loses nothing a bench at
     // this noise floor can claim
     val qs = results.map { case (k, v, _, _) => f""""$k":$v%.4f""" }
       .mkString("{", ",", "}")
-    val errs = results.collect { case (k, _, Some(e), _) => "\"" + k + "\":" + jstr(e) }
+    val errs = results.collect { case (k, _, Some(e), _) => "\"" + k + "\":" + Json.str(e) }
       .mkString("{", ",", "}")
     val flaky = results.collect { case (k, _, _, Some((n, e))) =>
       val msg = if (n > 0) s"$n/$reps reps failed: $e" else e
-      "\"" + k + "\":" + jstr(msg) }
+      "\"" + k + "\":" + Json.str(msg) }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
     // what the artifacts measured: core count, reps and the code's commit
     val gitSha = try scala.sys.process.Process("git rev-parse HEAD").!!.trim
       catch { case _: Throwable => "unknown" }
-    val run = s""""cpus":${GraftSession.cpus},"reps":$reps,"git_sha":${jstr(gitSha)}"""
+    val run = s""""cpus":${GraftSession.cpus},"reps":$reps,"git_sha":${Json.str(gitSha)}"""
     val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec",$run,"queries":$qs,"errors":$errs,"flaky":$flaky,"sf":"$sfDir"}"""
     // ALSO persist the whole line: the driver's log capture keeps only a
     // short tail, so the judge could read a fraction of the per-query

@@ -89,11 +89,6 @@ object PlanAudit {
     val only = sys.env.get("SPARK_GRAFT_AUDIT_ONLY").map(_.r)
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.findFirstIn(n).isDefined) }
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => " "; case c => c.toString
-      } + "\""
     val rows = queries.map { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)
@@ -133,17 +128,17 @@ object PlanAudit {
     errs.foreach { case (n, _, _, e) =>
       println(s"[plan-audit] ERROR $n: ${e.get}") }
     val body = rows.map { case (n, c, p, e) =>
-      s"""{"query":${jstr(n)},"max_scans":$c,"path":${jstr(p)}""" +
+      s"""{"query":${Json.str(n)},"max_scans":$c,"path":${Json.str(p)}""" +
         allow.get(n).map { case (mx, why) =>
-          s""","allowed":$mx,"reason":${jstr(why)}""" }.getOrElse("") +
-        e.map(x => s""","error":${jstr(x)}""").getOrElse("") + "}"
+          s""","allowed":$mx,"reason":${Json.str(why)}""" }.getOrElse("") +
+        e.map(x => s""","error":${Json.str(x)}""").getOrElse("") + "}"
     }.mkString(",\n")
     val json =
-      s"""{"sf_dir":${jstr(sfDir)},"threshold":$threshold,""" +
+      s"""{"sf_dir":${Json.str(sfDir)},"threshold":$threshold,""" +
         s""""n_queries":${rows.size},"n_flagged":${flagged.size},""" +
-        s""""flagged":[${flagged.map(f => jstr(f._1)).mkString(",")}],""" +
-        s""""new_flags":[${newFlags.map(f => jstr(f._1)).mkString(",")}],""" +
-        s""""stale_allow":[${staleAllow.map(jstr).mkString(",")}],""" +
+        s""""flagged":[${flagged.map(f => Json.str(f._1)).mkString(",")}],""" +
+        s""""new_flags":[${newFlags.map(f => Json.str(f._1)).mkString(",")}],""" +
+        s""""stale_allow":[${staleAllow.map(Json.str).mkString(",")}],""" +
         "\"rows\":[\n" + body + "\n]}\n"
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outJson), json)
     println(s"[plan-audit] ${rows.size} queries, ${flagged.size} flagged " +

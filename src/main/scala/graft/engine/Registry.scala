@@ -504,11 +504,68 @@ final case class Model(
     group: Option[String] = None,
     access: String = "protected")
 
+/** The registered DAG with every dependency resolved through the version
+  * aliases — the one graph every reader walks (access checks, lint,
+  * catalog, selection, run planning, the microbatch passes). Edges to
+  * names that are not models (sources) are kept; walks report models only.
+  */
+private final class Dag(models: Seq[Model], resolve: String => String) {
+  val byName: Map[String, Model] = models.map(m => m.name -> m).toMap
+  /** Resolved dependency names of each model, in declaration order. */
+  val parents: Map[String, Seq[String]] =
+    byName.map { case (n, m) => n -> m.deps.map(resolve) }
+  /** Models reading each resolved name (a model or a source). */
+  val children: Map[String, Seq[String]] = models
+    .flatMap(m => parents(m.name).map(_ -> m.name))
+    .groupMap(_._1)(_._2)
+
+  /** Depth-first topological order, registration order among independent
+    * models; a cycle is an authoring error and raises.
+    */
+  lazy val topo: Seq[Model] = {
+    val visited = scala.collection.mutable.LinkedHashSet.empty[String]
+    val visiting = scala.collection.mutable.Set.empty[String]
+    def visit(n: String): Unit = byName.get(n).foreach { _ =>
+      if (!visited.contains(n)) {
+        require(visiting.add(n), s"model cycle at $n")
+        parents(n).foreach(visit)
+        visiting -= n
+        visited += n
+      }
+    }
+    models.foreach(m => visit(m.name))
+    visited.toSeq.map(byName)
+  }
+
+  private def closure(n: String, next: Map[String, Seq[String]]): Set[String] = {
+    val acc = scala.collection.mutable.Set.empty[String]
+    def walk(x: String): Unit =
+      next.getOrElse(x, Nil).foreach(d => if (acc.add(d)) walk(d))
+    walk(n)
+    acc.toSet.filter(byName.contains)
+  }
+
+  /** Transitive upstream models of `n`, `n` itself excluded. */
+  def ancestors(n: String): Set[String] = closure(n, parents)
+  /** Transitive downstream models of `n`, `n` itself excluded. */
+  def descendants(n: String): Set[String] = closure(n, children)
+}
+
 final class Registry(spark: SparkSession, wh: Warehouse) {
   private var models = Vector.empty[Model]
   private val materialized = scala.collection.mutable.Map.empty[String, DataFrame]
   private var runStartHooks = Vector.empty[Hook.Hook]
   private var runEndHooks = Vector.empty[Hook.Hook]
+
+  // rebuilt on first read after any registration or version pin
+  private var dagIndex: Option[Dag] = None
+  private def dag: Dag = synchronized {
+    dagIndex.getOrElse {
+      val d = new Dag(models, resolveName)
+      dagIndex = Some(d)
+      d
+    }
+  }
 
   def register(m: Model): this.type = {
     require(!versions.contains(m.name),
@@ -517,7 +574,7 @@ final class Registry(spark: SparkSession, wh: Warehouse) {
       s"model '${m.name}': access '${m.access}' not in private/protected/public")
     require(m.access != "private" || m.group.isDefined,
       s"model '${m.name}': private access requires a group")
-    models :+= m; this
+    models :+= m; dagIndex = None; this
   }
 
   /** dbt model groups + access (dbt-core 1.5 governance): a PRIVATE model
@@ -527,11 +584,9 @@ final class Registry(spark: SparkSession, wh: Warehouse) {
     * at run start so violations name both sides before anything builds.
     */
   private def validateAccess(): Unit = {
-    val byName = models.map(m => m.name -> m).toMap
     val violations = for {
       m <- models
-      depName <- m.deps.map(resolveName)
-      p <- byName.get(depName)
+      p <- dag.parents(m.name).flatMap(dag.byName.get)
       if p.access == "private" && m.group != p.group
     } yield s"'${m.name}' (group ${m.group.getOrElse("<none>")}) references " +
       s"private '${p.name}' of group ${p.group.get}"
@@ -778,6 +833,7 @@ final class Registry(spark: SparkSession, wh: Warehouse) {
     require(!vs.contains(version), s"'$base' version $version already registered")
     models :+= m.copy(name = versionName(base, version))
     versions += base -> (vs + version)
+    dagIndex = None
     this
   }
 
@@ -788,6 +844,7 @@ final class Registry(spark: SparkSession, wh: Warehouse) {
     require(versions.get(base).exists(_.contains(version)),
       s"no registered version $version of '$base'")
     latestPin += base -> version
+    dagIndex = None
     this
   }
 
@@ -971,9 +1028,9 @@ final class Registry(spark: SparkSession, wh: Warehouse) {
   private def depSignature(resolved: String,
       seen: Set[String] = Set.empty): Option[String] = {
     if (seen(resolved)) return None // defensive: topo order forbids cycles
-    models.find(m => m.name == resolved) match {
+    dag.byName.get(resolved) match {
       case Some(vm) if vm.mat == ViewMat =>
-        val ds = vm.deps.map(d => depSignature(resolveName(d), seen + resolved))
+        val ds = dag.parents(resolved).map(d => depSignature(d, seen + resolved))
         if (ds.forall(_.isDefined))
           Some(md5Hex(modelFingerprint(vm) + ds.flatten.mkString("|")))
         else None
@@ -1034,12 +1091,9 @@ final class Registry(spark: SparkSession, wh: Warehouse) {
     */
   def lint(fanoutThreshold: Int = 5): DataFrame = {
     import spark.implicits._
-    val childrenOf: Map[String, Seq[String]] = models
-      .flatMap(m => m.deps.map(d => resolveName(d) -> m.name))
-      .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
     val stagingFor: Set[String] = models
       .filter(m => m.name.startsWith("stg"))
-      .flatMap(_.deps.map(resolveName)).toSet
+      .flatMap(m => dag.parents(m.name)).toSet
     val findings = Seq.newBuilder[(String, String, String, String)]
     models.foreach { m =>
       if (m.docs.isEmpty)
@@ -1053,18 +1107,18 @@ final class Registry(spark: SparkSession, wh: Warehouse) {
         findings += (("missing_tests", m.name, "warn",
           "eager materialization with no declared tests"))
       if (!m.name.startsWith("stg")) {
-        val bypassed = m.deps.map(resolveName)
+        val bypassed = dag.parents(m.name)
           .filter(d => sourceNames.contains(d) && stagingFor.contains(d))
         bypassed.foreach(d => findings += (("staging_bypass", m.name, "warn",
           s"reads source '$d' directly although a staging model covers it")))
       }
-      val fanout = childrenOf.getOrElse(m.name, Nil).size
+      val fanout = dag.children.getOrElse(m.name, Nil).size
       if (fanout > fanoutThreshold)
         findings += (("model_fanout", m.name, "info",
           s"$fanout direct children — consider an intermediate rollup"))
     }
     sourceNames.toSeq.sorted.foreach { s =>
-      if (!models.exists(_.deps.map(resolveName).contains(s)) &&
+      if (!dag.children.contains(s) &&
           !exposuresVec.exists(_.dependsOn.map(resolveName).contains(s)))
         findings += (("unused_source", s, "warn",
           "no model or exposure references this source"))
@@ -1149,9 +1203,8 @@ final class Registry(spark: SparkSession, wh: Warehouse) {
       case _: DynamicTableMat   => "dynamic_table"
       case _: FunctionMat       => "function"
     }
-    val byName = models.map(m => m.name -> m).toMap
     val rows = materialized.toSeq.sortBy(_._1).flatMap { case (name, df) =>
-      val m = byName.get(name)
+      val m = dag.byName.get(name)
       val mat   = m.map(x => matLabel(x.mat)).getOrElse("source")
       val deps  = m.map(_.deps.sorted.mkString(",")).getOrElse("")
       val tags  = m.map(_.tags.sorted.mkString(",")).getOrElse("")
@@ -1178,7 +1231,7 @@ final class Registry(spark: SparkSession, wh: Warehouse) {
     * relations, else the warehouse (cross-process defer), else raise.
     */
   def columnLineage(modelName: String): DataFrame = {
-    val m = models.find(_.name == resolveName(modelName)).getOrElse(
+    val m = dag.byName.getOrElse(resolveName(modelName),
       throw new IllegalArgumentException(s"unknown model: $modelName"))
     val deps = m.deps.map(decl => { val d = resolveName(decl)
       decl -> materialized.getOrElse(d, {
@@ -1222,7 +1275,7 @@ final class Registry(spark: SparkSession, wh: Warehouse) {
   def unitTest(modelName: String, givenInputs: Map[String, DataFrame],
       expect: DataFrame, isIncremental: Boolean = false,
       existingThis: Option[DataFrame] = None): DataFrame = {
-    val m = models.find(_.name == resolveName(modelName)).getOrElse(
+    val m = dag.byName.getOrElse(resolveName(modelName),
       throw new IllegalArgumentException(s"unknown model: $modelName"))
     val missing = m.deps.filterNot(givenInputs.contains)
     require(missing.isEmpty,
@@ -1233,29 +1286,8 @@ final class Registry(spark: SparkSession, wh: Warehouse) {
     require(unknown.isEmpty,
       s"expectation names columns '$modelName' does not produce: " +
         unknown.mkString(", "))
-    val projected = actual.select(expect.columns.map(
-      org.apache.spark.sql.functions.col).toSeq: _*)
-    projected.exceptAll(expect)
-      .withColumn("side", org.apache.spark.sql.functions.lit("actual"))
-      .unionByName(expect.exceptAll(projected)
-        .withColumn("side", org.apache.spark.sql.functions.lit("expected")))
-  }
-
-  /** Kahn topo-sort (dbt DAG semantics; cycles are an authoring error). */
-  private def topoSorted: Seq[Model] = {
-    val byName = models.map(m => m.name -> m).toMap
-    val visited = scala.collection.mutable.LinkedHashSet.empty[String]
-    val visiting = scala.collection.mutable.Set.empty[String]
-    def visit(n: String): Unit = byName.get(n).foreach { m =>
-      if (!visited.contains(n)) {
-        require(visiting.add(n), s"model cycle at $n")
-        m.deps.map(resolveName).foreach(visit)
-        visiting -= n
-        visited += n
-      }
-    }
-    models.foreach(m => visit(m.name))
-    visited.toSeq.map(byName)
+    Checks.sideDiff(actual.select(expect.columns.map(
+      org.apache.spark.sql.functions.col).toSeq: _*), expect)
   }
 
   /** Parse a microbatch bound eagerly — an unparseable bound must FAIL here,
@@ -1263,13 +1295,11 @@ final class Registry(spark: SparkSession, wh: Warehouse) {
     * out every row and silently replace the target with an empty table).
     * Timestamp precision is preserved (hourly windows stay hourly).
     */
-  private def parseBound(s: String): java.sql.Timestamp = {
-    val t = scala.util.Try(java.time.LocalDateTime.parse(s))
+  private def parseBound(s: String): java.time.LocalDateTime =
+    scala.util.Try(java.time.LocalDateTime.parse(s))
       .orElse(scala.util.Try(java.time.LocalDate.parse(s).atStartOfDay()))
       .getOrElse(throw new IllegalArgumentException(
         s"unparseable microbatch bound '$s' (want ISO date or date-time)"))
-    java.sql.Timestamp.valueOf(t)
-  }
 
   /** Event-time period helpers for the partitioned microbatch layout. The
     * period string doubles as the partition directory value, so it must be
@@ -1319,9 +1349,10 @@ final class Registry(spark: SparkSession, wh: Warehouse) {
   /** Run the DAG (`dbt run`). fullRefresh forces incremental targets to
     * rebuild from scratch (incremental.sql:40-46). `microbatchWindows`
     * overrides Microbatch bounds per model name for this run — the per-batch
-    * window a scheduler advances between runs. `select` restricts the run to
-    * the named models PLUS their transitive ancestors (dbt `--select +m`);
-    * `exclude` drops nodes from that set. A dependency that this run skips
+    * window a scheduler advances between runs. `selector` restricts the run
+    * to the nodes a dbt selector names ([[resolveSelector]]; `+m` is the
+    * model plus its ancestors) and `exclude` drops the nodes its selectors
+    * name; with neither, every model runs. A dependency that this run skips
     * resolves to its relation from a PREVIOUS run of this Registry when one
     * exists (the dbt --defer analogue) and fails fast at dependency lookup
     * otherwise.
@@ -1329,11 +1360,16 @@ final class Registry(spark: SparkSession, wh: Warehouse) {
   def run(fullRefresh: Boolean = false,
       microbatchWindows: Map[String, (String, String)] = Map.empty,
       threads: Int = 1,
-      select: Seq[String] = Nil,
       exclude: Seq[String] = Nil,
-      selector: String = ""): Map[String, DataFrame] =
-    runImpl(fullRefresh, microbatchWindows, threads, select, exclude,
-      selector, fireRunHooks = true)
+      selector: String = ""): Map[String, DataFrame] = {
+    val selected =
+      if (selector.isEmpty && exclude.isEmpty) None
+      else Some(
+        (if (selector.isEmpty) dag.byName.keySet else resolveSelector(selector)) --
+          resolveSelector(exclude.mkString(" ")))
+    val levels = plan(selected)
+    invocation(runImpl(levels, fullRefresh, microbatchWindows, threads))
+  }
 
   /** dbt node-selection syntax (`dbt run --select` / `--exclude`;
     * dbt-core node selector docs — the slim-CI surface): space-separated
@@ -1341,41 +1377,27 @@ final class Registry(spark: SparkSession, wh: Warehouse) {
     * atom is `model`, `+model` (with ancestors), `model+` (with
     * descendants), `+model+`, `@model` (descendants plus ALL their
     * ancestors — the "rebuild everything this touches" operator), or
-    * `tag:name`. Unlike the legacy `select` parameter, a bare `model`
-    * selects ONLY that node — dbt semantics — and its skipped upstream
-    * deps must already be materialized (a previous run of this Registry),
-    * or [[materialize]] raises the defer-contract error.
+    * `tag:name`. A bare `model` selects ONLY that node — dbt semantics —
+    * and its skipped upstream deps must already be materialized (a
+    * previous run of this Registry), or [[materialize]] raises the
+    * defer-contract error.
     */
   def resolveSelector(spec: String): Set[String] = {
-    val byName = models.map(m => m.name -> m).toMap
-    val children: Map[String, Seq[String]] = models
-      .flatMap(m => m.deps.map(d => resolveName(d) -> m.name))
-      .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    def walk(n: String, next: String => Seq[String],
-        acc: scala.collection.mutable.Set[String]): Unit =
-      next(n).foreach(d => if (acc.add(d)) walk(d, next, acc))
-    def closure(n: String, next: String => Seq[String]): Set[String] = {
-      val acc = scala.collection.mutable.Set.empty[String]
-      walk(n, next, acc)
-      acc.toSet
-    }
     def anc(n: String): Set[String] =
-      closure(n, x =>
-        // exposure pseudo-nodes contribute their declared deps to the
-        // ancestor walk (`+exposure:x` = "what my dashboard needs")
-        if (x.startsWith("exposure:"))
-          exposuresVec.find(_.name == x.stripPrefix("exposure:"))
-            .map(_.dependsOn.map(resolveName)).getOrElse(Nil)
-        else byName.get(x).map(_.deps.map(resolveName)).getOrElse(Nil))
-    def desc(n: String): Set[String] =
-      closure(n, x => children.getOrElse(x, Nil))
+      // exposure pseudo-nodes contribute their declared deps to the
+      // ancestor walk (`+exposure:x` = "what my dashboard needs")
+      if (n.startsWith("exposure:"))
+        exposuresVec.find(_.name == n.stripPrefix("exposure:")).toSeq
+          .flatMap(_.dependsOn.map(resolveName))
+          .flatMap(d => dag.ancestors(d) + d).toSet
+      else dag.ancestors(n)
     // graph-operator expansion shared by every atom family: dbt's
     // +set / set+ / @set semantics over an arbitrary base set
     def expand(base: Set[String], pre: Boolean, post: Boolean,
         at: Boolean): Set[String] = {
       var s = base
       if (pre) s ++= base.flatMap(anc)
-      if (post || at) s ++= base.flatMap(desc)
+      if (post || at) s ++= base.flatMap(dag.descendants)
       if (at) s = s ++ s.flatMap(anc)
       s
     }
@@ -1410,7 +1432,7 @@ final class Registry(spark: SparkSession, wh: Warehouse) {
         } else {
           // a versioned base name selects its latest (pinned) version
           val c = resolveName(core)
-          require(byName.contains(c), s"unknown model in selector: '$core'")
+          require(dag.byName.contains(c), s"unknown model in selector: '$core'")
           Set(c)
         }
       expand(base, pre, post, at)
@@ -1419,60 +1441,47 @@ final class Registry(spark: SparkSession, wh: Warehouse) {
       .map(tok => tok.split(",").filter(_.nonEmpty).map(atom)
         .reduceOption(_ intersect _).getOrElse(Set.empty[String]))
       .foldLeft(Set.empty[String])(_ union _)
-      // ancestor walks reach SOURCE relations (registered data, not
-      // models); they're implicitly available, not runnable nodes
-      .intersect(byName.keySet)
+      // ancestor walks of exposures reach SOURCE relations (registered
+      // data, not models); they're implicitly available, not runnable nodes
+      .intersect(dag.byName.keySet)
   }
 
-  /** [[run]] minus the run-level hooks — the internal passes of
-    * [[runMicrobatches]] (ancestors, one pass per window, downstream) are
-    * ONE dbt invocation, so on-run-start/end must fire once around the
-    * whole series, not once per window.
+  /** The models of `selected` (all when None) in topological levels: every
+    * dependency of a level's model lies in an earlier level or outside the
+    * run. Access and cycles are checked here, before anything builds.
     */
-  private def runImpl(fullRefresh: Boolean,
-      microbatchWindows: Map[String, (String, String)],
-      threads: Int,
-      select: Seq[String],
-      exclude: Seq[String],
-      selector: String,
-      fireRunHooks: Boolean): Map[String, DataFrame] = {
-    // dbt-style DAG parallelism (SURVEY §3: independent nodes on separate
-    // threads): models grouped into topological levels; within a level all
-    // deps are already materialized, so models run concurrently. Spark's
-    // scheduler handles concurrent jobs from one driver.
-    lastTestResults = Vector.empty
+  private def plan(selected: Option[Set[String]]): Seq[Seq[Model]] = {
     validateAccess()
-    require(selector.isEmpty || select.isEmpty,
-      "pass either selector (dbt syntax) or select (legacy), not both")
-    val selected: Option[Set[String]] =
-      if (selector.nonEmpty) {
-        // dbt semantics: the spec IS the run set (no implicit ancestors);
-        // exclude tokens use the same selector syntax
-        val excluded =
-          if (exclude.isEmpty) Set.empty[String]
-          else resolveSelector(exclude.mkString(" "))
-        Some(resolveSelector(selector) -- excluded)
-      } else if (select.isEmpty) None
-      else {
-        val byName = models.map(m => m.name -> m).toMap
-        select.foreach(s => require(byName.contains(resolveName(s)),
-          s"unknown model in select: $s"))
-        val seen = scala.collection.mutable.Set.empty[String]
-        def ancestors(n: String): Unit = if (seen.add(n))
-          byName.get(n).foreach(_.deps.map(resolveName).foreach(ancestors))
-        select.map(resolveName).foreach(ancestors)
-        Some(seen.toSet)
-      }
-    val ordered = topoSorted.filter(m =>
-      selected.forall(_.contains(m.name)) &&
-        (selector.nonEmpty || !exclude.contains(m.name)))
+    val ordered = dag.topo.filter(m => selected.forall(_.contains(m.name)))
     val level = scala.collection.mutable.Map.empty[String, Int]
     ordered.foreach { m =>
       level(m.name) =
-        (m.deps.map(resolveName).flatMap(level.get).maxOption.getOrElse(-1)) + 1
+        dag.parents(m.name).flatMap(level.get).maxOption.getOrElse(-1) + 1
     }
-    val byLevel = ordered.groupBy(m => level(m.name)).toSeq.sortBy(_._1)
-    if (fireRunHooks) runStartHooks.foreach(_(HookContext(spark, wh, None, None)))
+    ordered.groupBy(m => level(m.name)).toSeq.sortBy(_._1).map(_._2)
+  }
+
+  /** One dbt invocation: on-run-start hooks, `body`, on-run-end hooks. A
+    * body that throws aborts WITHOUT the end hooks, like dbt.
+    */
+  private def invocation[T](body: => T): T = {
+    runStartHooks.foreach(_(HookContext(spark, wh, None, None)))
+    val out = body
+    runEndHooks.foreach(_(HookContext(spark, wh, None, None)))
+    out
+  }
+
+  /** Materialize planned levels — the body of [[run]] and of each pass of
+    * [[runMicrobatches]]; run-level hooks belong to the invocation around it.
+    */
+  private def runImpl(levels: Seq[Seq[Model]], fullRefresh: Boolean,
+      microbatchWindows: Map[String, (String, String)],
+      threads: Int): Map[String, DataFrame] = {
+    // dbt-style DAG parallelism (SURVEY §3: independent nodes on separate
+    // threads): within a level all deps are already materialized, so models
+    // run concurrently. Spark's scheduler handles concurrent jobs from one
+    // driver.
+    lastTestResults = Vector.empty
     // dbt-retry bookkeeping: which of THIS run's selected models succeeded
     // before an abort — the failed model plus everything not yet recorded
     // is the retry set (a parallel sibling whose Future completed after
@@ -1490,7 +1499,7 @@ final class Registry(spark: SparkSession, wh: Warehouse) {
           throw e
       }
     try {
-      byLevel.foreach { case (_, ms) =>
+      levels.foreach { ms =>
         val results: Seq[(String, DataFrame)] =
           if (threads <= 1 || ms.size == 1) ms.map(mat1)
           else {
@@ -1513,10 +1522,9 @@ final class Registry(spark: SparkSession, wh: Warehouse) {
       case e: Throwable =>
         val f = Option(failedModel.get()).toSet
         lastRunFailed = f
-        lastRunSkipped = ordered.map(_.name).toSet -- succeededNow -- f
+        lastRunSkipped = levels.flatten.map(_.name).toSet -- succeededNow -- f
         throw e
     }
-    if (fireRunHooks) runEndHooks.foreach(_(HookContext(spark, wh, None, None)))
     materialized.toMap
   }
 
@@ -1541,18 +1549,18 @@ final class Registry(spark: SparkSession, wh: Warehouse) {
   def retryLast(threads: Int = 1): Map[String, DataFrame] = {
     val todo = retryPending
     require(todo.nonEmpty, "nothing to retry: the last run did not abort")
-    runImpl(fullRefresh = false, Map.empty, threads, Nil, Nil,
-      selector = todo.toSeq.sorted.mkString(" "), fireRunHooks = true)
+    run(threads = threads, selector = todo.toSeq.sorted.mkString(" "))
   }
 
   /** The dbt microbatch batch-series loop (dbt-core batch builder +
     * dbt-snowflake merge.sql:73-101): split [start, end) into consecutive
     * whole-`grain` windows (both bounds must be period-aligned — validated
-    * BEFORE any batch commits) and run the microbatch model (+ its
-    * ancestors) once per window. Models DOWNSTREAM of it then run ONCE
-    * against the final state, like dbt building each model a single time
-    * with the batch loop inside the microbatch materialization. Returns the
-    * relations after the downstream pass.
+    * BEFORE any batch commits) and run the microbatch model once per
+    * window. Its ancestors run ONCE before the series, and the models
+    * DOWNSTREAM of it run ONCE against the final state, like dbt building
+    * each model a single time with the batch loop inside the microbatch
+    * materialization. The whole series is one invocation: run-level hooks
+    * fire once around it. Returns the relations after the last pass.
     *
     * Scale note: each batch's DML touches only its event-time slice; with
     * the target partitioned on event time the rewrite is partition-pruned —
@@ -1562,24 +1570,14 @@ final class Registry(spark: SparkSession, wh: Warehouse) {
       grain: String, threads: Int = 1): Map[String, DataFrame] = {
     // an unknown name would silently run the whole DAG once per window with
     // the model's DEFAULT bounds — fail loudly instead
-    require(models.exists(m => m.name == modelName &&
-        m.mat.isInstanceOf[IncrementalMat] &&
-        m.mat.asInstanceOf[IncrementalMat].strategy.isInstanceOf[Incremental.Microbatch]),
-      s"runMicrobatches: no microbatch model named '$modelName'")
-    def parse(s: String): java.time.LocalDateTime =
-      scala.util.Try(java.time.LocalDateTime.parse(s))
-        .orElse(scala.util.Try(java.time.LocalDate.parse(s).atStartOfDay()))
-        .getOrElse(throw new IllegalArgumentException(
-          s"unparseable microbatch bound '$s' (want ISO date or date-time)"))
-    val step: java.time.LocalDateTime => java.time.LocalDateTime = grain match {
-      case "hour"  => _.plusHours(1)
-      case "day"   => _.plusDays(1)
-      case "month" => _.plusMonths(1)
-      case "year"  => _.plusYears(1)
-      case other   => throw new IllegalArgumentException(s"microbatch grain: $other")
-    }
-    var cur = parse(start)
-    val fin = parse(end)
+    val mb = resolveName(modelName)
+    require(dag.byName.get(mb).exists(_.mat match {
+        case IncrementalMat(_: Incremental.Microbatch, _, _) => true
+        case _ => false
+      }), s"runMicrobatches: no microbatch model named '$modelName'")
+    Period.pattern(grain) // an unknown grain raises before the bounds are read
+    var cur = parseBound(start)
+    val fin = parseBound(end)
     require(cur.isBefore(fin), s"empty microbatch range [$start, $end)")
     // validate alignment BEFORE any batch commits: a trailing partial
     // period would only fail at materialization, mid-series, with earlier
@@ -1587,49 +1585,31 @@ final class Registry(spark: SparkSession, wh: Warehouse) {
     require(Period.aligned(cur, grain) && Period.aligned(fin, grain),
       s"microbatch series [$start, $end) must cover whole $grain periods")
     // dbt's batch loop runs UPSTREAM models exactly once — only the
-    // microbatch materialization itself iterates the windows. Ancestors
-    // materialize in one pass up front; every later pass excludes them
-    // (their relations resolve from this run's materialized state), so a
+    // microbatch materialization itself iterates the windows, so a
     // side-effecting incremental ancestor (e.g. Append strategy) gets its
-    // DML applied once, not once per window.
-    val byName = models.map(m => m.name -> m).toMap
-    val ancestorSet = scala.collection.mutable.Set.empty[String]
-    def collectAnc(n: String): Unit =
-      byName.get(n).foreach(_.deps.foreach(d =>
-        if (ancestorSet.add(d)) collectAnc(d)))
-    collectAnc(modelName)
-    val ancestors = ancestorSet.filter(byName.contains).toSeq
-    // the whole series is ONE invocation: run-level hooks fire here once,
-    // and every internal pass below suppresses them
-    runStartHooks.foreach(_(HookContext(spark, wh, None, None)))
-    if (ancestors.nonEmpty)
-      runImpl(fullRefresh = false, Map.empty, threads, ancestors, Nil,
-        selector = "", fireRunHooks = false)
-    var out = Map.empty[String, DataFrame]
-    while (cur.isBefore(fin)) {
-      val next = step(cur)
-      // only the microbatch model re-runs per window — neither siblings
-      // nor (already-materialized) ancestors are touched by the loop
-      out = runImpl(fullRefresh = false,
-        Map(modelName -> (cur.toString, next.toString)),
-        threads, Seq(modelName), ancestors, selector = "", fireRunHooks = false)
-      cur = next
-    }
-    // downstream models see the final state exactly once (the microbatch
-    // model and its ancestors are excluded — their relations defer to the
-    // states materialized above)
-    val downstream = {
-      val dependents = scala.collection.mutable.Set(modelName)
-      topoSorted.foreach { m =>
-        if (m.deps.exists(dependents.contains)) dependents += m.name
+    // DML applied once, not once per window. The downstream pass also
+    // builds the other inputs of the downstream models; the microbatch
+    // model and its ancestors defer to the states materialized before it.
+    val ancestors = dag.ancestors(mb)
+    val descendants = dag.descendants(mb)
+    val ancestorPass = plan(Some(ancestors))
+    val windowPass = plan(Some(Set(mb)))
+    val downstreamPass =
+      plan(Some(descendants ++ descendants.flatMap(dag.ancestors) -- ancestors - mb))
+    invocation {
+      if (ancestorPass.nonEmpty)
+        runImpl(ancestorPass, fullRefresh = false, Map.empty, threads)
+      var out = Map.empty[String, DataFrame]
+      while (cur.isBefore(fin)) {
+        val next = Period.step(cur, grain)
+        out = runImpl(windowPass, fullRefresh = false,
+          Map(mb -> (cur.toString, next.toString)), threads)
+        cur = next
       }
-      dependents.diff(Set(modelName)).toSeq
+      if (downstreamPass.nonEmpty)
+        out = runImpl(downstreamPass, fullRefresh = false, Map.empty, threads)
+      out
     }
-    if (downstream.nonEmpty)
-      out = runImpl(fullRefresh = false, Map.empty, threads, downstream,
-        modelName +: ancestors, selector = "", fireRunHooks = false)
-    runEndHooks.foreach(_(HookContext(spark, wh, None, None)))
-    out
   }
 
   /** Route one declared-predicate ref through the warehouse sidecars
@@ -2001,8 +1981,7 @@ final class Registry(spark: SparkSession, wh: Warehouse) {
                     // the target is neither read nor rewritten
                     import org.apache.spark.sql.functions.{coalesce, date_format}
                     val (s0, e0) = microbatchWindows.getOrElse(m.name, (defStart, defEnd))
-                    val (startLdt, endLdt) =
-                      (parseBound(s0).toLocalDateTime, parseBound(e0).toLocalDateTime)
+                    val (startLdt, endLdt) = (parseBound(s0), parseBound(e0))
                     val periods = Period.values(startLdt, endLdt, grain)
                     val pc = wh.enginePrefix + "period"
                     val periodOf = date_format(col(eventCol), Period.pattern(grain))

@@ -17,10 +17,6 @@ import graft.engine.Pin.PinOps
   */
 object DecisionQueries extends QuerySet {
 
-  /** The shared fixed-point money recipe (Features.cents mirror). */
-  private def centsSql(c: String): String =
-    s"CAST(floor($c * 100 + 0.5) AS BIGINT)"
-
   val all: Seq[QueryDef] = Seq(
 
     QueryDef("q387_anova_f", (s, d) =>

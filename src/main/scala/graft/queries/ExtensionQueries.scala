@@ -13,12 +13,6 @@ import graft.sources.Sources.{events, table}
   */
 object ExtensionQueries extends QuerySet {
 
-  /** Quantized-int embedding vector (shared with PipelineQueries' oracles:
-    * round-half-up to 1e-3, the QuantizeDoubles recipe).
-    */
-  private val qvecSql =
-    "list_transform(CAST(embedding AS DOUBLE[]), e -> CAST(floor(e * 1000 + 0.5) AS BIGINT))"
-
   /** One-iteration Lloyd's chain per PQ sub-block, the q98 oracle recipe
     * instantiated on a sliced vector relation `b<X>` (suffix X): seed from
     * the 4 smallest ids, assign, exact-rational centroid update with

@@ -14,8 +14,6 @@ import graft.engine.Pin.PinOps
   */
 object FeatureQueries extends QuerySet {
 
-  private val centsSql = (c: String) => s"CAST(floor($c * 100 + 0.5) AS BIGINT)"
-
   /** Exact EWMA weights shared by the Spark plan and the DuckDB oracle:
     * alpha = 1/4 over 14 terms -> w_j = 3^j * 4^(13-j), denominator 4^14.
     */
@@ -756,7 +754,7 @@ object FeatureQueries extends QuerySet {
         .drop("__tot")
     }, Some {
       val scores = PipelineQueries.Markers.map { case (lang, words) =>
-        lang -> (s"len(list_filter(${PipelineQueries.toksSql}, " +
+        lang -> (s"len(list_filter(${toksSql}, " +
           s"t -> t IN (${words.map(w => s"'$w'").mkString(", ")})))")
       }
       val best = s"greatest(${scores.map(_._2).mkString(", ")})"

@@ -14,8 +14,6 @@ import graft.sources.Sources.{events, table}
   */
 object InferenceQueries extends QuerySet {
 
-  private val centsSql = (c: String) => s"CAST(floor($c * 100 + 0.5) AS BIGINT)"
-
   /** The q274 Holt recursion (alpha 3/10, beta 1/10) over the dense daily
     * event-value spine, as a CTE chain (`dc/g/sp/dn/h`) shared by the
     * smoother oracle (q274) and the backtest oracle (q322). Caller
@@ -203,7 +201,7 @@ object InferenceQueries extends QuerySet {
       Inference.cohenKappa(cls, col("declared"), col("guessed"))
     }, Some {
       val scores = PipelineQueries.Markers.map { case (lang, words) =>
-        lang -> (s"len(list_filter(${PipelineQueries.toksSql}, " +
+        lang -> (s"len(list_filter(${toksSql}, " +
           s"t -> t IN (${words.map(w => s"'$w'").mkString(", ")})))")
       }
       val best = s"greatest(${scores.map(_._2).mkString(", ")})"

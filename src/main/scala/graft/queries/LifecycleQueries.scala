@@ -3,7 +3,7 @@ package graft.queries
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.engine.{ApplyConfig, DynamicTableConfig, DynamicTableMat, Incremental,
+import graft.engine.{ApplyConfig, Checks, DynamicTableConfig, DynamicTableMat, Incremental,
   IncrementalMat, Model, OnConfigChange, Registry, Snapshot, Warehouse}
 import graft.engine.Pin.PinOps
 import graft.functions.Functions
@@ -178,8 +178,7 @@ object LifecycleQueries extends QuerySet {
       val expected = Fixtures.relation(s, schema, Seq(
         Map("segment" -> "AUTOMOBILE", "n_members" -> 0L), // deliberately wrong
         Map("segment" -> "MACHINERY")))                    // n_members -> typed NULL
-      actual.exceptAll(expected).withColumn("side", lit("actual"))
-        .unionByName(expected.exceptAll(actual).withColumn("side", lit("expected")))
+      Checks.sideDiff(actual, expected)
     }, Some(
       """WITH actual AS (
         |  SELECT c_mktsegment AS segment, CAST(count(*) AS BIGINT) AS n_members

@@ -28,24 +28,8 @@ object PipelineQueries extends QuerySet {
 
   private val stopwordsSql = Stopwords.map(s => s"'$s'").mkString(", ")
 
-  /** Shared DuckDB fragments. */
-  private[queries] val toksSql = "string_split(text, ' ')"
-  private val shinglesSql =
-    s"""CASE WHEN len($toksSql) >= 3
-       |     THEN list_distinct(list_transform(generate_series(1, len($toksSql)-2),
-       |            i -> $toksSql[i] || ' ' || $toksSql[i+1] || ' ' || $toksSql[i+2]))
-       |     ELSE [text] END""".stripMargin
-
   private def jaccardSql(a: String, b: String): String =
     s"CAST(len(list_intersect($a,$b)) AS DOUBLE) / (CAST(len($a) AS DOUBLE) + CAST(len($b) AS DOUBLE) - CAST(len(list_intersect($a,$b)) AS DOUBLE))"
-
-  /** Quantized-int embedding vector. */
-  private val qvecSql =
-    "list_transform(CAST(embedding AS DOUBLE[]), e -> CAST(floor(e * 1000 + 0.5) AS BIGINT))"
-  private def dotSql(a: String, b: String): String =
-    s"CAST(list_sum(list_transform(list_zip($a,$b), p -> p[1]*p[2])) AS DOUBLE)"
-  private def cosSql(a: String, b: String): String =
-    s"${dotSql(a, b)} / (sqrt(${dotSql(a, a)}) * sqrt(${dotSql(b, b)}))"
 
   /** CTE body reproducing Similarity.nearDupPairsLsh's candidate generation
     * (16-bit sign sketch, 4x4-bit bands, first-agreeing-band dedup); yields

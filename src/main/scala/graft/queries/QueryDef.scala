@@ -18,55 +18,28 @@ trait QuerySet {
     all.map(q => q.name -> q.fn).toMap
   final def oracles: Map[String, String] =
     all.flatMap(q => q.oracle.map(q.name -> _)).toMap
-}
 
-/** One-pass invariant checks for the lifecycle/IVM queries. */
-object Checks {
-  /** Multiset equality in ONE aggregation (optimization r15, guide §1.2
-    * "don't compute things twice"): the IVM family's `matched` pins were
-    * written as `a.exceptAll(b).count() + b.exceptAll(a).count() == 0` —
-    * four shuffle-heavy jobs that evaluate EACH side's full lineage TWICE
-    * (exceptAll is not symmetric, so both directions are needed). Only
-    * the zero-test is ever consumed, and multiset equality has a one-pass
-    * form: tag rows +1/-1 by side, roll up by every column, and the
-    * multisets are equal iff no group's signed count is nonzero. One
-    * shuffle, each side evaluated once. NULL grouping matches exceptAll's
-    * null-safe row equality (groupBy buckets NULLs together), so the
-    * boolean is identical for every input pair.
-    */
-  def multisetEqual(a: DataFrame, b: DataFrame): Boolean = {
-    import org.apache.spark.sql.functions._
-    val cols = a.columns.toSeq
-    a.withColumn("__sgn", lit(1L))
-      .unionByName(b.withColumn("__sgn", lit(-1L)))
-      .groupBy(cols.map(col): _*)
-      .agg(sum(col("__sgn")).as("__d"))
-      .filter(col("__d") =!= 0L)
-      .isEmpty
-  }
+  // ---- DuckDB fragments shared by the oracles ----
 
-  /** Both exceptAll direction counts in ONE pass (same signed rollup as
-    * [[multisetEqual]]): `a.exceptAll(b).count()` is the multiset
-    * difference Σ max(cnt_a − cnt_b, 0) per distinct row, so one rollup
-    * yields both directions — each side evaluated once instead of twice.
-    * Used where a query EXPOSES a difference count (not just the
-    * zero-test), e.g. q539's n_missing columns.
+  /** The fixed-point money recipe (Features.cents mirror). */
+  protected final def centsSql(c: String): String =
+    s"CAST(floor($c * 100 + 0.5) AS BIGINT)"
+  /** Quantized-int embedding vector: round-half-up to 1e-3, the
+    * QuantizeDoubles recipe (the labelCentroids quantScale).
     */
-  def exceptAllCounts(a: DataFrame, b: DataFrame): (Long, Long) = {
-    import org.apache.spark.sql.functions._
-    val cols = a.columns.toSeq
-    val r = a.withColumn("__sgn", lit(1L))
-      .unionByName(b.withColumn("__sgn", lit(-1L)))
-      .groupBy(cols.map(col): _*)
-      .agg(sum(col("__sgn")).as("__d"))
-      .agg(
-        coalesce(sum(when(col("__d") > 0L, col("__d")).otherwise(0L)),
-          lit(0L)).as("__ab"),
-        coalesce(sum(when(col("__d") < 0L, -col("__d")).otherwise(0L)),
-          lit(0L)).as("__ba"))
-      .head()
-    (r.getLong(0), r.getLong(1))
-  }
+  protected final val qvecSql =
+    "list_transform(CAST(embedding AS DOUBLE[]), e -> CAST(floor(e * 1000 + 0.5) AS BIGINT))"
+  protected final def dotSql(a: String, b: String): String =
+    s"CAST(list_sum(list_transform(list_zip($a,$b), p -> p[1]*p[2])) AS DOUBLE)"
+  protected final def cosSql(a: String, b: String): String =
+    s"${dotSql(a, b)} / (sqrt(${dotSql(a, a)}) * sqrt(${dotSql(b, b)}))"
+  /** Space tokens of `text`, and its distinct word 3-shingles. */
+  protected final val toksSql = "string_split(text, ' ')"
+  protected final val shinglesSql =
+    s"""CASE WHEN len($toksSql) >= 3
+       |     THEN list_distinct(list_transform(generate_series(1, len($toksSql)-2),
+       |            i -> $toksSql[i] || ' ' || $toksSql[i+1] || ' ' || $toksSql[i+2]))
+       |     ELSE [text] END""".stripMargin
 }
 
 /** Stable scratch warehouse roots for lifecycle queries, keyed on

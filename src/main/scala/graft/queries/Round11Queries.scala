@@ -18,10 +18,6 @@ import graft.engine.Pin.PinOps
   */
 object Round11Queries extends QuerySet {
 
-  /** The shared fixed-point money recipe (Features.cents mirror). */
-  private def centsSql(c: String): String =
-    s"CAST(floor($c * 100 + 0.5) AS BIGINT)"
-
   val all: Seq[QueryDef] = Seq(
 
     QueryDef("q429_wasserstein", (s, d) =>

@@ -16,10 +16,6 @@ import graft.engine.Pin.PinOps
   */
 object Round12Queries extends QuerySet {
 
-  /** The shared fixed-point money recipe (Features.cents mirror). */
-  private def centsSql(c: String): String =
-    s"CAST(floor($c * 100 + 0.5) AS BIGINT)"
-
   /** q445/q446 shared pipeline: per-(returnflag, ship-month) exact
     * registers on price cents, compressed at k=32 (level 1), then merged
     * across months into one per-returnflag summary at k=32 (level 2)

@@ -16,12 +16,6 @@ import graft.engine.Pin.PinOps
   */
 object Round13Queries extends QuerySet {
 
-  /** DuckDB quantized-vector fragment (the StatQueries convention —
-    * milli-unit fixed point, the labelCentroids quantScale).
-    */
-  private val qvecSql =
-    "list_transform(CAST(embedding AS DOUBLE[]), e -> CAST(floor(e * 1000 + 0.5) AS BIGINT))"
-
   /** The planted per-(label, pos) structure added to every centroid
     * register in q452 (the r11 planted-signal discipline: the synthetic
     * embeddings are iid noise, so RAW centroid directions are

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.engine.Checks
 import graft.sources.Sources.table
 
 /** Round-15 continuation battery: the materialized-view-rewrite face of

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Column
 import graft.sources.Sources.table
+import graft.engine.Checks
 import graft.engine.Pin.PinOps
 
 /** Round-15 continuation III: don't recompute what didn't change. Three

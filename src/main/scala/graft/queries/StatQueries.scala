@@ -15,20 +15,6 @@ import graft.engine.Pin.PinOps
   */
 object StatQueries extends QuerySet {
 
-  /** Shared DuckDB fragments (the PipelineQueries conventions). */
-  private val toksSql = "string_split(text, ' ')"
-  private val shinglesSql =
-    s"""CASE WHEN len($toksSql) >= 3
-       |     THEN list_distinct(list_transform(generate_series(1, len($toksSql)-2),
-       |            i -> $toksSql[i] || ' ' || $toksSql[i+1] || ' ' || $toksSql[i+2]))
-       |     ELSE [text] END""".stripMargin
-  private val qvecSql =
-    "list_transform(CAST(embedding AS DOUBLE[]), e -> CAST(floor(e * 1000 + 0.5) AS BIGINT))"
-  private def dotSql(a: String, b: String): String =
-    s"CAST(list_sum(list_transform(list_zip($a,$b), p -> p[1]*p[2])) AS DOUBLE)"
-  private def cosSql(a: String, b: String): String =
-    s"${dotSql(a, b)} / (sqrt(${dotSql(a, a)}) * sqrt(${dotSql(b, b)}))"
-
   /** DuckDB CTEs for the two q237 ranked lists: brute-force and sign-LSH
     * top-5 over queries vec_id < 20 (the q36/q37 recipes with rank kept).
     * Yields `bt(query_id, neighbor_id, rn)` and `lt(...)`.

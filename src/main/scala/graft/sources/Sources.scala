@@ -48,20 +48,13 @@ object Sources {
     * no-op. Predicate pushdown / column pruning are unaffected — Catalyst
     * pushes filters and projections through Repartition, so PushedFilters
     * / ReadSchema at the scan stay as before (plans/r15 captures).
-    * Disable with spark.graft.scan.fanout=false to compare.
     */
   def fanOut[T](ds: org.apache.spark.sql.Dataset[T]): org.apache.spark.sql.Dataset[T] = {
-    val spark = ds.sparkSession
-    val enabled = spark.conf.getOption("spark.graft.scan.fanout")
-      .forall(_.toBoolean)
-    if (!enabled) ds
-    else {
-      val p = spark.sparkContext.defaultParallelism
-      // physical partition count: cheap to compute for a bare scan (no
-      // job runs); for the lazy plans reaching this helper it only walks
-      // the plan, it never executes it
-      if (ds.rdd.getNumPartitions < p) ds.repartition(p) else ds
-    }
+    val p = ds.sparkSession.sparkContext.defaultParallelism
+    // physical partition count: cheap to compute for a bare scan (no job
+    // runs); for the lazy plans reaching this helper it only walks the
+    // plan, it never executes it
+    if (ds.rdd.getNumPartitions < p) ds.repartition(p) else ds
   }
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {

@@ -2,10 +2,11 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
-import graft.queries.Checks
+import org.apache.spark.sql.functions.lit
+import graft.engine.Checks
 
 /** Optimization r15: the one-pass signed-rollup forms in
-  * [[graft.queries.Checks]] must agree with Spark's own exceptAll on every
+  * [[graft.engine.Checks]] must agree with Spark's own exceptAll on every
   * edge the IVM queries' invariant pins can hit — duplicates (multiset
   * counts, not sets), NULL cells (exceptAll's null-safe row equality), and
   * the empty-frame degenerate cases.
@@ -21,6 +22,10 @@ class ChecksSpec extends AnyFunSuite {
     val (ab, ba) = groundTruth(a, b)
     assert(Checks.exceptAllCounts(a, b) === ((ab, ba)))
     assert(Checks.multisetEqual(a, b) === (ab == 0L && ba == 0L))
+    val tagged = a.exceptAll(b).withColumn("side", lit("actual"))
+      .unionByName(b.exceptAll(a).withColumn("side", lit("expected")))
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(rows(Checks.sideDiff(a, b)) === rows(tagged))
   }
 
   test("equal multisets with duplicates: equal, zero counts") {

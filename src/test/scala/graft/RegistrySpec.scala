@@ -355,6 +355,94 @@ class RegistrySpec extends AnyFunSuite {
     assert(down === Map("batched" -> 3L))
   }
 
+  test("runMicrobatches materializes a VERSIONED side-effecting ancestor exactly once") {
+    val wh = new Warehouse(Scratch.tempDir("graft_mb_vanc").toString, spark)
+    def day(s: String) = java.sql.Date.valueOf(s)
+    val reg = new Registry(spark, wh)
+    reg.source("src", Seq(
+      (1L, day("2024-01-01"), "a"), (2L, day("2024-01-02"), "b"),
+      (3L, day("2024-01-03"), "c")).toDF("k", "d", "tag"))
+    // the same Append ancestor as above, registered as version 1 and read
+    // by its base name: the alias must not hide it from the ancestor pass
+    reg.registerVersion("anc", 1, Model("anc", Seq("src"),
+      IncrementalMat(Incremental.Append, Nil), ctx => ctx.ref("src")))
+    reg.register(Model("mb", Seq("anc"),
+      IncrementalMat(Incremental.Microbatch("d", "2024-01-01", "2024-01-02"), Nil),
+      ctx =>
+        if (ctx.isIncremental) ctx.ref("anc").dropDuplicates("k")
+          .withColumn("tag", lit("batched"))
+        else ctx.ref("anc")))
+    reg.register(Model("down", Seq("mb"), TableMat(),
+      ctx => ctx.ref("mb").groupBy(col("tag")).agg(count(lit(1)).as("n"))))
+    reg.run()
+    assert(wh.read("anc__v1").count() === 3)
+    reg.runMicrobatches("mb", "2024-01-01", "2024-01-04", "day")
+    assert(wh.read("anc__v1").count() === 6,
+      "versioned ancestor must materialize exactly once across the window series")
+    val down = wh.read("down").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(down === Map("batched" -> 3L))
+  }
+
+  test("runMicrobatches rebuilds a model reading a versioned descendant by its base name") {
+    val wh = new Warehouse(Scratch.tempDir("graft_mb_vdown").toString, spark)
+    def day(s: String) = java.sql.Date.valueOf(s)
+    val reg = new Registry(spark, wh)
+    reg.source("src", Seq(
+      (1L, day("2024-01-01"), "keep"), (2L, day("2024-01-02"), "keep"),
+      (3L, day("2024-01-03"), "keep"), (4L, day("2024-01-04"), "outside"))
+      .toDF("k", "d", "tag"))
+    reg.register(Model("mb", Seq("src"),
+      IncrementalMat(Incremental.Microbatch("d", "2024-01-01", "2024-01-02"), Nil),
+      ctx =>
+        if (ctx.isIncremental) ctx.ref("src").withColumn("tag", lit("batched"))
+        else ctx.ref("src")))
+    // mb -> ver__v1 -> fin, where fin names its input by the base "ver"
+    reg.registerVersion("ver", 1, Model("ver", Seq("mb"), TableMat(),
+      ctx => ctx.ref("mb").groupBy(col("tag")).agg(count(lit(1)).as("n"))))
+    reg.register(Model("fin", Seq("ver"), TableMat(),
+      ctx => ctx.ref("ver").filter(col("tag") === "batched")))
+    reg.run()
+    assert(wh.read("fin").count() === 0)
+    reg.runMicrobatches("mb", "2024-01-01", "2024-01-04", "day")
+    val fin = wh.read("fin").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(fin === Map("batched" -> 3L),
+      "a base-name consumer of a versioned descendant must see the final windows")
+  }
+
+  test("runMicrobatches rejects bad input before any window commits") {
+    val wh = new Warehouse(Scratch.tempDir("graft_mb_badin").toString, spark)
+    def day(s: String) = java.sql.Date.valueOf(s)
+    val reg = new Registry(spark, wh)
+    reg.source("src", Seq((1L, day("2024-01-01"), "a"), (2L, day("2024-01-02"), "b"))
+      .toDF("k", "d", "tag"))
+    reg.register(Model("anc", Seq("src"),
+      IncrementalMat(Incremental.Append, Nil), ctx => ctx.ref("src")))
+    reg.register(Model("mb", Seq("anc"),
+      IncrementalMat(Incremental.Microbatch("d", "2024-01-01", "2024-01-02"), Nil),
+      ctx =>
+        if (ctx.isIncremental) ctx.ref("anc").withColumn("tag", lit("batched"))
+        else ctx.ref("anc")))
+    reg.run()
+    var starts = 0
+    reg.onRunStart(_ => starts += 1)
+    def state() = (wh.read("anc").count(),
+      wh.read("mb").collect().map(r => r.getLong(0) -> r.getString(2)).toMap)
+    val before = state()
+    val bad: Seq[(String, () => Any)] = Seq(
+      "unknown model" -> (() => reg.runMicrobatches("nope", "2024-01-01", "2024-01-03", "day")),
+      "not a microbatch model" ->
+        (() => reg.runMicrobatches("anc", "2024-01-01", "2024-01-03", "day")),
+      "unknown grain" -> (() => reg.runMicrobatches("mb", "2024-01-01", "2024-01-03", "week")),
+      "empty range" -> (() => reg.runMicrobatches("mb", "2024-01-02", "2024-01-02", "day")),
+      "unparseable bound" ->
+        (() => reg.runMicrobatches("mb", "01/01/2024", "2024-01-03", "day")))
+    bad.foreach { case (what, call) =>
+      intercept[IllegalArgumentException](call())
+      assert(starts === 0, s"$what: the series started")
+      assert(state() === before, s"$what: a pass committed")
+    }
+  }
+
   test("dynamic table: create / no-op / continue / fail / apply (dynamic_table.sql:27-66)") {
     val root = Scratch.tempDir("graft_dt").toString
     val wh = new Warehouse(root, spark)
@@ -404,11 +492,11 @@ class RegistrySpec extends AnyFunSuite {
     reg.register(Model("b", Seq("a"), TableMat(), ctx => ctx.ref("a")))
     reg.register(Model("c", Seq("b"), TableMat(), ctx => ctx.ref("b")))
     reg.register(Model("d", Seq("raw"), TableMat(), ctx => ctx.ref("raw")))
-    reg.run(select = Seq("b"))
+    reg.run(selector = "+b")
     assert(wh.exists("a") && wh.exists("b") && !wh.exists("c") && !wh.exists("d"))
-    reg.run(select = Seq("d"), exclude = Seq("c"))
+    reg.run(selector = "+d", exclude = Seq("c"))
     assert(wh.exists("d") && !wh.exists("c"))
-    assertThrows[IllegalArgumentException](reg.run(select = Seq("nope")))
+    assertThrows[IllegalArgumentException](reg.run(selector = "+nope"))
   }
 
   test("dbt selector syntax: graph operators, tags, intersection, defer contract") {
@@ -1315,7 +1403,7 @@ class RegistrySpec extends AnyFunSuite {
     // declaration; range-only still prunes files via the manifest
     reg.register(Model("rng", Seq("days"), ViewMat, ctx =>
       ctx.ref("days", Seq(RefRange("cents", 3000L, 3049L)))))
-    reg.run(select = Seq("rng"))
+    reg.run(selector = "+rng")
     assert(reg.relation("rng").collect().map(_.getLong(0)).sorted.toSeq ===
       (3000L to 3049L).toSeq)
     // fallback: a SOURCE dep (no warehouse relation) row-filters
@@ -1329,7 +1417,7 @@ class RegistrySpec extends AnyFunSuite {
     // ... and RefPeriod on a source raises (no period layout to prune)
     reg2.register(Model("bad", Seq("src"), ViewMat, ctx =>
       ctx.ref("src", Seq(RefPeriod("2024-01-01", "2024-01-02")))))
-    val ex = intercept[Exception](reg2.run(select = Seq("bad")))
+    val ex = intercept[Exception](reg2.run(selector = "+bad"))
     assert(ex.getMessage.contains("period layout") ||
       Option(ex.getCause).exists(_.getMessage.contains("period layout")),
       ex.toString)
@@ -1362,7 +1450,7 @@ class RegistrySpec extends AnyFunSuite {
     // a prefix BESIDE a range routes the box and row-filters the prefix
     reg.register(Model("mlow", Seq("keyed"), ViewMat, ctx =>
       ctx.ref("keyed", Seq(RefRange("v", 1200L, 1219L), RefPrefix("k", "m")))))
-    reg.run(select = Seq("mlow"))
+    reg.run(selector = "+mlow")
     assert(reg.relation("mlow").collect().map(_.getLong(1)).sorted.toSeq ===
       (1200L until 1220L).toSeq)
     // fallback: a SOURCE dep (no warehouse relation) row-filters startsWith
@@ -1430,7 +1518,7 @@ class RegistrySpec extends AnyFunSuite {
     // no stored profile on a source dep: no hint, correct rows, logged
     reg.register(Model("joined_raw", Seq("fact_src", "dim_src"), ViewMat,
       ctx => ctx.join("fact_src", "dim_src", Seq("k"))))
-    reg.run(select = Seq("joined_raw"))
+    reg.run(selector = "+joined_raw")
     assert(reg.relation("joined_raw").count() === 2000L)
     assert(reg.metadataOps.exists(m => m.startsWith("stats_join joined_raw")
       && m.contains("no stored profile")))
@@ -1554,7 +1642,7 @@ class RegistrySpec extends AnyFunSuite {
     reg.register(Model("routed2", Seq("f", "dm"), ViewMat,
       ctx => ctx.join("f", "dm", Seq("k"), broadcastMaxRows = 10L,
         routeSkewPpm = Some(900000L))))
-    reg.run(select = Seq("routed2"))
+    reg.run(selector = "+routed2")
     assert(reg.metadataOps.exists(m => m.contains("stats_join routed2")
       && m.contains("no key certifies 900000 ppm")))
     assert(reg.metadataOps.exists(m => m.contains("stats_join routed2")
@@ -1563,12 +1651,12 @@ class RegistrySpec extends AnyFunSuite {
     // asking for routing without the MG sidecar raises (dm declares none)
     reg.register(Model("routed3", Seq("dm", "f"), ViewMat,
       ctx => ctx.join("dm", "f", Seq("k"), routeSkewPpm = Some(100000L))))
-    intercept[IllegalArgumentException] { reg.run(select = Seq("routed3")) }
+    intercept[IllegalArgumentException] { reg.run(selector = "+routed3") }
     // composite keys cannot route
     reg.register(Model("routed4", Seq("f", "dm"), ViewMat,
       ctx => ctx.join("f", "dm", Seq("k", "k"),
         routeSkewPpm = Some(100000L))))
-    intercept[IllegalArgumentException] { reg.run(select = Seq("routed4")) }
+    intercept[IllegalArgumentException] { reg.run(selector = "+routed4") }
   }
 
   test("ctx.starJoin: dims ordered by stored estimate (most selective first), per-dim broadcast, identity, unprofiled dims last") {
@@ -1618,7 +1706,7 @@ class RegistrySpec extends AnyFunSuite {
       ctx => ctx.starJoin("fact",
         Seq(("d3_src", Seq("k2")), ("d1", Seq("k1"))),
         broadcastMaxRows = 500L)))
-    reg.run(select = Seq("star2"))
+    reg.run(selector = "+star2")
     assert(reg.metadataOps.exists(m => m.contains("stats_star_join star2")
       && m.contains("order=d1[k1](est=1000,plan=broadcast_dim) " +
         "-> d3_src[k2](est=none,plan=shuffle)")),
@@ -1627,7 +1715,7 @@ class RegistrySpec extends AnyFunSuite {
     // empty dim list raises
     reg.register(Model("star3", Seq("fact"), ViewMat,
       ctx => ctx.starJoin("fact", Nil)))
-    intercept[IllegalArgumentException] { reg.run(select = Seq("star3")) }
+    intercept[IllegalArgumentException] { reg.run(selector = "+star3") }
   }
 
   test("ctx.aggRef: served plan reads ONLY the rollup sidecar, rows identical to direct, non-subsumed falls back to base") {
@@ -1675,7 +1763,7 @@ class RegistrySpec extends AnyFunSuite {
     reg.register(Model("badm", Seq("base"), ViewMat,
       ctx => ctx.aggRef("base", Nil, Seq(Want("sv", "sum", "v")),
         preds = Seq(RefPeriod("2024-01-01", "2024-01-02")))))
-    intercept[IllegalArgumentException] { reg.run(select = Seq("badm")) }
+    intercept[IllegalArgumentException] { reg.run(selector = "+badm") }
   }
 
   test("VersionedTableMat: runs stack immutable versions, deps defer to the CURRENT version, old versions stay pinned") {

@@ -253,7 +253,7 @@ class TableStatsSpec extends AnyFunSuite {
       postHooks = Seq(TableStats.analyzeHook(Seq("id"), 16,
         mcvCols = Seq("g"), mcvK = 2,
         summaryCols = Seq("id"), summaryK = 8))))
-    reg.run(select = Seq("t2"))
+    reg.run(selector = "+t2")
     val rel = wh.read("t2")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toString).sorted.toSeq
@@ -471,7 +471,7 @@ class TableStatsSpec extends AnyFunSuite {
         TableStats.analyzeHook(Seq("a"), summaryCols = Seq("a"),
           summaryK = 8192),
         TableStats.zorderHook(boxes, Seq(Seq("a")), numFiles = 8))))
-    reg.run(select = Seq("t2"))
+    reg.run(selector = "+t2")
     val Some((keptA, nA)) = wh.statsPrunedFiles("t2", "a", 0L, 15L)
     assert(nA === 8 && keptA.size < nA,
       s"clustered layout kept ${keptA.size}/$nA")
