@@ -5,124 +5,128 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import graft.engine.Pin.PinOps
 
-/** Parquet-dir warehouse with the reference's backup/swap replace protocol
+/** Parquet-dir warehouse with the reference's replace guarantee
   * (dbt-adapters/macros/materializations/models/table.sql:5-22 and the
-  * incremental full-refresh path incremental.sql:83-87): write the new data to
-  * an intermediate location, swap it in, keep the old data until the swap
-  * completes. Spark has no multi-table transaction (SURVEY §4) — an atomic
-  * directory rename is the strongest single-table guarantee available and is
-  * exactly what the reference's rename dance provides.
+  * incremental full-refresh path incremental.sql:83-87): after a crash, a
+  * replaced relation reads as either the old or the new data. Spark has no
+  * multi-table transaction (SURVEY §4) and there is no Delta here (SURVEY
+  * §7.4.1), so MERGE-family operators rewrite through the same path.
   *
-  * No Delta in this environment (SURVEY §7.4.1), so MERGE-family operators
-  * rewrite via this swap path.
+  * Every change to a relation is ONE commit ([[commit]]) in three phases:
+  *  1. stage: everything new is written under the name's staging location
+  *     (`<name>__stage`: a directory, sidecars such as
+  *     `<name>__stage__stats__meta`, or the catalog table `<name>__stage`),
+  *     never touching the target;
+  *  2. record: one intent record per name (`<name>__intent__meta`, written
+  *     atomically) lists the ordered, idempotent steps — `replace` (while
+  *     the staged side still exists, remove the target and move the staged
+  *     side in; once it is gone, nothing) and `delete`;
+  *  3. apply: the steps run, then the record is removed.
+  * [[recover]] replays a pending record before any entry point touches the
+  * name, so a crash before the record leaves the old data and a crash after
+  * it (also one inside a replay) ends at the new data. writeSwap, slice
+  * swaps, retention, version writes, clones, the bucketed generation flip
+  * and drop are all step lists over this one commit.
   */
 final class Warehouse(val root: String, spark: SparkSession) {
+  import Warehouse.{Delete, Replace, Step}
   Files.createDirectories(Paths.get(root))
 
   private def dir(name: String): Path = Paths.get(root, name)
 
-  /** Test-only crash injection: the swap protocols invoke this at named
-    * commit points so specs can simulate a process dying between protocol
-    * steps (kill-window coverage for every recovery path). Production never
-    * installs a hook — the default is a no-op called once per commit STEP,
-    * never per row.
+  /** Test-only crash injection: the commit invokes this at named points
+    * (`commit:staged`, `commit:recorded`, `commit:removed:<target>` inside
+    * a replace, `commit:applied:<target>` after each step) so specs can
+    * simulate a process dying anywhere in it. Production never installs a
+    * hook — the default is a no-op called once per commit step, never per
+    * row.
     */
   private[graft] var failpoint: String => Unit = _ => ()
 
-  /** getMeta probe counter — observability for the marker-absence cache
+  /** getMeta probe counter — observability for the record-absence cache
     * below (specs assert the hot read path stops probing).
     */
   private[graft] val metaProbes = new java.util.concurrent.atomic.AtomicLong
 
-  /** Names whose slice-intent marker is known ABSENT. recover() runs on
-    * every read/exists, and on an object store each marker probe is a
-    * round-trip — the common no-interrupted-swap case must not pay it per
-    * read. Entries are invalidated by the only marker writer
-    * (overwritePeriods). Like the read cache, this assumes the single-owner
-    * contract: THIS Warehouse performs every write under its root.
+  /** Names whose intent record is known ABSENT. recover() runs on every
+    * read/exists, and on an object store each record probe is a round-trip
+    * — the common no-interrupted-commit case must not pay it per read.
+    * [[commit]], the only record writer, removes the name before writing.
+    * Like the read cache, this assumes the single-owner contract: THIS
+    * Warehouse performs every write under its root.
     *
-    * `sliceLock` serializes cache-check+probe+replay against the writer's
-    * invalidate+marker-write pair: without it a reader probing between the
+    * `commitLock` serializes cache-check+probe+replay against the writer's
+    * invalidate+record-write pair: without it a reader probing between the
     * writer's cache-remove and its putMeta would re-cache "absent", and if
-    * the writer then died mid-commit every later read in this JVM would
-    * skip the replay and serve the half-swapped layout. Driver-side
-    * metadata-rate operations only — never held around a Spark action.
+    * the writer then died mid-apply every later read in this JVM would
+    * skip the replay and serve a half-applied layout. Driver-side
+    * file and catalog operations only — never held around a Spark action.
     */
-  private val sliceMarkerAbsent =
+  private val recordAbsent =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private val sliceLock = new Object
+  private val commitLock = new Object
 
-  /** Crash recovery for the swap window: a process that died between
-    * `target -> backup` and `tmp -> target` leaves the backup as the ONLY
-    * complete copy (the reference's rename dance has the same window and
-    * relies on warehouse transactionality we don't have). On the next open,
-    * restore the backup and discard the possibly-incomplete tmp — the failed
-    * write simply never happened.
-    */
-  private def recover(name: String): Unit = {
-    // a drop() that died mid-deletion left a drop-intent marker — finish
-    // the drop FIRST: a half-dropped table (checkpoint gone, table present)
-    // must never be restored or read as live. Checked before the backup
-    // restore below so a dropped table's leftover backup cannot resurrect.
-    completeDrop(name)
-    val target = dir(name)
-    val backup = dir(name + "__backup")
-    if (!Files.exists(target) && Files.exists(backup)) {
-      Files.move(backup, target, StandardCopyOption.ATOMIC_MOVE)
-      deleteRec(dir(name + "__tmp"))
+  private val Catalog = "catalog:"
+
+  /** The staging location of `name` (see the class doc). */
+  private def stageOf(name: String): String = name + "__stage"
+
+  private def present(loc: String): Boolean =
+    if (loc.startsWith(Catalog)) spark.catalog.tableExists(loc.stripPrefix(Catalog))
+    else Files.exists(dir(loc))
+
+  private def remove(loc: String): Unit =
+    if (loc.startsWith(Catalog)) spark.sql(s"DROP TABLE IF EXISTS ${loc.stripPrefix(Catalog)}")
+    else deleteRec(dir(loc))
+
+  private def applyStep(step: Step): Unit = {
+    step match {
+      case Replace(staged, target) => if (present(staged)) {
+        remove(target)
+        failpoint(s"commit:removed:$target")
+        if (staged.startsWith(Catalog)) spark.sql(
+          s"ALTER TABLE ${staged.stripPrefix(Catalog)} RENAME TO ${target.stripPrefix(Catalog)}")
+        else Files.move(dir(staged), dir(target), StandardCopyOption.ATOMIC_MOVE)
+      }
+      case Delete(target) => remove(target)
     }
-    // a slice swap (overwritePeriods) that died mid-commit left an intent
-    // marker — finish it before anyone reads the half-swapped layout
-    completeSliceSwap(name)
+    failpoint(s"commit:applied:${step.target}")
   }
 
-  /** Names whose drop-intent marker is known ABSENT — same per-read probe
-    * economics (and the same writer-side lock discipline) as
-    * [[sliceMarkerAbsent]].
+  /** Commit staged work on `name`: record the steps, then apply them. The
+    * caller has staged everything the steps move in, and has run
+    * [[recover]] on the name before staging.
     */
-  private val dropMarkerAbsent =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private def completeDrop(name: String): Unit = sliceLock.synchronized {
-    if (!dropMarkerAbsent.contains(name)) getMeta(name + "__drop_intent") match {
-      case None => dropMarkerAbsent.add(name); ()
-      case Some(_) => dropBody(name)
+  private def commit(name: String, steps: Seq[Step]): Unit = {
+    failpoint("commit:staged")
+    commitLock.synchronized {
+      recordAbsent.remove(name)
+      putMeta(name + "__intent", steps.map {
+        case Replace(s, t) => s"replace\t$s\t$t"
+        case Delete(t) => s"delete\t$t"
+      }.mkString("\n"))
     }
+    failpoint("commit:recorded")
+    recover(name)
   }
 
-  /** Complete (or resume) a staged slice swap recorded by the intent marker:
-    * for every enumerated partition value, a STAGED dir still in the tmp area
-    * replaces the target dir; a staged dir already gone was moved in by the
-    * crashed attempt (keep the target); an enumerated value with NO staged
-    * dir means the slice is empty there (the target dir is deleted). Runs
-    * only when the marker exists, so the per-read cost is one file probe.
+  /** Replay a pending intent record of `name` to completion, and nothing
+    * else: every step is idempotent and the record goes only after the
+    * last one, so a replay that dies itself resumes from any prefix.
     */
-  private def completeSliceSwap(name: String): Unit = sliceLock.synchronized {
-    if (!sliceMarkerAbsent.contains(name)) getMeta(name + "__slice_intent") match {
-      case None =>
-        sliceMarkerAbsent.add(name); ()
-      case Some(m) =>
-        val lines = m.split("\n", -1)
-        val (partCol, enumerated, staged) =
-          (lines(0), lines(1).split(",").filter(_.nonEmpty).toSeq,
-            lines(2).split(",").filter(_.nonEmpty).toSet)
-        val tmp = dir(name + "__slice_tmp")
-        enumerated.foreach { v =>
-          val dirName = s"$partCol=$v"
-          val st = tmp.resolve(dirName)
-          if (staged.contains(dirName)) {
-            if (Files.exists(st)) {
-              deleteRec(dir(name).resolve(dirName))
-              Files.move(st, dir(name).resolve(dirName), StandardCopyOption.ATOMIC_MOVE)
-            } // else: already moved by the attempt that wrote the marker
-          } else deleteRec(dir(name).resolve(dirName))
-          failpoint(s"slice:applied:$dirName")
+  private[graft] def recover(name: String): Unit = commitLock.synchronized {
+    if (!recordAbsent.contains(name)) {
+      getMeta(name + "__intent").foreach { rec =>
+        rec.split("\n").filter(_.nonEmpty).map(_.split("\t", -1)).foreach {
+          case Array("replace", s, t) => applyStep(Replace(s, t))
+          case Array("delete", t) => applyStep(Delete(t))
+          case bad => throw new IllegalStateException(
+            s"unreadable intent record of '$name': ${bad.mkString("\t")}")
         }
-        deleteRec(tmp)
-        failpoint("slice:cleaned")
-        Files.deleteIfExists(dir(name + "__slice_intent__meta"))
-        sliceMarkerAbsent.add(name)
+        removeMeta(name + "__intent")
         invalidate(name)
+      }
+      recordAbsent.add(name)
     }
   }
 
@@ -170,10 +174,6 @@ final class Warehouse(val root: String, spark: SparkSession) {
       partitionBy: Seq[String] = Nil, statsCols: Seq[String] = Nil,
       bloomCols: Seq[String] = Nil): Unit = {
     import org.apache.spark.sql.functions.col
-    // recover FIRST: in the backup-only crash state the backup is the sole
-    // complete copy, and the deleteRec(backup) below would destroy it
-    // before the new data is safely staged — a second failure then loses
-    // everything. Restoring first makes the old state an ordinary target.
     recover(name)
     // a table that OPTED INTO a manifest keeps it across rewrites
     // (compact / rewriteZOrdered / plain overwrite route through here):
@@ -190,22 +190,12 @@ final class Warehouse(val root: String, spark: SparkSession) {
       df.repartitionByRange(clusterBy.map(col): _*).sortWithinPartitions(clusterBy.map(col): _*)
     else df
 
-    val tmp     = dir(name + "__tmp")
-    val target  = dir(name)
-    val backup  = dir(name + "__backup")
-    deleteRec(tmp); deleteRec(backup)
+    val stage = stageOf(name)
+    deleteRec(dir(stage))
     val writer = out.write.mode(SaveMode.Overwrite)
     (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-      .parquet(tmp.toString)
-    failpoint("swap:staged")
-    if (Files.exists(target)) {
-      Files.move(target, backup, StandardCopyOption.ATOMIC_MOVE)
-      failpoint("swap:backed-up")
-    }
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
-    failpoint("swap:swapped")
-    deleteRec(backup)
-    invalidate(name)
+      .parquet(dir(stage).toString)
+    commit(name, Seq(Replace(stage, name)))
     // AFTER the swap commit: the manifest is a pure optimization sidecar
     // — a crash between swap and manifest leaves a manifest-less (full
     // scan) table, never a wrong one; a stale PREVIOUS manifest is
@@ -240,34 +230,25 @@ final class Warehouse(val root: String, spark: SparkSession) {
   def overwritePeriods(name: String, batch: DataFrame, partCol: String,
       periodValues: Seq[String]): Unit = {
     recover(name)
-    // stage the slice to a tmp dir BEFORE deleting: a lazy plan may still
-    // scan this very target (a model referencing its existing state), and
-    // evaluating it after the deletes would hit dead files — or fail
-    // mid-write having already destroyed the window's old data. The staged
-    // period dirs then take their place by rename (no second
-    // materialization); a rerun of the same window is idempotent.
-    val tmp = dir(name + "__slice_tmp")
-    deleteRec(tmp)
-    batch.write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(tmp.toString)
-    val staged = listDir(tmp)
+    // stage the slice BEFORE deleting: a lazy plan may still scan this very
+    // target (a model referencing its existing state), and evaluating it
+    // after the deletes would hit dead files — or fail mid-write having
+    // already destroyed the window's old data. The staged period dirs then
+    // take their place by rename (no second materialization); a rerun of
+    // the same window is idempotent.
+    val stage = stageOf(name)
+    deleteRec(dir(stage))
+    batch.write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(dir(stage).toString)
+    val staged = listDir(dir(stage))
       .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith(s"$partCol="))
-      .map(_.getFileName.toString)
-    val enumeratedDirs = periodValues.map(v => s"$partCol=$v").toSet
+      .map(_.getFileName.toString).toSet
+    val enumeratedDirs = periodValues.map(v => s"$partCol=$v")
     require(staged.forall(enumeratedDirs.contains),
       s"slice rows outside the enumerated periods: ${staged.filterNot(enumeratedDirs.contains)}")
-    failpoint("slice:staged")
-    // intent marker AFTER staging, BEFORE any delete: a crash anywhere in
-    // the commit below is finished by completeSliceSwap on the next open —
-    // the marker records which period dirs are replaced vs emptied, so
-    // recovery never re-deletes a dir whose staged replacement already
-    // moved in
-    sliceLock.synchronized {
-      sliceMarkerAbsent.remove(name)
-      putMeta(name + "__slice_intent",
-        s"$partCol\n${periodValues.mkString(",")}\n${staged.mkString(",")}")
-    }
-    failpoint("slice:marker")
-    completeSliceSwap(name)
+    // an enumerated period with no staged dir ends EMPTY
+    commit(name, enumeratedDirs.map(d =>
+      if (staged.contains(d)) Replace(s"$stage/$d", s"$name/$d") else Delete(s"$name/$d")
+    ) :+ Delete(stage))
   }
 
   /** Directory-pruned range read of a period-partitioned table (the
@@ -378,17 +359,13 @@ final class Warehouse(val root: String, spark: SparkSession) {
     * lexicographic-ISO ordering every window read uses) and returns how
     * many periods dropped.
     *
-    * Crash safety is the slice-swap machinery VERBATIM: retention is an
-    * [[overwritePeriods]] commit with an EMPTY stage — the intent marker
-    * enumerates the victim periods with nothing staged, so
-    * `completeSliceSwap` (here, or on the next open after a crash
-    * mid-deletion) deletes each enumerated dir and clears the marker;
-    * re-runs are idempotent and a partially-deleted period can never be
-    * read (the marker outlives the crash). No Spark job anywhere —
-    * driver-side directory work only. Data-skipping sidecars re-arm at
-    * O(vanished lines) via the incremental refreshes (stale sidecars
-    * would only decline to prune, but a retention pass is exactly when
-    * the file set shrinks).
+    * Crash safety is the one [[commit]]: its record lists a delete per
+    * victim period, so a crash mid-deletion is finished on the next open
+    * and a partially-deleted period can never be read; re-runs are
+    * idempotent. No Spark job anywhere — driver-side directory work only.
+    * Data-skipping sidecars re-arm at O(vanished lines) via the
+    * incremental refreshes (stale sidecars would only decline to prune,
+    * but a retention pass is exactly when the file set shrinks).
     */
   def dropPeriodsBefore(name: String, cutoff: String): Int = {
     recover(name)
@@ -412,17 +389,9 @@ final class Warehouse(val root: String, spark: SparkSession) {
         "to remove the table")
     if (victims.isEmpty) 0
     else {
-      deleteRec(dir(name + "__slice_tmp"))
-      sliceLock.synchronized {
-        sliceMarkerAbsent.remove(name)
-        putMeta(name + "__slice_intent",
-          s"${partCols.head}\n${victims.mkString(",")}\n")
-      }
-      failpoint("retention:marker")
-      completeSliceSwap(name)
+      commit(name, victims.map(v => Delete(s"$name/${partCols.head}=$v")))
       if (manifestCols(name).nonEmpty) refreshStatsManifest(name)
       if (bloomManifestParams(name).isDefined) refreshBloomManifest(name)
-      invalidate(name)
       victims.size
     }
   }
@@ -436,33 +405,28 @@ final class Warehouse(val root: String, spark: SparkSession) {
   // Delta/Iceberg snapshot idea collapsed to the warehouse's dir-swap
   // idiom (no log compaction needed because versions here are whole
   // materializations, the granularity warehouse models actually have):
-  // each write stages `name__v<k>` via tmp + atomic rename, so a version
-  // dir EXISTING means it is complete; the current version is simply the
-  // largest. Readers pin a version by NUMBER — "training run X read
-  // corpus v2" stays answerable (and re-runnable) after v3 lands, which
-  // at 100 TB is the difference between reproducing a training mix and
-  // guessing at it. Retention drops the oldest versions by first
-  // atomically renaming to `__drop` and then deleting, so a crash
+  // each write is one [[commit]] that moves the staged data in as
+  // `name__v<k>`, so a version dir EXISTING means it is complete; the
+  // current version is simply the largest. Readers pin a version by
+  // NUMBER — "training run X read corpus v2" stays answerable (and
+  // re-runnable) after v3 lands, which at 100 TB is the difference
+  // between reproducing a training mix and guessing at it. Retention
+  // deletes the oldest versions in the SAME record as the new version's
+  // move, and every listing replays a pending record first, so a crash
   // mid-delete can never leave a PARTIAL dir that still lists as a
-  // complete version; lingering `__tmp`/`__drop` dirs are swept on the
-  // next write.
+  // complete version.
 
-  private def versionDir(name: String, v: Long): Path =
-    Paths.get(root, s"${name}__v$v")
+  private def versionName(name: String, v: Long): String = s"${name}__v$v"
 
-  /** Complete versions of a versioned table, ascending (empty when none). */
+  /** Complete versions of a versioned table, ascending (empty when none):
+    * exactly the root entries `<name>__v<digits>`.
+    */
   def versionsOf(name: String): Seq[Long] = {
-    val base = Paths.get(root)
-    if (!Files.exists(base)) return Nil
-    val prefix = s"${name}__v"
-    val it = Files.list(base)
-    try it.iterator().asScala
-      .map(_.getFileName.toString)
-      .filter(f => f.startsWith(prefix) && !f.endsWith("__tmp")
-        && !f.endsWith("__drop"))
-      .flatMap(f => scala.util.Try(f.stripPrefix(prefix).toLong).toOption)
-      .toSeq.sorted
-    finally it.close()
+    recover(name)
+    val version = (java.util.regex.Pattern.quote(name + "__v") + "(\\d{1,18})").r
+    listDir(Paths.get(root)).map(_.getFileName.toString).collect {
+      case version(v) => v.toLong
+    }.sorted
   }
 
   def currentVersion(name: String): Long = {
@@ -472,34 +436,19 @@ final class Warehouse(val root: String, spark: SparkSession) {
   }
 
   /** Write the next version of `name` and return its number. `keep > 0`
-    * retains only the newest `keep` versions (the new one included) —
-    * the retention sweep runs AFTER the new version is durable, so a
-    * crash anywhere leaves at least the previous state readable.
+    * retains only the newest `keep` versions (the new one included); the
+    * retired versions go in the same commit as the new one lands.
     */
   def writeVersioned(name: String, df: DataFrame, keep: Int = 0): Long = {
     require(keep >= 0, s"keep must be >= 0 (0 = unlimited), got $keep")
-    // sweep leftovers from crashed writes/drops before staging
-    val base = Paths.get(root)
-    if (Files.exists(base)) {
-      val it = Files.list(base)
-      try it.iterator().asScala
-        .filter { p => val f = p.getFileName.toString
-          f.startsWith(s"${name}__v") && (f.endsWith("__tmp") || f.endsWith("__drop")) }
-        .toSeq.foreach(deleteRec)
-      finally it.close()
-    }
-    val next = versionsOf(name).lastOption.getOrElse(0L) + 1L
-    val tmp = Paths.get(root, s"${name}__v${next}__tmp")
-    df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    failpoint("versioned:staged")
-    Files.move(tmp, versionDir(name, next), StandardCopyOption.ATOMIC_MOVE)
-    failpoint("versioned:committed")
-    if (keep > 0) versionsOf(name).dropRight(keep).foreach { old =>
-      val drop = Paths.get(root, s"${name}__v${old}__drop")
-      Files.move(versionDir(name, old), drop, StandardCopyOption.ATOMIC_MOVE)
-      failpoint("versioned:drop-renamed")
-      deleteRec(drop)
-    }
+    val live = versionsOf(name)
+    val next = live.lastOption.getOrElse(0L) + 1L
+    val stage = stageOf(name)
+    deleteRec(dir(stage))
+    df.write.mode(SaveMode.Overwrite).parquet(dir(stage).toString)
+    val retired = if (keep > 0) (live :+ next).dropRight(keep) else Nil
+    commit(name, Replace(stage, versionName(name, next)) +:
+      retired.map(v => Delete(versionName(name, v))))
     next
   }
 
@@ -508,33 +457,17 @@ final class Warehouse(val root: String, spark: SparkSession) {
     * wrong snapshot.
     */
   def readVersioned(name: String, version: Long = -1L): DataFrame = {
+    recover(name)
     val v = if (version < 0) currentVersion(name) else version
-    require(Files.exists(versionDir(name, v)),
+    require(Files.exists(dir(versionName(name, v))),
       s"'$name' has no version $v (live: ${versionsOf(name).mkString(",")})")
-    val df = spark.read.parquet(versionDir(name, v).toString)
+    val df = spark.read.parquet(dir(versionName(name, v)).toString)
     df.drop(df.columns.filter(_.startsWith(enginePrefix)).toSeq: _*)
   }
 
-  /** Drop ALL versions of a versioned table (the [[drop]] analogue). */
-  def dropVersioned(name: String): Unit = {
-    val base = Paths.get(root)
-    if (!Files.exists(base)) return
-    val it = Files.list(base)
-    try it.iterator().asScala
-      .filter(_.getFileName.toString.startsWith(s"${name}__v"))
-      .toSeq.foreach(deleteRec)
-    finally it.close()
-    // same derived-knowledge hygiene as [[drop]]: a versioned relation
-    // recreated under this name starts from v1 with no inherited
-    // signatures or constraints
-    Files.deleteIfExists(dir(name + "__buildsig__meta"))
-    Files.deleteIfExists(dir(name + "__constraints__meta"))
-  }
-
   def append(name: String, df: DataFrame): Unit = {
-    // recover first: appending into the backup-only crash state would
-    // recreate the target dir with ONLY the batch, permanently shadowing
-    // the backup copy of everything before it
+    // recover first: a pending commit must land before new files join
+    // the target, or its replay would replace them away
     recover(name)
     df.write.mode(SaveMode.Append).parquet(dir(name).toString)
     invalidate(name)
@@ -576,8 +509,8 @@ final class Warehouse(val root: String, spark: SparkSession) {
     require(!batch.columns.contains(partCol), s"column name '$partCol' is reserved")
     val withPart = batch.withColumn(partCol, pmod(hash(keys.map(col): _*), lit(nBuckets)))
     if (!exists(name)) {
-      // staged like every other creation path (writeSwap = tmp + atomic
-      // rename): a direct write that died mid-stream would leave a partial
+      // staged like every other creation path (writeSwap = the staged
+      // commit): a direct write that died mid-stream would leave a partial
       // dir that every later open accepts as the complete first batch
       writeSwap(name, withPart, partitionBy = Seq(partCol))
     } else {
@@ -602,7 +535,7 @@ final class Warehouse(val root: String, spark: SparkSession) {
         // otherwise hold a touched-bucket copy.
         Pin.loan(touchedBucketScan(name, partCol, touchedVals).pinLazy()) { target =>
           val merged = Incremental.merge(target, batchP, keys, nullSafeKeys = nullSafeKeys)
-          // commit via the staged slice swap (stage to tmp, intent marker,
+          // commit via the staged slice swap (stage, intent record,
           // per-bucket rename): a crash mid-commit is finished by recover() —
           // the in-place dynamic partition overwrite this replaces could lose a
           // touched bucket's pre-batch keys if it died between delete and land.
@@ -622,10 +555,9 @@ final class Warehouse(val root: String, spark: SparkSession) {
     */
   def writeBucketed(table: String, df: DataFrame, bucketCols: Seq[String],
       nBuckets: Int): Unit = {
-    // finish any crashed drop() of this name FIRST (same discipline as
-    // writeSwap): without this, a stale drop-intent marker survives the
-    // rebuild and the next exists()/read() would complete the old drop
-    // against the freshly written live table
+    // finish any pending commit of this name FIRST (same discipline as
+    // writeSwap): a crashed drop's record replayed AFTER this write would
+    // delete the freshly written table
     recover(table)
     spark.sql(s"DROP TABLE IF EXISTS $table")
     deleteRec(dir(table)) // external location under this warehouse root
@@ -635,6 +567,8 @@ final class Warehouse(val root: String, spark: SparkSession) {
       .format("parquet")
       .option("path", dir(table).toString)
       .saveAsTable(table)
+    // marks the name as a bucketed catalog table (for drop and clone); the
+    // current generation is the catalog location itself
     putMeta(table + "__bktgen", "")
   }
 
@@ -645,16 +579,15 @@ final class Warehouse(val root: String, spark: SparkSession) {
     * the incremental-dedup signature index): per-run I/O is O(batch), and
     * later bucket-joins still see one coherent bucketing. Works on plain
     * AND generation-lifecycle tables alike (the append targets whatever
-    * generation the catalog currently names, after settling any crashed
-    * swap), so append -> [[compactBucketed]] -> append cycles compose.
+    * generation the catalog currently names, after settling any pending
+    * commit), so append -> [[compactBucketed]] -> append cycles compose.
     */
   def appendBucketed(table: String, df: DataFrame, bucketCols: Seq[String],
       nBuckets: Int): Unit = {
     // a crashed drop() must fail the require below loudly (table gone),
-    // never append into half-dropped state; a crashed generation swap is
+    // never append into half-dropped state; a crashed generation flip is
     // settled first so the append lands in the CURRENT generation
     recover(table)
-    recoverBucketedGen(table)
     require(spark.catalog.tableExists(table), s"bucketed target $table missing")
     df.write.mode(SaveMode.Append)
       .bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
@@ -673,49 +606,16 @@ final class Warehouse(val root: String, spark: SparkSession) {
     * holding the old generation keeps a consistent view and a crash before
     * the rename leaves the old generation intact.
     */
-  /** Catalog-level crash recovery for the generation swap below: the rename
-    * dance has two windows — (1) after DROP TABLE but before RENAME the
-    * catalog has no table under the target name while the finished
-    * `__gen_*` table holds the new generation; (2) after RENAME but before
-    * the meta write the table exists but the recorded generation is stale
-    * (the next merge would otherwise delete the LIVE generation's path).
-    * Both repair deterministically from catalog + path state; returns the
-    * trusted current generation.
-    */
-  private def recoverBucketedGen(table: String): String = {
-    val meta = getMeta(table + "__bktgen").getOrElse("")
-    if (!spark.catalog.tableExists(table)) {
-      val flip = if (meta == "a") "b" else "a"
-      val lingering = s"${table}__gen_$flip"
-      if (spark.catalog.tableExists(lingering)) { // window (1): finish the rename
-        spark.sql(s"ALTER TABLE $lingering RENAME TO $table")
-        putMeta(table + "__bktgen", flip)
-        deleteRec(dir(if (meta.isEmpty) table else s"$table@$meta"))
-        invalidate(table)
-        return flip
-      }
-      return meta // nothing to recover; the caller's require reports it
-    }
-    // window (2): the table's ACTUAL location wins over the recorded meta
-    val base = new java.io.File(spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .location.getPath).getName
-    val actual = if (base.contains("@")) base.substring(base.lastIndexOf("@") + 1) else ""
-    if (actual != meta) {
-      putMeta(table + "__bktgen", actual)
-      deleteRec(dir(if (meta.isEmpty) table else s"$table@$meta"))
-      invalidate(table)
-    }
-    actual
-  }
-
   def mergeBucketed(table: String, source: DataFrame, keys: Seq[String],
       nBuckets: Int): Unit = {
-    val genNow = recoverBucketedGen(table)
+    recover(table)
     require(spark.catalog.tableExists(table), s"bucketed target $table missing")
     // same identical-inputs rule as upsertPartitioned: merge's three
     // branches each scan the source within the one saveAsTable action
-    Pin.loan(source.pinLazy())(mergeBucketedImpl(table, _, keys, nBuckets, genNow))
+    Pin.loan(source.pinLazy()) { src =>
+      writeBucketedGen(table, Incremental.merge(spark.table(table), src, keys),
+        keys, nBuckets)
+    }
   }
 
   /** Bucketed-table compaction: every [[appendBucketed]] batch adds one
@@ -732,12 +632,11 @@ final class Warehouse(val root: String, spark: SparkSession) {
     */
   def compactBucketed(table: String, keys: Seq[String], nBuckets: Int): Unit = {
     recover(table)
-    val genNow = recoverBucketedGen(table)
     require(spark.catalog.tableExists(table), s"bucketed target $table missing")
     val autoScan = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
     val prev = spark.conf.get(autoScan)
     spark.conf.set(autoScan, "false")
-    try writeBucketedGen(table, spark.table(table), keys, nBuckets, genNow)
+    try writeBucketedGen(table, spark.table(table), keys, nBuckets)
     finally spark.conf.set(autoScan, prev)
   }
 
@@ -750,9 +649,8 @@ final class Warehouse(val root: String, spark: SparkSession) {
   def rewriteBucketed(table: String, df: DataFrame, keys: Seq[String],
       nBuckets: Int): Unit = {
     recover(table)
-    val genNow = recoverBucketedGen(table)
     require(spark.catalog.tableExists(table), s"bucketed target $table missing")
-    writeBucketedGen(table, df, keys, nBuckets, genNow)
+    writeBucketedGen(table, df, keys, nBuckets)
   }
 
   /** Data part-file count of a bucketed catalog table's CURRENT generation —
@@ -762,53 +660,41 @@ final class Warehouse(val root: String, spark: SparkSession) {
     */
   def bucketedFileCount(table: String): Int = {
     recover(table)
-    val gen = recoverBucketedGen(table)
-    val p = dir(if (gen.isEmpty) table else s"$table@$gen")
-    if (!Files.exists(p)) 0
-    else listDir(p).count { f =>
+    if (!spark.catalog.tableExists(table)) 0
+    else listDir(dir(bucketedDir(table))).count { f =>
       val n = f.getFileName.toString
       Files.isRegularFile(f) && !n.startsWith("_") && !n.startsWith(".")
     }
   }
 
-  private def mergeBucketedImpl(table: String, source: DataFrame,
-      keys: Seq[String], nBuckets: Int, genNow: String): Unit =
-    writeBucketedGen(table,
-      Incremental.merge(spark.table(table), source, keys), keys, nBuckets, genNow)
-
-  /** Stage a new generation of a bucketed table from `df` and swap it in —
-    * the crash-safe rewrite shared by [[mergeBucketed]] and
-    * [[compactBucketed]] (kill-tested at every bktgen:* failpoint).
+  /** Root entry holding a bucketed table's current generation: `table`
+    * as [[writeBucketed]] created it, then `table@a` / `table@b`.
     */
-  private def writeBucketedGen(table: String, merged: DataFrame,
-      keys: Seq[String], nBuckets: Int, genNow: String): Unit = {
-    val genNext = if (genNow == "a") "b" else "a"
-    val prevPath = dir(if (genNow.isEmpty) table else s"$table@$genNow")
-    val nextName = s"${table}__gen_$genNext"
-    spark.sql(s"DROP TABLE IF EXISTS $nextName")
-    deleteRec(dir(s"$table@$genNext"))
-    // a crash after the meta write but before the prev-generation delete
-    // leaks the first-generation plain dir forever (gen names alternate a/b
-    // afterwards, so no later run reuses it) — at corpus scale that is a
-    // full stale copy of the table; sweep it here
-    if (genNow.nonEmpty) deleteRec(dir(table))
-    merged.write.mode(SaveMode.Overwrite)
+  private def bucketedDir(table: String): String =
+    new java.io.File(spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
+      .location.getPath).getName
+
+  /** Stage a new generation of a bucketed table from `df` as the catalog
+    * table `<table>__stage` in the alternate generation dir, then commit
+    * a catalog replace of the table plus the old generation's delete —
+    * the crash-safe rewrite shared by [[mergeBucketed]], [[compactBucketed]]
+    * and [[rewriteBucketed]].
+    */
+  private def writeBucketedGen(table: String, df: DataFrame,
+      keys: Seq[String], nBuckets: Int): Unit = {
+    val current = bucketedDir(table)
+    val next = if (current == s"$table@a") s"$table@b" else s"$table@a"
+    val stage = stageOf(table)
+    spark.sql(s"DROP TABLE IF EXISTS $stage")
+    deleteRec(dir(next))
+    df.write.mode(SaveMode.Overwrite)
       .bucketBy(nBuckets, keys.head, keys.tail: _*)
       .sortBy(keys.head, keys.tail: _*)
       .format("parquet")
-      .option("path", dir(s"$table@$genNext").toString)
-      .saveAsTable(nextName)
-    failpoint("bktgen:staged")
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    failpoint("bktgen:dropped")
-    spark.sql(s"ALTER TABLE $nextName RENAME TO $table")
-    failpoint("bktgen:renamed")
-    putMeta(table + "__bktgen", genNext)
-    failpoint("bktgen:meta")
-    deleteRec(prevPath)
-    // bucketed tables are CATALOG tables (read via spark.table, where the
-    // bucket metadata lives); a path-read cache entry would now dangle
-    invalidate(table)
+      .option("path", dir(next).toString)
+      .saveAsTable(stage)
+    commit(table, Seq(Replace(Catalog + stage, Catalog + table), Delete(current)))
   }
 
   /** Small-file compaction (the OPTIMIZE maintenance op): append-heavy
@@ -867,7 +753,6 @@ final class Warehouse(val root: String, spark: SparkSession) {
   def dataFileCount(name: String): Long = {
     val st = Files.walk(dir(name))
     try {
-      import scala.jdk.CollectionConverters._
       st.iterator().asScala.count(p =>
         Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
     } finally st.close()
@@ -919,7 +804,6 @@ final class Warehouse(val root: String, spark: SparkSession) {
   private def parquetDataFiles(name: String): Seq[Path] = {
     val st = Files.walk(dir(name))
     try {
-      import scala.jdk.CollectionConverters._
       st.iterator().asScala.filter { p =>
         val n = p.getFileName.toString
         Files.isRegularFile(p) && n.endsWith(".parquet") &&
@@ -1056,7 +940,6 @@ final class Warehouse(val root: String, spark: SparkSession) {
         new org.apache.hadoop.fs.Path(p.toAbsolutePath.toString), conf)
       val reader = ParquetFileReader.open(in)
       val entries = try {
-        import scala.jdk.CollectionConverters._
         val blocks = reader.getFooter.getBlocks.asScala.toSeq
         cols.flatMap { c =>
           val chunks = blocks.flatMap(_.getColumns.asScala
@@ -1676,16 +1559,13 @@ final class Warehouse(val root: String, spark: SparkSession) {
     require(getMeta(src + "__bktgen").isEmpty,
       s"'$src' is a bucketed catalog table — clone its logical content via " +
         "read + writeBucketed instead")
-    val tmp = dir(dst + "__tmp")
-    val target = dir(dst)
-    val backup = dir(dst + "__backup")
-    deleteRec(tmp); deleteRec(backup)
+    val stage = stageOf(dst)
+    deleteRec(dir(stage))
     val s0 = dir(src)
     val st = Files.walk(s0)
     try {
-      import scala.jdk.CollectionConverters._
       st.iterator().asScala.foreach { p =>
-        val t = tmp.resolve(s0.relativize(p))
+        val t = dir(stage).resolve(s0.relativize(p))
         if (Files.isDirectory(p)) Files.createDirectories(t)
         else try Files.createLink(t, p)
         catch { case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
@@ -1693,116 +1573,53 @@ final class Warehouse(val root: String, spark: SparkSession) {
         }
       }
     } finally st.close()
-    // the writeSwap commit protocol (same failpoints, same recover() path)
-    failpoint("swap:staged")
-    if (Files.exists(target)) {
-      Files.move(target, backup, StandardCopyOption.ATOMIC_MOVE)
-      failpoint("swap:backed-up")
+    // the data-skipping sidecars travel with the clone in the same commit:
+    // relative paths and byte sizes are identical (hard links), so the
+    // source manifest is valid verbatim — and any manifest of a PREVIOUS
+    // dst incarnation must not linger (its (path, size) check would
+    // almost surely reject, but correctness here is explicit)
+    val sidecars = Seq("__stats", "__bloom").map { kind =>
+      getMeta(src + kind) match {
+        case Some(m) =>
+          putMeta(stage + kind, m)
+          Replace(s"$stage${kind}__meta", s"$dst${kind}__meta")
+        case None => Delete(s"$dst${kind}__meta")
+      }
     }
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
-    failpoint("swap:swapped")
-    deleteRec(backup)
-    // the data-skipping sidecar travels with the clone: relative paths
-    // and byte sizes are identical (hard links), so the source manifest
-    // is valid verbatim — and any stale manifest of a PREVIOUS dst
-    // incarnation must not linger (its (path, size) check would almost
-    // surely reject, but correctness here is explicit, not probabilistic)
-    getMeta(src + "__stats") match {
-      case Some(m) => putMeta(dst + "__stats", m)
-      case None => removeMeta(dst + "__stats")
-    }
-    getMeta(src + "__bloom") match {
-      case Some(m) => putMeta(dst + "__bloom", m)
-      case None => removeMeta(dst + "__bloom")
-    }
-    invalidate(dst)
+    commit(dst, Replace(stage, dst) +: sidecars)
   }
 
-  def drop(name: String): Unit = {
-    // drop-intent marker FIRST (ADVICE r6): the checkpoint-before-table
-    // ordering below still leaves a crash window — checkpoint gone, table
-    // present — where a restarted aggStream would REPLAY into the surviving
-    // table and silently double-count its sum-combined state. The marker
-    // makes a half-finished drop complete itself on the next Warehouse
-    // open (recover() runs completeDrop before anything reads the name)
-    // instead of relying on someone noticing and re-dropping.
-    sliceLock.synchronized {
-      dropMarkerAbsent.remove(name)
-      putMeta(name + "__drop_intent", "")
-    }
-    dropBody(name)
-  }
-
-  /** The deletion sequence shared by [[drop]] and crash recovery
-    * ([[completeDrop]]) — every step idempotent, marker removed LAST.
+  /** Remove every layout of `name` — plain, partitioned, versioned
+    * (`<name>__v<digits>`) and bucketed — with its staging, its stream
+    * checkpoint and its sidecars, as one [[commit]] of deletes: a drop
+    * that dies midway completes on the next open instead of leaving a
+    * half-dropped table to be read or streamed into.
     */
-  private def dropBody(name: String): Unit = {
+  def drop(name: String): Unit = {
+    recover(name)
+    val stage = stageOf(name)
     // streaming-bridge checkpoint FIRST (mergeStream/aggStream plant one
     // under root/_checkpoints/<name>): a retained checkpoint says every
     // source offset is processed, so a restarted stream against the
-    // dropped-and-recreated table would process NOTHING and the state
-    // would silently stay empty — unrecoverable for non-idempotent
-    // (sum-combined) aggregate state. Ordering matters for the crash
-    // window: checkpoint-gone + table-present merely replays — and the
-    // intent marker guarantees that replay can never land, because the
-    // half-dropped table is finished off before any reader or stream
-    // reopens the name.
-    deleteRec(java.nio.file.Paths.get(root, "_checkpoints", name))
-    failpoint("drop:checkpoint-deleted")
-    deleteRec(dir(name))
-    failpoint("drop:table-deleted")
-    // ALL stale swap state dies with its table: a leftover writeSwap backup
-    // would otherwise RESURRECT the dropped table on the next recover()
-    // (backup present + target missing = restore), and a pending slice
-    // marker must never replay onto a later table recreated under the name
-    deleteRec(dir(name + "__backup"))
-    deleteRec(dir(name + "__tmp"))
-    deleteRec(dir(name + "__slice_tmp"))
-    Files.deleteIfExists(dir(name + "__slice_intent__meta"))
-    // the config sidecar too: a later table recreated under this name must
-    // not inherit the dropped table's dynamic-table config (a config-clean
-    // first run would silently no-op instead of building)
-    Files.deleteIfExists(dir(name + "__meta"))
-    // and the data-skipping manifests (a recreated table's reads would
-    // pay the stale-check listing for nothing)
-    Files.deleteIfExists(dir(name + "__stats__meta"))
-    Files.deleteIfExists(dir(name + "__bloom__meta"))
-    // derived-knowledge sidecars die with their relation. The ivm cursor
-    // one is a CORRECTNESS matter, not hygiene: a recreated join view
-    // inheriting a dropped view's cursors would classify every existing
-    // input row as "already stored" and build a first run that is only
-    // the delta — silently missing the old⋈old block forever. Buildsig
-    // and constraints merely degrade safely (missing target rebuilds;
-    // signature mismatch refuses), but stale knowledge about a table
-    // that no longer exists has no business surviving it.
-    Files.deleteIfExists(dir(name + "__buildsig__meta"))
-    Files.deleteIfExists(dir(name + "__constraints__meta"))
-    Files.deleteIfExists(dir(name + "__ivm__meta"))
-    // the stream-bridge batch ledger too: a recreated table must not
-    // inherit "batch N already applied" from a previous life — the
-    // checkpoint deletion above already forces re-ingestion from offset
-    // zero, and a surviving ledger would silently no-op every replayed
-    // batch into the empty table
-    Files.deleteIfExists(dir(name + "__stream_batch__meta"))
-    // bucketed-catalog state dies too: the catalog entry (either the live
-    // name or a mid-rename __gen_* survivor), BOTH generation data dirs,
-    // and the generation sidecar — otherwise a "dropped" bucketed table
-    // stays fully readable via spark.table from its @a/@b dir, or a later
-    // writeBucketed under the name inherits a stale generation pointer
-    if (getMeta(name + "__bktgen").isDefined) {
-      Seq(name, s"${name}__gen_a", s"${name}__gen_b")
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-      deleteRec(dir(s"$name@a"))
-      deleteRec(dir(s"$name@b"))
-      Files.deleteIfExists(dir(name + "__bktgen__meta"))
-    }
-    invalidate(name)
-    // marker LAST: every deletion above is idempotent, so a crash anywhere
-    // before this line re-runs the whole body on the next open
-    sliceLock.synchronized {
-      Files.deleteIfExists(dir(name + "__drop_intent__meta"))
-      dropMarkerAbsent.add(name)
-    }
+    // recreated table would process NOTHING — unrecoverable for
+    // sum-combined aggregate state
+    val data = Seq(s"_checkpoints/$name", name, stage) ++
+      versionsOf(name).map(versionName(name, _)) ++
+      // a bucketed table lives in the catalog and in up to two
+      // generation dirs; otherwise it stays readable via spark.table
+      (if (getMeta(name + "__bktgen").isEmpty) Nil
+       else Seq(Catalog + name, Catalog + stage, s"$name@a", s"$name@b"))
+    // sidecars die with their relation: a recreated table must not
+    // inherit the dynamic-table config (a config-clean first run would
+    // no-op), stale data-skipping manifests, ivm cursors (a recreated
+    // join view would classify every input row as "already stored" and
+    // miss the old⋈old block forever), build signatures, constraints, the
+    // stream batch ledger ("batch N already applied" would no-op every
+    // replayed batch into the empty table) or the bucketed marker
+    val sidecars = (Seq("", "__stats", "__bloom", "__buildsig", "__constraints",
+      "__ivm", "__stream_batch", "__bktgen").map(name + _) ++
+      Seq("__stats", "__bloom").map(stage + _)).map(_ + "__meta")
+    commit(name, (data ++ sidecars).map(Delete))
   }
 
   /** Tiny sidecar metadata (e.g. the dynamic-table config the reference
@@ -1833,7 +1650,6 @@ final class Warehouse(val root: String, spark: SparkSession) {
   private def listDir(p: Path): Seq[Path] = {
     val st = Files.list(p)
     try {
-      import scala.jdk.CollectionConverters._
       st.iterator().asScala.toSeq
     } finally st.close()
   }
@@ -1842,8 +1658,16 @@ final class Warehouse(val root: String, spark: SparkSession) {
     if (Files.exists(p)) {
       val st = Files.walk(p)
       try {
-        import scala.jdk.CollectionConverters._
         st.iterator().asScala.toSeq.reverse.foreach(Files.delete)
       } finally st.close()
     }
+}
+
+private object Warehouse {
+  /** One step of a commit record. A location is a path relative to the
+    * root, or `catalog:<table>` for a session-catalog table.
+    */
+  sealed trait Step { def target: String }
+  final case class Replace(staged: String, target: String) extends Step
+  final case class Delete(target: String) extends Step
 }

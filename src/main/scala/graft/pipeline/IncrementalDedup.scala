@@ -51,15 +51,15 @@ object IncrementalDedup {
     * ids have no shingle rows. Later deltas would then probe those ids
     * into candidates that verifyJaccard's inner shingle join silently
     * drops — MISSING pairs, worse than the documented duplicate-pair
-    * replay. deltaRun brackets the appends with an intent marker (same
-    * discipline as Warehouse.drop's drop-intent), and this runs at the
-    * top of every deltaRun: marker present -> delete the orphaned band
-    * rows (generation-swap rewrite, only when orphans actually exist), so
-    * the index returns to its pre-batch state and the caller's replay of
-    * the failed batch lands whole. The orphan probe joins on id, where
-    * the shingle table's bucketing already lives — no corpus-side
-    * exchange. A stale marker over a consistent index is a no-op (one
-    * count job, no rewrite).
+    * replay. deltaRun brackets the appends with an intent marker (an
+    * undo marker, where the Warehouse commit's record is a redo one), and
+    * this runs at the top of every deltaRun: marker present -> delete the
+    * orphaned band rows (generation-swap rewrite, only when orphans
+    * actually exist), so the index returns to its pre-batch state and the
+    * caller's replay of the failed batch lands whole. The orphan probe
+    * joins on id, where the shingle table's bucketing already lives — no
+    * corpus-side exchange. A stale marker over a consistent index is a
+    * no-op (one count job, no rewrite).
     */
   private def repairTornIngest(wh: Warehouse, name: String, nBuckets: Int,
       spark: org.apache.spark.sql.SparkSession): Unit = {

@@ -239,8 +239,8 @@ object CoverageQueries extends QuerySet {
     }),
 
     QueryDef("q51_table_roundtrip", (s, d) => {
-      // S4/S5 oracle gate: CTAS through the swap-write protocol (tmp dir ->
-      // atomic move -> drop backup) with cluster_by, then read the files back
+      // S4/S5 oracle gate: CTAS through the swap-write commit (stage ->
+      // intent record -> replace) with cluster_by, then read the files back
       // — the oracle sees only the logical content, so any write/read skew
       // (schema, encoding, lost rows) fails the hash
       val wh = Scratch.warehouse("q51", d, s, Seq("claims_1998"))

@@ -311,7 +311,7 @@ object Round13Queries extends QuerySet {
         df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
         val part = java.nio.file.Files.list(tmp).filter(p =>
           p.getFileName.toString.endsWith(".parquet")).findFirst().get()
-        java.nio.file.Files.move(part, srcDir.resolve(phase + ".parquet"))
+        java.nio.file.Files.createLink(srcDir.resolve(phase + ".parquet"), part)
         wh.deleteRec(tmp)
       }
       val schema = StructType(Seq(StructField("ts", TimestampType),

@@ -211,19 +211,19 @@ object Round15bQueries extends QuerySet {
       // TIME TRAVEL as a materialization (engine/Warehouse.scala
       // writeVersioned/readVersioned + Registry VersionedTableMat — the
       // public Delta/Iceberg snapshot idea at model grain, built on the
-      // warehouse's tmp + atomic-rename idiom): three Registry runs land
-      // corpus v1/v2/v3 as IMMUTABLE version dirs (a version dir
-      // existing means it is complete — a crashed write leaves only an
-      // ignored __tmp), and AFTER v3 is current every older version is
-      // still readable BY NUMBER, digit-exact. That is the training-
-      // reproducibility contract a 100 TB corpus pipeline needs: "run X
+      // warehouse's one staged commit): three Registry runs land corpus
+      // v1/v2/v3 as IMMUTABLE version dirs (a version dir existing means
+      // it is complete — a crashed write leaves only the name's staging,
+      // which no listing reads), and AFTER v3 is current every older
+      // version is still readable BY NUMBER, digit-exact. That is the
+      // training-reproducibility contract a 100 TB corpus pipeline needs: "run X
       // trained on corpus v2" stays answerable — and re-runnable — after
       // the corpus moves on. One output row per live version with its
       // full aggregate re-read from storage post-hoc, plus the current
       // pointer; the oracle replays each version's deterministic filter.
       import graft.engine.{Model, Registry, VersionedTableMat}
       val wh = Scratch.warehouse("q515", d, s, Nil)
-      wh.dropVersioned("corpus")
+      wh.drop("corpus")
       def runWith(maxId: Long): Unit = {
         val reg = new Registry(s, wh)
         reg.source("docs_src", table(s, d, "documents")
@@ -260,16 +260,16 @@ object Round15bQueries extends QuerySet {
       // added = v3 anti-join v2, removed = v2 anti-join v3, both plain
       // broadcast-able anti joins over the two pinned snapshots (no
       // tombstone log to replay: versions are whole materializations).
-      // Retention: keep=2 means the v3 write ATOMICALLY renames v1 to a
-      // __drop dir before deleting (a crash mid-delete can never leave a
-      // partial dir that still lists as complete), so the live set is
-      // exactly {2, 3} — pinned in the live_versions column — and the
+      // Retention: keep=2 means the v3 write deletes v1 in the same
+      // commit record that lands v3 (a crash mid-delete is finished
+      // before any listing, never a partial dir posing as complete), so
+      // the live set is exactly {2, 3} — pinned in the live_versions column — and the
       // dropped v1 raises on read (RegistrySpec). Content: v_k keeps
       // doc_id % 4 in {k-1, k}, so v2->v3 adds the %4==3 slice and
       // removes the %4==1 slice; the oracle replays both anti joins.
       import graft.engine.{Model, Registry, VersionedTableMat}
       val wh = Scratch.warehouse("q516", d, s, Nil)
-      wh.dropVersioned("corpus")
+      wh.drop("corpus")
       def runWith(k: Long): Unit = {
         val reg = new Registry(s, wh)
         reg.source("docs_src", table(s, d, "documents")
@@ -733,7 +733,7 @@ object Round15bQueries extends QuerySet {
       val wh = Scratch.warehouse("q523", d, s, Seq(
         "corpus__rollup_by_lang", "corpus__rollup_spec",
         "corpus__aqp_sample"))
-      wh.dropVersioned("corpus")
+      wh.drop("corpus")
       val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
       def runWith(maxId: Long): Registry = {
         val reg = new Registry(s, wh)

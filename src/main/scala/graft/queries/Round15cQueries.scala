@@ -747,7 +747,7 @@ object Round15cQueries extends QuerySet {
       // v1_rows pin all four facts; digits replay the v2 corpus by lang.
       import graft.engine.{Model, Registry, VersionedTableMat}
       val wh = Scratch.warehouse("q534", d, s, Nil)
-      wh.dropVersioned("corp")
+      wh.drop("corp")
       def mk(maxId: Long, sig: String): Registry = {
         val reg = new Registry(s, wh).enableReuse()
         reg.source("docs_src", table(s, d, "documents")

@@ -412,7 +412,7 @@ object EventsStream {
     * compaction level adds its one-sided `ceil(W/k)` stride to that
     * group's rank envelope — compact-after-close keeps the envelope at
     * one level. The rewrite stages through the [[graft.engine.Warehouse
-    * .writeSwap]] protocol (tmp + atomic rename — the plan may still
+    * .writeSwap]] commit (stage, then replace — the plan may still
     * read the current generation while the replacement stages), and the
     * table stays mergeable for the next [[aggStream]] batch.
     */

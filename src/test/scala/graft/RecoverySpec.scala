@@ -1,27 +1,27 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.engine.Warehouse
 import graft.queries.Scratch
+import scala.jdk.CollectionConverters._
 
-/** Kill-window coverage for every swap protocol's crash-recovery path
-  * (VERDICT r3 §wrong-2: recovery code that has never executed a crash is
-  * where data-loss bugs hide). Each protocol is killed at EVERY commit point
-  * it exposes (the failpoint names are discovered from a clean run, so a new
-  * commit step added to Warehouse is automatically covered), then:
+/** Kill-window coverage for the Warehouse commit under every operation that
+  * uses it (VERDICT r3 §wrong-2: recovery code that has never executed a
+  * crash is where data-loss bugs hide). Each operation is killed at EVERY
+  * commit point it passes (the failpoint names are discovered from a clean
+  * run, so a new commit step added to Warehouse is automatically covered),
+  * then:
   *
   *  1. a fresh Warehouse on the same root must see a CONSISTENT state —
   *     exactly the before-image or the after-image, never a partial mix;
   *  2. re-running the same operation must converge to the after-image
   *     (crash-then-retry is the actual production story: the scheduler or
-  *     stream replays the batch).
+  *     stream replays the batch), leaving no staging and no intent record.
   */
-/** One swap protocol under test: set up initial state, run the op, read the
-  * logical state back. Bucketed-table protos may be unreadable mid-recovery
-  * (the catalog swap window) — consistency is then asserted only when
-  * `readable` holds. (Top-level: a spec-nested case class trips the
+/** One operation under test: set up initial state, run the op, read the
+  * logical state back. (Top-level: a spec-nested case class trips the
   * unchecked-outer-reference warning in pattern contexts.)
   */
 private[graft] final case class Proto(
@@ -30,8 +30,7 @@ private[graft] final case class Proto(
     op: Warehouse => Unit,
     state: Warehouse => Map[Long, String],
     before: Map[Long, String],
-    after: Map[Long, String],
-    readable: Warehouse => Boolean = _ => true)
+    after: Map[Long, String])
 
 class RecoverySpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -41,20 +40,31 @@ class RecoverySpec extends AnyFunSuite {
     wh.failpoint = p =>
       if (p == point) throw new RuntimeException(s"injected crash at $p")
 
-  /** Discover the failpoint names a clean run of the protocol passes. */
-  private def discoverPoints(p: Proto): Seq[String] = {
+  /** The failpoint names a clean run of `op` after `setup` passes, with the
+    * warehouse it ran on.
+    */
+  private def discoverPoints(setup: Warehouse => Unit,
+      op: Warehouse => Unit): (Seq[String], Warehouse) = {
     val wh = new Warehouse(Scratch.tempDir("graft_rec_d").toString, spark)
-    p.setup(wh)
+    setup(wh)
     val rec = scala.collection.mutable.ArrayBuffer.empty[String]
     wh.failpoint = rec += _
-    p.op(wh)
+    op(wh)
     wh.failpoint = _ => ()
-    assert(p.state(wh) === p.after, s"${p.name}: clean run must produce the after-image")
-    rec.toSeq
+    (rec.toSeq, wh)
+  }
+
+  /** Root entries a finished commit must not leave behind. */
+  private def debris(root: String): Seq[String] = {
+    val st = Files.list(Paths.get(root))
+    try st.iterator().asScala.map(_.getFileName.toString)
+      .filter(f => f.contains("__stage") || f.contains("__intent")).toList
+    finally st.close()
   }
 
   private def runMatrix(p: Proto): Unit = {
-    val points = discoverPoints(p)
+    val (points, clean) = discoverPoints(p.setup, p.op)
+    assert(p.state(clean) === p.after, s"${p.name}: clean run must produce the after-image")
     assert(points.nonEmpty, s"${p.name}: expected at least one commit point")
     points.foreach { point =>
       val root = Scratch.tempDir("graft_rec").toString
@@ -66,21 +76,39 @@ class RecoverySpec extends AnyFunSuite {
         s"${p.name}@$point: expected the injected crash, got $ex")
       // next open: a FRESH Warehouse (the crashed process is gone)
       val wh2 = new Warehouse(root, spark)
-      if (p.readable(wh2)) {
-        val st = p.state(wh2)
-        assert(st == p.before || st == p.after,
-          s"${p.name}@$point: recovered state is a partial mix:\n$st")
-      }
+      val st = p.state(wh2)
+      assert(st == p.before || st == p.after,
+        s"${p.name}@$point: recovered state is a partial mix:\n$st")
       // retry converges (the production replay path)
       p.op(wh2)
       assert(p.state(wh2) === p.after,
         s"${p.name}@$point: retry after crash must reach the after-image")
+      assert(debris(root).isEmpty, s"${p.name}@$point: debris ${debris(root)}")
     }
   }
 
   private def kvState(wh: Warehouse, name: String): Map[Long, String] =
     wh.read(name).select("k", "v").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
+
+  /** A bucketed catalog table's rows after the replay every Warehouse
+    * entry point runs first (the state is read through the catalog).
+    */
+  private def bucketedState(wh: Warehouse, table: String): Map[Long, String] = {
+    wh.recover(table)
+    if (!spark.catalog.tableExists(table)) Map.empty
+    else spark.table(table).collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+  }
+
+  /** Live versions of `name` with their row counts. */
+  private def versionState(wh: Warehouse, name: String): Map[Long, String] =
+    wh.versionsOf(name).map(v => v -> wh.readVersioned(name, v).count().toString).toMap
+
+  /** `n` rows, keys 1..n, all valued `v<n>`: a version's row count names it. */
+  private def df(n: Int) = (1 to n).map(i => (i.toLong, s"v$n")).toDF("k", "v")
+
+  private def dropCatalog(table: String): Unit =
+    Seq(table, s"${table}__stage").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
 
 
   test("writeSwap survives a kill at every commit point") {
@@ -133,18 +161,10 @@ class RecoverySpec extends AnyFunSuite {
         name = "mergeBucketed",
         setup = wh => wh.writeBucketed(table, batch1, Seq("k"), nBuckets = 4),
         op = wh => wh.mergeBucketed(table, batch2, Seq("k"), nBuckets = 4),
-        state = _ => spark.table(table).collect()
-          .map(r => r.getLong(0) -> r.getString(1)).toMap,
+        state = bucketedState(_, table),
         before = beforeM,
-        after = beforeM + (1L -> "V1-upd") + (41L -> "new"),
-        // the DROP->RENAME window leaves no table under the target name;
-        // recovery is defined to happen on the next mergeBucketed
-        readable = _ => spark.catalog.tableExists(table)))
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      spark.sql(s"DROP TABLE IF EXISTS ${table}__gen_a")
-      spark.sql(s"DROP TABLE IF EXISTS ${table}__gen_b")
-    }
+        after = beforeM + (1L -> "V1-upd") + (41L -> "new")))
+    } finally dropCatalog(table)
   }
 
   test("compactBucketed survives a kill at every commit point (content-neutral swap)") {
@@ -162,22 +182,96 @@ class RecoverySpec extends AnyFunSuite {
           wh.appendBucketed(table, Seq((41L, "a")).toDF("k", "v"), Seq("k"), 4)
         },
         op = wh => wh.compactBucketed(table, Seq("k"), nBuckets = 4),
-        state = _ => spark.table(table).collect()
-          .map(r => r.getLong(0) -> r.getString(1)).toMap,
+        state = bucketedState(_, table),
         before = content + (41L -> "a"),
-        after = content + (41L -> "a"),
-        readable = _ => spark.catalog.tableExists(table)))
-    } finally {
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      spark.sql(s"DROP TABLE IF EXISTS ${table}__gen_a")
-      spark.sql(s"DROP TABLE IF EXISTS ${table}__gen_b")
-    }
+        after = content + (41L -> "a")))
+    } finally dropCatalog(table)
+  }
+
+  test("cloneTable survives a kill at every commit point (data and manifest land together)") {
+    def cloneState(wh: Warehouse) =
+      kvState(wh, "dst") ++ wh.getMeta("dst__stats").map(_ => -1L -> "manifest")
+    runMatrix(Proto(
+      name = "cloneTable",
+      setup = wh => {
+        wh.writeSwap("src", Seq((2L, "new"), (3L, "new")).toDF("k", "v"),
+          statsCols = Seq("k"))
+        wh.writeSwap("dst", Seq((1L, "old")).toDF("k", "v"))
+      },
+      op = _.cloneTable("src", "dst"),
+      state = cloneState,
+      before = Map(1L -> "old"),
+      after = Map(2L -> "new", 3L -> "new", -1L -> "manifest")))
+  }
+
+  test("writeVersioned with keep survives a kill at every commit point") {
+    runMatrix(Proto(
+      name = "writeVersioned(keep = 2)",
+      setup = wh => { wh.writeVersioned("t", df(10)); wh.writeVersioned("t", df(20)); () },
+      // each call mints a version, so a replaying scheduler re-runs the
+      // batch only while its version has not landed
+      op = wh => if (wh.currentVersion("t") < 3L) { wh.writeVersioned("t", df(30), keep = 2); () },
+      state = versionState(_, "t"),
+      before = Map(1L -> "10", 2L -> "20"),
+      after = Map(2L -> "20", 3L -> "30")))
+  }
+
+  test("dropPeriodsBefore survives a kill at every commit point") {
+    val rows = (1 to 4).map(day => (day.toLong, s"d$day", s"2024-01-0$day"))
+    runMatrix(Proto(
+      name = "dropPeriodsBefore",
+      setup = _.writeSwap("t", rows.toDF("k", "v", "p"), partitionBy = Seq("p")),
+      op = wh => { wh.dropPeriodsBefore("t", "2024-01-03"); () },
+      state = kvState(_, "t"),
+      before = Map(1L -> "d1", 2L -> "d2", 3L -> "d3", 4L -> "d4"),
+      after = Map(3L -> "d3", 4L -> "d4")))
+  }
+
+  test("drop survives a kill at every commit point: plain, versioned and bucketed layouts") {
+    // plain: the data, its config sidecar and its stream checkpoint go together
+    def checkpoint(wh: Warehouse) = Paths.get(wh.root, "_checkpoints", "t")
+    runMatrix(Proto(
+      name = "drop(plain)",
+      setup = wh => {
+        wh.writeSwap("t", Seq((1L, "old")).toDF("k", "v"))
+        wh.putMeta("t", "cfg")
+        Files.createDirectories(checkpoint(wh))
+      },
+      op = _.drop("t"),
+      state = wh => (if (wh.exists("t")) kvState(wh, "t") else Map.empty[Long, String]) ++
+        wh.getMeta("t").map(-1L -> _) ++
+        Option.when(Files.exists(checkpoint(wh)))(-2L -> "checkpoint"),
+      before = Map(1L -> "old", -1L -> "cfg", -2L -> "checkpoint"),
+      after = Map.empty))
+    // versioned: a death midway must not leave a version that lists and reads
+    runMatrix(Proto(
+      name = "drop(versioned)",
+      setup = wh => { wh.writeVersioned("t", df(10)); wh.writeVersioned("t", df(20)); () },
+      op = _.drop("t"),
+      state = versionState(_, "t"),
+      before = Map(1L -> "10", 2L -> "20"),
+      after = Map.empty))
+    // bucketed: the catalog entry and the generation dirs go together
+    val table = "rec_bkt_drop"
+    val rows = (1L to 40L).map(k => (k, s"v$k")).toDF("k", "v")
+    try runMatrix(Proto(
+      name = "drop(bucketed)",
+      setup = wh => {
+        wh.writeBucketed(table, rows, Seq("k"), nBuckets = 4)
+        wh.mergeBucketed(table, Seq((41L, "new")).toDF("k", "v"), Seq("k"), nBuckets = 4)
+      },
+      op = _.drop(table),
+      state = bucketedState(_, table),
+      before = (1L to 40L).map(k => k -> s"v$k").toMap + (41L -> "new"),
+      after = Map.empty))
+    finally dropCatalog(table)
   }
 
   test("slice-intent marker replay: zero, some, and all staged dirs moved") {
-    // the three completeSliceSwap entry states, constructed EXPLICITLY (the
-    // matrix above reaches them through live crashes; this pins the replay
-    // semantics on hand-built directory layouts, independent of the writer)
+    // the three replay entry states of a slice record, constructed
+    // EXPLICITLY (the matrix above reaches them through live crashes; this
+    // pins the replay semantics on hand-built directory layouts,
+    // independent of the writer)
     def mkTarget(wh: Warehouse): Unit = wh.writeSwap("r",
       Seq((1L, "old1", "1"), (2L, "old2", "2"), (3L, "old3", "3"))
         .toDF("k", "v", "p"),
@@ -187,11 +281,13 @@ class RecoverySpec extends AnyFunSuite {
       val root = Scratch.tempDir(s"graft_marker_$phase").toString
       val wh = new Warehouse(root, spark)
       mkTarget(wh)
-      // stage the replacement slice exactly as overwritePeriods does
-      val tmp = java.nio.file.Paths.get(root, "r__slice_tmp")
+      // stage the replacement slice and record it exactly as
+      // overwritePeriods does: p=2 replaced, p=3 emptied, staging deleted
+      val tmp = java.nio.file.Paths.get(root, "r__stage")
       Seq((20L, "new2", "2")).toDF("k", "v", "p")
         .write.partitionBy("p").parquet(tmp.toString)
-      wh.putMeta("r__slice_intent", "p\n2,3\np=2")
+      wh.putMeta("r__intent",
+        "replace\tr__stage/p=2\tr/p=2\ndelete\tr/p=3\ndelete\tr__stage")
       if (phase == "some" || phase == "all") { // p=2 already moved in
         val dest = java.nio.file.Paths.get(root, "r", "p=2")
         wh.deleteRec(dest)
@@ -205,44 +301,46 @@ class RecoverySpec extends AnyFunSuite {
       val wh2 = new Warehouse(root, spark)
       assert(kvState(wh2, "r") === afterM, s"marker replay failed at phase=$phase")
       assert(!Files.exists(tmp), s"tmp dir must be cleaned (phase=$phase)")
-      assert(wh2.getMeta("r__slice_intent").isEmpty,
-        s"marker must be consumed (phase=$phase)")
+      assert(wh2.getMeta("r__intent").isEmpty,
+        s"record must be consumed (phase=$phase)")
     }
   }
 
   test("drop() after a swap crash does not resurrect the table from its backup") {
-    // crash writeSwap in the backup-only window, then DROP the table: the
-    // leftover backup must die with it — recover() restoring it on the next
-    // open would resurrect a table the operator deliberately deleted
+    // crash writeSwap with the target removed and the staged copy not yet
+    // moved in, then DROP the table: the pending record and its staging
+    // must die with it — a later replay moving the staging in would
+    // resurrect a table the operator deliberately deleted
     val root = Scratch.tempDir("graft_drop_res").toString
     val wh = new Warehouse(root, spark)
     wh.writeSwap("t", Seq((1L, "old")).toDF("k", "v"))
-    crashAt(wh, "swap:backed-up")
+    crashAt(wh, "commit:removed:t")
     intercept[Exception](wh.writeSwap("t", Seq((2L, "new")).toDF("k", "v")))
     val wh2 = new Warehouse(root, spark)
     wh2.drop("t")
     val wh3 = new Warehouse(root, spark)
-    assert(!wh3.exists("t"), "dropped table resurrected from stale backup")
-    // and a pending slice marker also dies with its table
+    assert(!wh3.exists("t"), "dropped table resurrected from stale staging")
+    assert(!Files.exists(Paths.get(root, "t__stage")))
+    // and a pending slice record also dies with its table
     wh3.writeSwap("s",
       Seq((1L, "a", "1"), (2L, "b", "2")).toDF("k", "v", "p"),
       partitionBy = Seq("p"))
-    crashAt(wh3, "slice:marker")
+    crashAt(wh3, "commit:recorded")
     intercept[Exception](wh3.overwritePeriods("s",
       Seq((9L, "B", "2")).toDF("k", "v", "p"), "p", Seq("2")))
     val wh4 = new Warehouse(root, spark)
     wh4.drop("s")
     val wh5 = new Warehouse(root, spark)
     assert(!wh5.exists("s"))
-    assert(wh5.getMeta("s__slice_intent").isEmpty)
+    assert(wh5.getMeta("s__intent").isEmpty)
   }
 
   test("drop() kill windows: a half-finished drop completes on the next open") {
     // the ADVICE r6 hazard: checkpoint deleted, crash, table still present —
     // a restarted aggStream would replay into the surviving table and
-    // silently double-count its sum-combined state. The drop-intent marker
-    // must finish the drop before any reader/stream reopens the name.
-    for (point <- Seq("drop:checkpoint-deleted", "drop:table-deleted")) {
+    // silently double-count its sum-combined state. The drop's intent
+    // record must finish it before any reader/stream reopens the name.
+    for (point <- Seq("commit:applied:_checkpoints/t", "commit:applied:t")) {
       val root = Scratch.tempDir("graft_rec_drop").toString
       val wh = new Warehouse(root, spark)
       wh.writeSwap("t", Seq((1L, "x")).toDF("k", "v"))
@@ -256,7 +354,7 @@ class RecoverySpec extends AnyFunSuite {
       val wh2 = new Warehouse(root, spark)
       assert(!wh2.exists("t"), s"$point: half-dropped table still visible")
       assert(!Files.exists(cp), s"$point: stream checkpoint survived the drop")
-      assert(wh2.getMeta("t__drop_intent").isEmpty, s"$point: marker not consumed")
+      assert(wh2.getMeta("t__intent").isEmpty, s"$point: record not consumed")
       // the name is cleanly reusable afterwards
       wh2.writeSwap("t", Seq((2L, "y")).toDF("k", "v"))
       assert(kvState(wh2, "t") === Map(2L -> "y"))
@@ -264,25 +362,25 @@ class RecoverySpec extends AnyFunSuite {
   }
 
   test("crashed drop + bucketed rebuild: the stale marker must not kill the new table") {
-    // writeBucketed/appendBucketed bypass the read-side completeDrop, so
-    // they must run recover() themselves — without it, a drop() that died
-    // after deleting the table leaves its intent marker, the rebuild
-    // succeeds, and the NEXT exists()/read() completes the old drop
-    // against the freshly written live table
+    // writeBucketed/appendBucketed do not go through read(), so they must
+    // run recover() themselves — without it, a drop() that died after
+    // deleting the table leaves its intent record, the rebuild succeeds,
+    // and the NEXT exists()/read() completes the old drop against the
+    // freshly written live table
     val root = Scratch.tempDir("graft_rec_bkt_drop").toString
     val wh = new Warehouse(root, spark)
     wh.writeBucketed("bt", Seq((1L, "x")).toDF("k", "v"), Seq("k"), 4)
-    crashAt(wh, "drop:table-deleted")
+    crashAt(wh, "commit:applied:bt")
     intercept[Exception](wh.drop("bt"))
     val wh2 = new Warehouse(root, spark)
     wh2.writeBucketed("bt", Seq((2L, "y")).toDF("k", "v"), Seq("k"), 4)
     val wh3 = new Warehouse(root, spark)
-    assert(wh3.exists("bt"), "stale drop-intent destroyed the rebuilt table")
+    assert(wh3.exists("bt"), "stale drop record destroyed the rebuilt table")
     assert(wh3.read("bt").collect().map(r => r.getLong(0) -> r.getString(1)).toMap
       === Map(2L -> "y"))
     // appendBucketed after a crashed drop: fail the missing-target require
     // loudly, never append into half-dropped state
-    crashAt(wh3, "drop:table-deleted")
+    crashAt(wh3, "commit:applied:bt")
     intercept[Exception](wh3.drop("bt"))
     val wh4 = new Warehouse(root, spark)
     intercept[IllegalArgumentException](
@@ -290,9 +388,9 @@ class RecoverySpec extends AnyFunSuite {
   }
 
   test("double crash: dying again DURING marker replay still converges") {
-    // crash the slice commit right after the marker, then crash the
+    // crash the slice commit right after the record, then crash the
     // RECOVERY itself mid-replay (after the first dir applies) — the third
-    // open must still converge: the marker is only consumed after a
+    // open must still converge: the record is only consumed after a
     // complete replay, so replay is resumable from any prefix
     val root = Scratch.tempDir("graft_rec_double").toString
     val wh = new Warehouse(root, spark)
@@ -300,24 +398,26 @@ class RecoverySpec extends AnyFunSuite {
       Seq((1L, "old1", "1"), (2L, "old2", "2"), (3L, "old3", "3"))
         .toDF("k", "v", "p"),
       partitionBy = Seq("p"))
-    crashAt(wh, "slice:marker")
+    crashAt(wh, "commit:recorded")
     intercept[Exception](wh.overwritePeriods("s",
       Seq((20L, "new2", "2")).toDF("k", "v", "p"), "p", Seq("2", "3")))
     val wh2 = new Warehouse(root, spark)
-    crashAt(wh2, "slice:applied:p=2")
+    crashAt(wh2, "commit:applied:s/p=2")
     intercept[Exception](wh2.read("s")) // recovery itself dies mid-replay
     val wh3 = new Warehouse(root, spark)
     assert(kvState(wh3, "s") === Map(1L -> "old1", 20L -> "new2"))
-    assert(wh3.getMeta("s__slice_intent").isEmpty, "marker must be consumed")
+    assert(wh3.getMeta("s__intent").isEmpty, "record must be consumed")
   }
 
   test("seeded random crash/op sequences converge to the model state") {
-    // generalizes the per-point matrix to SEQUENCES: a crash's debris (stale
-    // backup, pending marker, staged tmp) must not corrupt the NEXT
-    // operation on the same table. Each iteration runs a random op sequence
-    // against a plain in-memory model; every op may crash at a random
-    // commit point and is then retried on a fresh Warehouse (the production
-    // replay story). Fixed seed -> reproducible failures.
+    // generalizes the per-point matrix to SEQUENCES: a crash's debris
+    // (staging, pending record) must not corrupt the NEXT operation on the
+    // same table. Each iteration runs a random op sequence against a plain
+    // in-memory model; every op may crash at a random commit point it
+    // really passes from the current state (discovered by a clean run on a
+    // fresh root holding the same logical state) and is then retried on a
+    // fresh Warehouse (the production replay story). Fixed seed ->
+    // reproducible failures.
     val rnd = new scala.util.Random(260812L)
     val partVals = Seq("1", "2", "3")
     (1 to 12).foreach { iter =>
@@ -328,13 +428,21 @@ class RecoverySpec extends AnyFunSuite {
       def randRows(ps: Seq[String]): Seq[(Long, String, String)] =
         rnd.shuffle((1 to 20).toList).take(1 + rnd.nextInt(5))
           .map(k => (k.toLong, s"v${rnd.nextInt(1000)}", ps(rnd.nextInt(ps.size))))
-      def runOp(op: Warehouse => Unit, points: Seq[String]): Unit = {
-        val crashPoint =
-          if (rnd.nextBoolean()) Some(points(rnd.nextInt(points.size))) else None
+      def restore(w: Warehouse): Unit = {
+        if (modelT.nonEmpty)
+          w.writeSwap("t", modelT.toSeq.toDF("k", "v", "p"), partitionBy = Seq("p"))
+        if (modelU.nonEmpty)
+          w.upsertPartitioned("u", modelU.toSeq.toDF("k", "v"), Seq("k"), nBuckets = 4)
+      }
+      def runOp(op: Warehouse => Unit): Unit = {
+        val crashPoint = if (rnd.nextBoolean()) {
+          val points = discoverPoints(restore, op)._1
+          Some(points(rnd.nextInt(points.size)))
+        } else None
         crashPoint match {
           case Some(pt) =>
             crashAt(wh, pt)
-            try { op(wh); wh.failpoint = _ => () } // point may not fire (e.g. no backup step on first write)
+            try { op(wh); wh.failpoint = _ => () } // the point may not fire
             catch { case e: Exception =>
               assert(e.getMessage != null && e.getMessage.contains("injected crash"), e.toString)
               wh = new Warehouse(root, spark) // next process: recover + retry
@@ -343,34 +451,26 @@ class RecoverySpec extends AnyFunSuite {
           case None => op(wh)
         }
       }
-      val swapPoints  = Seq("swap:staged", "swap:backed-up", "swap:swapped")
-      def slicePoints(ps: Seq[String]) =
-        Seq("slice:staged", "slice:marker", "slice:cleaned") ++
-          ps.map(v => s"slice:applied:p=$v")
-      val upsertPoints = Seq("slice:staged", "slice:marker", "slice:cleaned")
 
       // op 1 always creates "t"
       val init = randRows(partVals)
-      runOp(w => w.writeSwap("t", init.toDF("k", "v", "p"), partitionBy = Seq("p")),
-        swapPoints)
+      runOp(w => w.writeSwap("t", init.toDF("k", "v", "p"), partitionBy = Seq("p")))
       modelT = init.toSet
       (1 to 4).foreach { _ =>
         rnd.nextInt(3) match {
           case 0 => // full replace
             val rows = randRows(partVals)
-            runOp(w => w.writeSwap("t", rows.toDF("k", "v", "p"),
-              partitionBy = Seq("p")), swapPoints)
+            runOp(w => w.writeSwap("t", rows.toDF("k", "v", "p"), partitionBy = Seq("p")))
             modelT = rows.toSet
           case 1 => // slice replace (batch rows confined to the periods)
             val ps = rnd.shuffle(partVals).take(1 + rnd.nextInt(partVals.size))
             val batch = randRows(ps)
-            runOp(w => w.overwritePeriods("t", batch.toDF("k", "v", "p"), "p", ps),
-              slicePoints(ps))
+            runOp(w => w.overwritePeriods("t", batch.toDF("k", "v", "p"), "p", ps))
             modelT = modelT.filterNot(r => ps.contains(r._3)) ++ batch
           case 2 => // keyed upsert into "u"
             val batch = randRows(partVals).map(r => (r._1, r._2))
             runOp(w => w.upsertPartitioned("u", batch.toDF("k", "v"),
-              Seq("k"), nBuckets = 4), upsertPoints)
+              Seq("k"), nBuckets = 4))
             modelU = modelU ++ batch
         }
       }
@@ -381,6 +481,7 @@ class RecoverySpec extends AnyFunSuite {
         val gotU = kvState(wh, "u")
         assert(gotU === modelU, s"iter $iter: table u diverged from model")
       }
+      assert(debris(root).isEmpty, s"iter $iter: debris ${debris(root)}")
     }
   }
 
@@ -437,8 +538,8 @@ class RecoverySpec extends AnyFunSuite {
     val p0 = wh.metaProbes.get()
     wh.read("t"); wh.exists("t"); wh.read("t")
     assert(wh.metaProbes.get() === p0,
-      "hot read path must not probe the slice-intent marker again")
-    // a new slice swap invalidates the cache and the marker is honored
+      "hot read path must not probe the intent record again")
+    // a new slice swap invalidates the cache and the record is honored
     wh.writeSwap("s",
       Seq((1L, "old1", "1"), (2L, "old2", "2")).toDF("k", "v", "p"),
       partitionBy = Seq("p"))
@@ -483,54 +584,54 @@ class RecoverySpec extends AnyFunSuite {
     intercept[IllegalArgumentException](wh.dropPeriodsBefore("t", "2099-01-01"))
     assert(wh.periodValues("t") === Seq("2024-01-03", "2024-01-04"))
     assert(wh.read("t").count() === 100)
-    // crash at the intent marker: a fresh Warehouse completes the deletion
-    // on recover and consumes the marker
+    // crash right after the intent record: a fresh Warehouse completes the
+    // deletion on recover and consumes the record
     val root2 = Scratch.tempDir("graft_rec_ret2").toString
     val wh2 = new Warehouse(root2, spark)
     wh2.writeSwap("t", rows.repartitionByRange(4, col("p"), col("v")),
       partitionBy = Seq("p"))
-    crashAt(wh2, "retention:marker")
+    crashAt(wh2, "commit:recorded")
     intercept[Exception](wh2.dropPeriodsBefore("t", "2024-01-04"))
     val wh3 = new Warehouse(root2, spark)
     assert(wh3.periodValues("t") === Seq("2024-01-04"))
     assert(wh3.read("t").count() === 50)
-    assert(wh3.getMeta("t__slice_intent").isEmpty, "marker must be consumed")
+    assert(wh3.getMeta("t__intent").isEmpty, "record must be consumed")
   }
 
   test("versioned writes: every crash point leaves a consistent version set; retry converges") {
     val root = Scratch.tempDir("graft_rec_ver").toString
     val wh = new Warehouse(root, spark)
-    def df(n: Int) = (1 to n).map(i => (i.toLong, s"v$n")).toDF("k", "v")
     def state(w: Warehouse) = w.versionsOf("t").map(v =>
       v -> w.readVersioned("t", v).count()).toMap
 
     assert(wh.writeVersioned("t", df(10)) === 1L)
     assert(state(wh) === Map(1L -> 10L))
 
-    // crash BEFORE the commit rename: the staged tmp is invisible — the
-    // version set is unchanged and the current read serves v1 intact
-    crashAt(wh, "versioned:staged")
+    // crash BEFORE the record: the staging is invisible — the version set
+    // is unchanged and the current read serves v1 intact
+    crashAt(wh, "commit:staged")
     intercept[Exception](wh.writeVersioned("t", df(20)))
     wh.failpoint = _ => ()
     assert(state(wh) === Map(1L -> 10L))
-    // retry on a fresh process: the leftover __tmp is swept, v2 lands
+    // retry on a fresh process: the leftover staging is replaced, v2 lands
     val wh2 = new Warehouse(root, spark)
     assert(wh2.writeVersioned("t", df(20)) === 2L)
     assert(state(wh2) === Map(1L -> 10L, 2L -> 20L))
 
-    // crash AFTER commit but BEFORE retention (keep=2 would drop v1):
-    // v3 is durable, v1 merely lingers — the next retained write drops it
-    crashAt(wh2, "versioned:committed")
+    // crash AFTER the record (keep=2 retires v1 in the same record): the
+    // next listing replays it — v3 lands and v1 goes, never one without
+    // the other
+    crashAt(wh2, "commit:recorded")
     intercept[Exception](wh2.writeVersioned("t", df(30), keep = 2))
     wh2.failpoint = _ => ()
-    assert(state(wh2) === Map(1L -> 10L, 2L -> 20L, 3L -> 30L))
+    assert(state(wh2) === Map(2L -> 20L, 3L -> 30L))
 
-    // crash MID-RETENTION after the atomic __drop rename: the half-dropped
-    // version is NOT listed (never a partial dir posing as complete)
-    crashAt(wh2, "versioned:drop-renamed")
+    // crash MID-RETENTION, between the new version's move and the old
+    // one's delete: the retired version is never listed again
+    crashAt(wh2, "commit:applied:t__v4")
     intercept[Exception](wh2.writeVersioned("t", df(40), keep = 2))
     wh2.failpoint = _ => ()
-    assert(state(wh2) === Map(2L -> 20L, 3L -> 30L, 4L -> 40L))
+    assert(state(new Warehouse(root, spark)) === Map(3L -> 30L, 4L -> 40L))
 
     // clean retained write converges: exactly the newest 2 live
     val wh3 = new Warehouse(root, spark)
@@ -539,5 +640,28 @@ class RecoverySpec extends AnyFunSuite {
     // a dropped version raises instead of serving the wrong snapshot
     val e = intercept[IllegalArgumentException](wh3.readVersioned("t", 3L))
     assert(e.getMessage.contains("no version 3"))
+    assert(debris(root).isEmpty, s"debris ${debris(root)}")
+  }
+
+  test("versions and drop match only <name>__v<digits>: a sibling t__valid survives") {
+    // t__valid shares the "t__v" prefix but is another table: neither the
+    // version listing, nor retention, nor drop("t") may touch it, its
+    // sidecars or its in-flight commit (here: crashed with the target
+    // removed, so its staging holds the only copy)
+    val root = Scratch.tempDir("graft_rec_sibling").toString
+    val wh = new Warehouse(root, spark)
+    wh.writeSwap("t__valid", Seq((7L, "old")).toDF("k", "v"), statsCols = Seq("k"))
+    wh.putMeta("t__valid", "cfg")
+    crashAt(wh, "commit:removed:t__valid")
+    intercept[Exception](wh.writeSwap("t__valid", Seq((8L, "new")).toDF("k", "v")))
+    val wh2 = new Warehouse(root, spark)
+    (1 to 3).foreach(n => wh2.writeVersioned("t", df(n), keep = 1))
+    assert(wh2.versionsOf("t") === Seq(3L))
+    wh2.drop("t")
+    assert(wh2.versionsOf("t").isEmpty)
+    val wh3 = new Warehouse(root, spark)
+    assert(kvState(wh3, "t__valid") === Map(8L -> "new"))
+    assert(wh3.getMeta("t__valid") === Some("cfg"))
+    assert(wh3.getMeta("t__valid__stats").isDefined, "sibling manifest deleted")
   }
 }

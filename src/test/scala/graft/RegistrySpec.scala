@@ -40,9 +40,9 @@ class RegistrySpec extends AnyFunSuite {
     mkRegistry(Seq((1L, "a", 10), (2L, "b2", 99), (3L, "c", 30))).run()
     val out = wh.read("inc").collect().map(r => r.getLong(0) -> (r.getString(1), r.getInt(2))).toMap
     assert(out === Map(1L -> ("A", 10), 2L -> ("B2", 99), 3L -> ("C", 30)))
-    // swap protocol left no debris
-    assert(!Files.exists(java.nio.file.Paths.get(root, "inc__tmp")))
-    assert(!Files.exists(java.nio.file.Paths.get(root, "inc__backup")))
+    // the commit left no debris: no staging, no intent record
+    assert(!Files.exists(java.nio.file.Paths.get(root, "inc__stage")))
+    assert(!Files.exists(java.nio.file.Paths.get(root, "inc__intent__meta")))
   }
 
   test("fct_gap_exceptions incremental property: identical second run adds 0 rows") {
@@ -258,25 +258,25 @@ class RegistrySpec extends AnyFunSuite {
     assert(ex.getMessage.contains("whole hour periods"))
   }
 
-  test("swap crash window: backup-only state restores on next open") {
+  test("swap crash window: staged-only state completes on next open") {
     val root = Scratch.tempDir("graft_crash").toString
     val wh = new Warehouse(root, spark)
     wh.writeSwap("t", Seq((1L, "old")).toDF("k", "v"))
-    // simulate dying between `target -> backup` and `tmp -> target`: the
-    // backup holds the only complete copy, a stale tmp holds a partial write
-    val target = java.nio.file.Paths.get(root, "t")
-    val backup = java.nio.file.Paths.get(root, "t__backup")
-    val tmp    = java.nio.file.Paths.get(root, "t__tmp")
-    Files.move(target, backup)
-    Files.createDirectories(tmp)
-    Files.writeString(tmp.resolve("part-garbage.parquet"), "incomplete")
-    // next open restores the backup and discards the dead tmp
-    assert(wh.exists("t"))
-    assert(wh.read("t").collect().map(r => r.getLong(0) -> r.getString(1)).toSeq === Seq(1L -> "old"))
-    assert(!Files.exists(backup) && !Files.exists(tmp))
+    // die inside the commit's replace step: the old target is already
+    // removed and the staging holds the only complete copy
+    wh.failpoint = p =>
+      if (p == "commit:removed:t") throw new RuntimeException(s"injected crash at $p")
+    intercept[RuntimeException](wh.writeSwap("t", Seq((2L, "new")).toDF("k", "v")))
+    val stage = java.nio.file.Paths.get(root, "t__stage")
+    assert(!Files.exists(java.nio.file.Paths.get(root, "t")) && Files.exists(stage))
+    // next open replays the record: the new data lands, nothing is left over
+    val wh2 = new Warehouse(root, spark)
+    assert(wh2.exists("t"))
+    assert(wh2.read("t").collect().map(r => r.getLong(0) -> r.getString(1)).toSeq === Seq(2L -> "new"))
+    assert(!Files.exists(stage) && wh2.getMeta("t__intent").isEmpty)
     // and a subsequent swap-write over the recovered table works
-    wh.writeSwap("t", Seq((2L, "new")).toDF("k", "v"))
-    assert(wh.read("t").collect().map(_.getLong(0)).toSeq === Seq(2L))
+    wh2.writeSwap("t", Seq((3L, "newer")).toDF("k", "v"))
+    assert(wh2.read("t").collect().map(_.getLong(0)).toSeq === Seq(3L))
   }
 
   test("runMicrobatches drives consecutive windows through the DAG") {

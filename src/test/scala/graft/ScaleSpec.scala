@@ -430,11 +430,11 @@ class ScaleSpec extends AnyFunSuite {
     val q1 = EventsStream.mergeStream(stream, wh, "m", Seq("k"), nBuckets = 4)
     q1.awaitTermination()
     assert(wh.read("m").count() === 2)
-    // the second batch dies right after the intent marker — the worst
+    // the second batch dies right after the intent record — the worst
     // window of the staged upsert commit (old bucket data deleted next)
     mem.addData((2L, "B2"), (3L, "c"))
     wh.failpoint = p =>
-      if (p == "slice:marker") throw new RuntimeException(s"injected crash at $p")
+      if (p == "commit:recorded") throw new RuntimeException(s"injected crash at $p")
     val q2 = EventsStream.mergeStream(stream, wh, "m", Seq("k"), nBuckets = 4)
     intercept[org.apache.spark.sql.streaming.StreamingQueryException](q2.awaitTermination())
     // restart: the failed batch's offsets were never committed, so
